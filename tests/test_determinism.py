@@ -75,3 +75,21 @@ def test_rerun_identical(spark, name):
     first = [tuple(r) for r in fn(spark, SF_SMALL).collect()]
     second = [tuple(r) for r in fn(spark, SF_SMALL).collect()]
     assert first == second
+
+
+# The trained ANN/PQ families are soak-only in test_rerun_identical,
+# so the default run would never rerun Lloyd or PQ training. This
+# keeps one of each in it; dropping the train-once memos between the
+# runs makes the second run retrain from scratch wherever a build is
+# memoized, so training must be as deterministic as serving.
+@pytest.mark.parametrize(
+    "name", ["sim_kmeans_converged", "sim_pq_trained_rerank_topk"]
+)
+def test_retrain_rerun_identical(spark, name):
+    import wikid_spark.queries.similarity as S
+
+    fn = all_queries()[name].fn
+    first = [tuple(r) for r in fn(spark, SF_SMALL).collect()]
+    S._drop_ann_memos()
+    second = [tuple(r) for r in fn(spark, SF_SMALL).collect()]
+    assert first == second

@@ -15,8 +15,6 @@ from __future__ import annotations
 import glob
 import os
 
-import pytest
-
 import wikid_spark.queries.similarity as S
 
 SF = "/root/testdata/sf0.001"
@@ -222,10 +220,9 @@ def test_load_ann_index_handle_is_session_cached(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# refresh_ann_index — the retrain trigger + crash-safe swap (round 13)
+# Build-time distortion baseline — the denominator of the versioned
+# refresh trigger (tests/test_versioned_index.py)
 # ---------------------------------------------------------------------------
-
-SF2 = "/root/testdata/sf0.01"
 
 
 def test_persist_records_build_stats(spark, tmp_path):
@@ -237,133 +234,6 @@ def test_persist_records_build_stats(spark, tmp_path):
     # computes — same corpus, same artifacts → identical numbers
     cur = S.measure_index_distortion(spark, SF, out)
     assert cur == st
-
-
-def test_refresh_noop_below_threshold(spark, tmp_path):
-    out, _ = _build(spark, tmp_path)
-    before = sorted(os.listdir(out))
-    rep = S.refresh_ann_index(spark, SF, out)
-    assert rep["refreshed"] is False
-    assert rep["healed"] == "clean"
-    assert abs(rep["drift_ratio"] - 1.0) < 1e-12
-    assert sorted(os.listdir(out)) == before  # untouched
-
-
-def test_refresh_triggers_on_corpus_drift(spark, tmp_path):
-    """Index trained on sf0.001 then measured against sf0.01: the old
-    centroids/codebooks fit the new corpus worse, drift > 1, and a
-    refresh past the threshold must leave an index identical to a
-    fresh build on the new corpus."""
-    out = str(tmp_path / "drift_index")
-    S.persist_ann_index(spark, SF, out)
-    probe = S.refresh_ann_index(spark, SF2, out, ratio=1e9)
-    assert probe["refreshed"] is False
-    drift = probe["drift_ratio"]
-    assert drift > 1.0, f"cross-corpus drift should exceed 1, got {drift}"
-    rep = S.refresh_ann_index(spark, SF2, out, ratio=(1.0 + drift) / 2)
-    assert rep["refreshed"] is True
-    # swap is complete: no stage/old residue, marker committed
-    assert os.path.exists(os.path.join(out, S._INDEX_OK))
-    assert not os.path.exists(out + ".stage")
-    assert not os.path.exists(out + ".old")
-    # refreshed index == deterministic fresh build on the new corpus
-    fresh = str(tmp_path / "fresh_index")
-    S.persist_ann_index(spark, SF2, fresh)
-    got = sorted(
-        tuple(r)
-        for r in S.serve_persisted_topk(spark, SF2, out, nprobe=4).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in S.serve_persisted_topk(spark, SF2, fresh, nprobe=4).collect()
-    )
-    assert got == want
-    # post-refresh the baseline is re-anchored: drift back to 1
-    rep2 = S.refresh_ann_index(spark, SF2, out)
-    assert rep2["refreshed"] is False
-    assert abs(rep2["drift_ratio"] - 1.0) < 1e-12
-
-
-def test_refresh_force_invalidates_session_handle(spark, tmp_path):
-    out = str(tmp_path / "force_index")
-    S.persist_ann_index(spark, SF, out)
-    h1 = S.load_ann_index(spark, out)  # populate the handle cache
-    rep = S.refresh_ann_index(spark, SF2, out, force=True)
-    assert rep["refreshed"] is True
-    h2 = S.load_ann_index(spark, out)
-    assert h2 is not h1  # stale pinned listing was dropped
-    # serving works end-to-end against the swapped tree
-    assert len(S.serve_persisted_topk(spark, SF2, out, nprobe=4).collect()) > 0
-
-
-def test_heal_completes_interrupted_swap(spark, tmp_path):
-    """Crash simulated between the two promote renames: live tree
-    already moved aside, committed stage not yet renamed in. The next
-    refresh call must finish the promotion before measuring."""
-    out = str(tmp_path / "crash_index")
-    S.persist_ann_index(spark, SF, out)
-    S.persist_ann_index(spark, SF2, out + ".stage")  # committed stage
-    os.rename(out, out + ".old")  # crash: rename 1 done, rename 2 not
-    rep = S.refresh_ann_index(spark, SF2, out)
-    assert rep["healed"] == "promoted"
-    assert os.path.exists(os.path.join(out, S._INDEX_OK))
-    assert not os.path.exists(out + ".stage")
-    assert not os.path.exists(out + ".old")
-    # healed tree IS the sf0.01 build → no further drift
-    assert rep["refreshed"] is False
-    assert abs(rep["drift_ratio"] - 1.0) < 1e-12
-
-
-def test_heal_discards_uncommitted_stage(spark, tmp_path):
-    """A stage without _INDEX_OK is a partial build from a crashed
-    refresher — deleted, never promoted."""
-    out = str(tmp_path / "partial_index")
-    S.persist_ann_index(spark, SF, out)
-    os.makedirs(out + ".stage/rindex")
-    with open(out + ".stage/junk", "w") as fh:
-        fh.write("partial")
-    rep = S.refresh_ann_index(spark, SF, out)
-    assert rep["healed"] == "cleaned"
-    assert not os.path.exists(out + ".stage")
-    assert rep["refreshed"] is False  # same corpus → no drift
-
-
-def test_refresh_is_lease_guarded(spark, tmp_path):
-    """Verdict r14 #4: two concurrent refreshers must not interleave
-    the rename pair — the ingest writer-lease protocol guards the
-    swap via the sibling <index>.refresh_lock dir. A second live
-    refresher raises ConcurrentWriterError; a crashed refresher's
-    expired lease is taken over and the successor heals + proceeds;
-    a COMPLETED refresh releases the lease."""
-    import time as _time
-
-    from wikid_spark.streaming import ingest
-
-    out = str(tmp_path / "lease_index")
-    S.persist_ann_index(spark, SF, out)
-    lock = out + ".refresh_lock"
-    # a live holder (fresh heartbeat) blocks a second refresher
-    ingest._acquire_or_renew_lease(lock, "refresh-a", 300.0)
-    with pytest.raises(ingest.ConcurrentWriterError):
-        S.refresh_ann_index(spark, SF, out, writer_id="refresh-b")
-    lease = os.path.join(lock, ingest.LEASE_FILE)
-    with open(lease) as fh:
-        assert fh.read().strip() == "refresh-a"  # intruder didn't steal
-
-    # holder crashed mid-swap: committed stage, live tree moved aside,
-    # lease aged past expiry -> successor takes over, heals, releases
-    S.persist_ann_index(spark, SF2, out + ".stage")
-    os.rename(out, out + ".old")
-    aged = _time.time() - 10_000
-    os.utime(lease, (aged, aged))
-    rep = S.refresh_ann_index(spark, SF2, out, writer_id="refresh-b")
-    assert rep["healed"] == "promoted"
-    assert not os.path.exists(lease), "completed refresh must release"
-
-    # a full forced rebuild under its own fresh lease works + releases
-    rep = S.refresh_ann_index(spark, SF2, out, force=True)
-    assert rep["refreshed"] is True
-    assert not os.path.exists(lease)
 
 
 def test_handle_cache_is_session_not_application(spark, tmp_path):

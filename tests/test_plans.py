@@ -563,6 +563,12 @@ def test_probe_ranks_routes_big_k_to_blas_kernel(spark):
         sample.select("vec_id", "qemb"), cents.limit(4), max_rounds=1, dims=4
     )
     assert isinstance(getattr(trained, "_wikid_k", None), int)
+    # the BLAS route sizes its slices by the query budget, which the
+    # shared sample filter keeps exactly at any corpus size
+    assert (
+        S._sample_filter(spark.range(0, 10_000), "id").count()
+        == S._QUERY_SAMPLE_MAX_ROWS
+    )
 
 
 def test_kernel_slices_derivation():

@@ -276,106 +276,6 @@ def test_streaming_soak_composed_crash_heal(spark, tmp_path):
     assert got_v[901] == ("drop", 103)
 
 
-def test_soak_forced_refresh_swaps_index_under_live_stream(spark, tmp_path):
-    """Verdict r14 #7: `refresh_ann_index` (forced) runs BETWEEN
-    micro-batches of the vector-ingest stream while every micro-batch
-    also SERVES from the persisted ANN index inside foreachBatch —
-    handle invalidation under live traffic, not in isolation.
-
-    Pinned: pre-swap in-stream serves equal a never-refreshed twin
-    build of the old corpus; post-swap serves equal a fresh build of
-    the new corpus (same checkpoint, stream uninterrupted); the
-    session handle is re-listed after the swap; and the stream's own
-    dedup verdicts are byte-equal to its direct-writer batch twin."""
-    import wikid_spark.queries.similarity as S
-
-    SF = "/root/testdata/sf0.001"
-    SF2 = "/root/testdata/sf0.01"
-
-    # live index + never-refreshed reference twins
-    idx = str(tmp_path / "ann_live")
-    S.persist_ann_index(spark, SF, idx)
-    twin_old = str(tmp_path / "ann_twin_old")
-    S.persist_ann_index(spark, SF, twin_old)
-    twin_new = str(tmp_path / "ann_twin_new")
-    S.persist_ann_index(spark, SF2, twin_new)
-    want_old = sorted(
-        map(tuple, S.serve_persisted_topk(spark, SF, twin_old, nprobe=4).collect())
-    )
-    want_new = sorted(
-        map(tuple, S.serve_persisted_topk(spark, SF2, twin_new, nprobe=4).collect())
-    )
-    assert want_old != want_new  # the swap is observable
-
-    h1 = S.load_ann_index(spark, idx)  # populate the handle cache
-
-    # vector-ingest stream whose writer ALSO serves from the live index
-    vidx = str(tmp_path / "vidx")
-    corpus = spark.createDataFrame(_corpus_rows(), _SCHEMA.split(", ts")[0])
-    vi.persist_vector_index(
-        corpus.select(F.col("doc_id").alias("vec_id"), "embedding"), vidx
-    )
-    vec_out = str(tmp_path / "vec_verdicts")
-    vec_w = vi.vector_verdict_batch_writer(spark, vidx, vec_out)
-    serve_sf = {"dir": SF}
-    in_stream_serves: list[tuple[int, list]] = []
-
-    def writer(batch, batch_id):
-        vec_w(
-            batch.select(F.col("doc_id").alias("vec_id"), "embedding"),
-            batch_id,
-        )
-        got = sorted(
-            map(
-                tuple,
-                S.serve_persisted_topk(
-                    spark, serve_sf["dir"], idx, nprobe=4
-                ).collect(),
-            )
-        )
-        in_stream_serves.append((batch_id, got))
-
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    ckpt = str(tmp_path / "ckpt")
-    _write_files(src, _INCOMING[:3], 0)
-    _drain(spark, src, ckpt, writer)
-    assert [b for b, _ in in_stream_serves] == [0, 1, 2]
-    assert all(got == want_old for _, got in in_stream_serves)
-
-    # forced refresh between micro-batches: retrain on the NEW corpus
-    rep = S.refresh_ann_index(spark, SF2, idx, force=True)
-    assert rep["refreshed"] is True
-    serve_sf["dir"] = SF2
-
-    # same checkpoint, stream resumes; serves now read the new artifacts
-    _write_files(src, _INCOMING[3:], 3)
-    _drain(spark, src, ckpt, writer)
-    assert [b for b, _ in in_stream_serves] == [0, 1, 2, 3, 4, 5]
-    assert all(got == want_new for _, got in in_stream_serves[3:])
-
-    # the pinned session handle was invalidated by the swap
-    h2 = S.load_ann_index(spark, idx)
-    assert h2 is not h1
-
-    # the stream's own verdicts are untouched by the refresh: equal to
-    # the direct-writer batch twin
-    vidx_t = str(tmp_path / "vidx_twin")
-    vi.persist_vector_index(
-        corpus.select(F.col("doc_id").alias("vec_id"), "embedding"), vidx_t
-    )
-    vec_out_t = str(tmp_path / "vec_verdicts_twin")
-    twin_w = vi.vector_verdict_batch_writer(spark, vidx_t, vec_out_t)
-    for bid, spec in enumerate(_INCOMING):
-        twin_w(
-            spark.createDataFrame([spec], _SCHEMA).select(
-                F.col("doc_id").alias("vec_id"), "embedding"
-            ),
-            bid,
-        )
-    assert _log(spark, vec_out) == _log(spark, vec_out_t)
-
-
 def test_soak_hybrid_retrieval_under_versioned_refresh(spark, tmp_path):
     """Verdict r14 #7: the round-15 retrieval serving stack composed
     under live ingest — every micro-batch of the vector-ingest stream
@@ -388,10 +288,12 @@ def test_soak_hybrid_retrieval_under_versioned_refresh(spark, tmp_path):
     post-swap serves equal the new-corpus twin (same checkpoint,
     stream uninterrupted); the CURRENT pointer flips; a version dir
     resolved BEFORE the swap keeps serving the old results after it
-    (the pointer layout's hold-open guarantee — the rename-pair
-    refresh cannot make this promise); gc keeps the superseded
-    version; and the hybrid results track the corpus the dense side
-    serves while remaining equal to their per-corpus batch twins."""
+    (the pointer layout's hold-open guarantee: a version dir is never
+    mutated, so no handle needs invalidating); gc keeps the superseded
+    version; the hybrid results track the corpus the dense side
+    serves while remaining equal to their per-corpus batch twins; and
+    the stream's own dedup verdicts are byte-equal to its
+    direct-writer batch twin."""
     import wikid_spark.queries.similarity as S
     from wikid_spark.queries.fts import fts_hybrid_rrf_persisted
 
@@ -470,6 +372,23 @@ def test_soak_hybrid_retrieval_under_versioned_refresh(spark, tmp_path):
     still_old = sorted(map(tuple, S.serve_persisted_topk(
         spark, SF, pre_swap_dir, nprobe=4).collect()))
     assert still_old == want_old
+
+    # the stream's own verdicts are untouched by the refresh: equal to
+    # the direct-writer batch twin
+    vidx_t = str(tmp_path / "vidx_twin")
+    vi.persist_vector_index(
+        corpus.select(F.col("doc_id").alias("vec_id"), "embedding"), vidx_t
+    )
+    vec_out_t = str(tmp_path / "vec_verdicts_twin")
+    twin_w = vi.vector_verdict_batch_writer(spark, vidx_t, vec_out_t)
+    for bid, spec in enumerate(_INCOMING):
+        twin_w(
+            spark.createDataFrame([spec], _SCHEMA).select(
+                F.col("doc_id").alias("vec_id"), "embedding"
+            ),
+            bid,
+        )
+    assert _log(spark, vec_out) == _log(spark, vec_out_t)
 
 
 def test_soak_fts_index_follows_dedup_keeps(spark, tmp_path):

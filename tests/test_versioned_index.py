@@ -1,11 +1,12 @@
 """Versioned / pointer persisted-index layout (round 14).
 
-The rename-pair refresh (`refresh_ann_index`) is atomic on HDFS/local
-but rename-is-copy on object stores — the documented residual caveat
-of rounds 12-13. This suite pins the object-store path: immutable
-content-keyed version dirs + a single-object CURRENT pointer, where
-promotion is one PUT, crashed publishers leave only safe states, old
-versions survive for in-flight serves, and GC keeps current+previous.
+The one promotion protocol for persisted indexes, safe on object
+stores where a directory rename is a copy: immutable content-keyed
+version dirs + a single-object CURRENT pointer, where promotion is one
+PUT, the distortion trigger measures drift without touching the root,
+crashed publishers leave only safe states, old versions survive for
+in-flight serves, GC keeps current+previous, and refreshes run under
+the single-writer lease.
 """
 
 from __future__ import annotations
@@ -48,7 +49,21 @@ def test_refresh_versioned_flips_pointer_and_keeps_previous(spark, tmp_path):
     S.publish_index_version(spark, SF, root)
     old_dir = S.resolve_current_index(spark, root)
     old_handle = S.load_ann_index(spark, old_dir)
-    rep = S.refresh_ann_index_versioned(spark, SF2, root, force=True)
+    # the old artifacts fit the new corpus worse: a probe with an
+    # unreachable threshold measures drift > 1 and touches nothing
+    before = (S.read_current_version(spark, root), sorted(os.listdir(root)))
+    probe = S.refresh_ann_index_versioned(spark, SF2, root, ratio=1e9)
+    drift = probe["drift_ratio"]
+    assert drift > 1.0, f"cross-corpus drift should exceed 1, got {drift}"
+    assert probe["refreshed"] is False
+    assert (
+        S.read_current_version(spark, root),
+        sorted(os.listdir(root)),
+    ) == before
+    # a threshold below the measured drift promotes
+    rep = S.refresh_ann_index_versioned(
+        spark, SF2, root, ratio=(1.0 + drift) / 2
+    )
     assert rep["refreshed"] is True
     assert rep["previous"] != rep["version"]
     new_dir = S.resolve_current_index(spark, root)
@@ -127,12 +142,18 @@ def test_refresh_versioned_is_lease_guarded(spark, tmp_path):
     ingest._acquire_or_renew_lease(lock, "refresh-a", 300.0)
     with pytest.raises(ingest.ConcurrentWriterError):
         S.refresh_ann_index_versioned(spark, SF, root, writer_id="refresh-b")
-    # completed refreshes release: age the stale lease, take over
     lease = os.path.join(lock, ingest.LEASE_FILE)
+    with open(lease) as fh:
+        assert fh.read().strip() == "refresh-a"  # intruder didn't steal
+    # completed refreshes release: age the stale lease, take over
     aged = time.time() - 10_000
     os.utime(lease, (aged, aged))
     rep = S.refresh_ann_index_versioned(spark, SF, root, writer_id="refresh-b")
     assert rep["refreshed"] is False  # same corpus, no drift
+    assert not os.path.exists(lease)
+    # a forced rebuild under its own fresh lease also releases
+    rep = S.refresh_ann_index_versioned(spark, SF2, root, force=True)
+    assert rep["refreshed"] is True
     assert not os.path.exists(lease)
 
 

@@ -52,13 +52,6 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     return fs.exists(p)
 
 
-def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
-    fs, s = _fs_and_path(spark, src)
-    _, d = _fs_and_path(spark, dst)
-    if not fs.rename(s, d):
-        raise OSError(f"rename failed: {src!r} -> {dst!r}")
-
-
 def _fs_delete(spark: SparkSession, path: str) -> None:
     fs, p = _fs_and_path(spark, path)
     fs.delete(p, True)

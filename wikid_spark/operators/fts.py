@@ -682,10 +682,8 @@ def publish_fts_index_version(
             _table(spark, sf_dir, "documents"), "doc_id", "text", vdir
         ),
         _FTS_OK,
-        {
-            "fingerprint": corpus_fingerprint(sf_dir, "documents"),
-            "layout": _FTS_LAYOUT_GEN,
-        },
+        corpus_fingerprint(sf_dir, "documents"),
+        _FTS_LAYOUT_GEN,
         writer_id=writer_id,
         lease_seconds=lease_seconds,
     )
@@ -719,36 +717,28 @@ def maybe_refresh_fts_index(
     plus ``trigger`` ∈ {bootstrap, current, layout_migration,
     content}."""
     from wikid_spark.catalog import corpus_fingerprint
-    from wikid_spark.fsutil import _fs_exists
     from wikid_spark.versioned import (
+        committed_current,
         gc_versions,
-        read_current_version,
-        read_provenance,
+        needs_layout_migration,
     )
 
     kw = dict(writer_id=writer_id, lease_seconds=lease_seconds)
-    current_vid = read_current_version(spark, root)
-    vid_now = fts_index_version_id(sf_dir)
-    if current_vid is None or not _fs_exists(
-        spark, f"{root}/versions/{current_vid}/{_FTS_OK}"
-    ):
+    current_vid = committed_current(spark, root, _FTS_OK)
+    if current_vid is None:
         rep = publish_fts_index_version(spark, sf_dir, root, **kw)
         rep["trigger"] = "bootstrap"
-    elif vid_now == current_vid:
+    elif fts_index_version_id(sf_dir) == current_vid:
         return {"refreshed": False, "version": current_vid, "trigger": "current"}
     else:
-        prov = read_provenance(spark, f"{root}/versions/{current_vid}")
-        rep = publish_fts_index_version(spark, sf_dir, root, **kw)
-        rep["trigger"] = (
-            "layout_migration"
-            if (
-                prov is None
-                or prov.get("layout") != _FTS_LAYOUT_GEN
-                or prov.get("fingerprint")
-                == corpus_fingerprint(sf_dir, "documents")
-            )
-            else "content"
+        migrate = needs_layout_migration(
+            spark,
+            f"{root}/versions/{current_vid}",
+            corpus_fingerprint(sf_dir, "documents"),
+            _FTS_LAYOUT_GEN,
         )
+        rep = publish_fts_index_version(spark, sf_dir, root, **kw)
+        rep["trigger"] = "layout_migration" if migrate else "content"
     rep["refreshed"] = True
     rep["dropped"] = gc_versions(spark, root, keep, _FTS_OK)
     return rep

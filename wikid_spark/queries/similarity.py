@@ -815,7 +815,15 @@ def sim_ivf_ann_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TRAINED_DERIVED_ROUNDS = 3
-_QUERY_SAMPLE_SQL = "vec_id % 50 = 0 AND vec_id < 2000"
+# The fixed query budget (module header): every _QUERY_SAMPLE_STRIDE-th
+# vec_id below _QUERY_SAMPLE_BOUND, so at most _QUERY_SAMPLE_MAX_ROWS
+# queries at any corpus size.
+_QUERY_SAMPLE_STRIDE = 50
+_QUERY_SAMPLE_BOUND = 2000
+_QUERY_SAMPLE_MAX_ROWS = _QUERY_SAMPLE_BOUND // _QUERY_SAMPLE_STRIDE
+_QUERY_SAMPLE_SQL = (
+    f"vec_id % {_QUERY_SAMPLE_STRIDE} = 0 AND vec_id < {_QUERY_SAMPLE_BOUND}"
+)
 
 
 def _lloyd_trained_fragment(rounds: int, prefix: str = "") -> str:
@@ -1847,8 +1855,10 @@ def _probe_ranks(
         k = getattr(cents, "_wikid_k", None)
     if k is not None and k > _PROBE_JVM_MAX_K:
         # the probe sample is bounded by the fixed query budget
-        # (`_QUERY_SAMPLE_SQL`, ≤ 40 rows) — one kernel slice, not 64
-        return _assign_blas(sample, cents, top_m=top_m, n_rows=40)
+        # (`_QUERY_SAMPLE_SQL`) — one kernel slice, not 64
+        return _assign_blas(
+            sample, cents, top_m=top_m, n_rows=_QUERY_SAMPLE_MAX_ROWS
+        )
     return _assign_jvm(sample, cents, top_m=top_m)
 
 
@@ -2090,8 +2100,12 @@ def sim_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sample_filter(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """The shared fixed query budget ({_QUERY_SAMPLE_SQL})."""
-    return df.filter((F.col(id_col) % 50 == 0) & (F.col(id_col) < 2000))
+    """The shared fixed query budget (`_QUERY_SAMPLE_SQL` on
+    ``id_col``)."""
+    return df.filter(
+        (F.col(id_col) % _QUERY_SAMPLE_STRIDE == 0)
+        & (F.col(id_col) < _QUERY_SAMPLE_BOUND)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2182,8 +2196,8 @@ def _ann_memo_group(spark: SparkSession, sf_dir: str) -> dict:
 
 
 def _drop_ann_memos() -> None:
-    """Release every memoized build (tests / ops seam — the in-memory
-    analogue of `_drop_index_handles`)."""
+    """Release every memoized build (tests / ops seam): the next
+    trained query retrains from scratch."""
     for grp in _ANN_MEMO.values():
         _ann_memo_release(grp)
     _ANN_MEMO.clear()
@@ -4805,17 +4819,9 @@ _INDEX_OK = "_INDEX_OK"
 
 # Hadoop-FS helpers moved to fsutil (round 16) so the generic
 # versioned-root engine shares them without a queries-package import
-# cycle; re-imported here because ~50 call sites (and two modules
-# importing from this namespace) predate the move.
-from wikid_spark.fsutil import (  # noqa: E402
-    _fs_and_path,
-    _fs_delete,
-    _fs_exists,
-    _fs_list_names,
-    _fs_read_text,
-    _fs_rename,
-    _fs_write_text,
-)
+# cycle; re-imported here for the call sites below and the modules
+# importing them from this namespace.
+from wikid_spark.fsutil import _fs_read_text, _fs_write_text  # noqa: E402
 
 
 def persist_ann_index(
@@ -4869,8 +4875,8 @@ def persist_ann_index(
     cb.write.mode("overwrite").parquet(f"{out_dir}/codebooks")
     # with_dist rides the SAME encode pass (one cogrouped kernel run,
     # checkpointed) so the build-time distortion baseline — the
-    # refresh_ann_index retrain trigger's denominator — costs an
-    # aggregate over the checkpoint, not a second corpus encode.
+    # refresh_ann_index_versioned retrain trigger's denominator — costs
+    # an aggregate over the checkpoint, not a second corpus encode.
     encoded = (
         _pq_encode(rv, cb, with_dist=True, spec=spec, n_rows=n)
         .select("vec_id", "cent_id", "pqdist", *spec.cols)
@@ -5166,15 +5172,14 @@ def _ensure_persisted_index(
 
 
 # ---------------------------------------------------------------------------
-# Persisted-index lifecycle: the retrain/compact trigger that CONSUMES
+# Persisted-index lifecycle: the retrain trigger that CONSUMES
 # sim_pq_index_stats' nightly metric. A persisted index trained on
 # corpus C0 degrades as the corpus evolves — encoding today's corpus
 # with yesterday's centroids+codebooks raises mean quantization
 # distortion above the build-time baseline recorded in stats.json.
-# `refresh_ann_index` measures that drift and, past the threshold,
-# rebuilds into a stage dir and atomically swaps (the streaming
-# ingest's stage-and-promote discipline applied to a whole index
-# tree), healing any interrupted predecessor swap on entry.
+# `refresh_ann_index_versioned` measures that drift and, past the
+# threshold, publishes a rebuilt version behind the pointer layout
+# below.
 # ---------------------------------------------------------------------------
 
 # Drift threshold: mean distortion of the CURRENT corpus under the
@@ -5183,13 +5188,6 @@ def _ensure_persisted_index(
 # recall curves (SCALE.md round 9/10 distortion-vs-recall tables) have
 # visibly sagged; production tunes this against its recall SLA.
 REFRESH_DISTORTION_RATIO = 1.25
-
-
-def _drop_index_handles(index_dir: str) -> None:
-    """Invalidate session-cached hold-open handles for index_dir: their
-    DataFrames pin the pre-swap file listing, which the swap deletes."""
-    for key in [k for k in _INDEX_HANDLE_CACHE if k[1] == index_dir]:
-        _INDEX_HANDLE_CACHE.pop(key, None)
 
 
 def load_ann_index_stats(spark: SparkSession, index_dir: str) -> dict:
@@ -5229,155 +5227,13 @@ def measure_index_distortion(
     return {"n_vectors": row["n"], "mean_distortion": float(row["m"] or 0.0)}
 
 
-def heal_index_swap(spark: SparkSession, index_dir: str) -> str:
-    """Complete or clean an interrupted `refresh_ann_index` swap.
-    Deterministic from on-disk state alone (the `_INDEX_OK` marker is
-    the commit record at every level):
-
-      - stage committed → finish the promotion (a crash anywhere
-        between stage commit and old-tree deletion re-runs as exactly
-        the remaining steps);
-      - stage present but uncommitted → partial build, delete it;
-      - leftover ``.old`` tree next to a committed index → delete it.
-
-    Returns 'promoted', 'cleaned', or 'clean'. Single-refresher
-    assumption as documented on refresh_ann_index."""
-    stage, old = index_dir + ".stage", index_dir + ".old"
-    if _fs_exists(spark, f"{stage}/{_INDEX_OK}"):
-        if _fs_exists(spark, f"{index_dir}/{_INDEX_OK}"):
-            _fs_delete(spark, old)
-            _fs_rename(spark, index_dir, old)
-        elif _fs_exists(spark, index_dir):
-            # half-written or mid-swap-deleted live tree: not committed,
-            # the committed stage supersedes it
-            _fs_delete(spark, index_dir)
-        _drop_index_handles(index_dir)
-        _fs_rename(spark, stage, index_dir)
-        _fs_delete(spark, old)
-        return "promoted"
-    cleaned = False
-    if _fs_exists(spark, stage):
-        _fs_delete(spark, stage)
-        cleaned = True
-    if _fs_exists(spark, old) and _fs_exists(spark, f"{index_dir}/{_INDEX_OK}"):
-        _fs_delete(spark, old)
-        cleaned = True
-    return "cleaned" if cleaned else "clean"
-
-
-def refresh_ann_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    ratio: float = REFRESH_DISTORTION_RATIO,
-    force: bool = False,
-    writer_id: str | None = None,
-    lease_seconds: float | None = None,
-) -> dict:
-    """Retrain/compact trigger for a `persist_ann_index` build — the
-    consumer of the distortion metric sim_pq_index_stats defines.
-    Measures the current corpus's mean distortion under the persisted
-    artifacts; past ``ratio`` x the build-time baseline (or ``force``),
-    rebuilds from scratch — fresh Lloyd centroids, fresh residual
-    codebooks, and a corpus-size-rederived spec, so a corpus that grew
-    past PQ_WIDTH_THRESHOLD widens 8->16-byte codes on the same
-    trigger — into ``<index_dir>.stage``, then promotes with two
-    renames (live -> ``.old``, stage -> live) and deletes the old tree.
-
-    Crash-safe AND lease-guarded (round 14): the ingest single-writer
-    protocol (streaming/ingest.py ``_WRITER_LEASE``) runs against a
-    sibling lock dir ``<index_dir>.refresh_lock`` — inside the live
-    tree the promotion renames would move the lock out from under its
-    holder. A second live refresher raises ``ConcurrentWriterError``
-    instead of interleaving the rename pair; a crashed refresher's
-    lease expires after ``lease_seconds`` (ingest default) and a
-    successor takes over, where `heal_index_swap` on entry replays any
-    interrupted swap from its on-disk state (the staged build commits
-    via its own ``_INDEX_OK`` before any rename touches the live
-    tree). A COMPLETED refresh releases the lease on exit so the next
-    nightly run proceeds immediately. The lease is heartbeat-renewed
-    after the stage build — the long step — so a slow build under a
-    short lease doesn't silently lose ownership before promotion; the
-    same best-effort envelope as the ingest lease applies (true mutual
-    exclusion on object stores needs conditional-put — swap
-    `_acquire_or_renew_lease` there). Renames go through the Hadoop
-    FileSystem API (atomic on HDFS and local fs; on object stores
-    rename is copy — production there keeps versioned index dirs
-    behind a pointer file instead, which `_ensure_persisted_index`'s
-    content-keyed layout already models).
-
-    Returns a report: {refreshed, healed, build_mean_distortion,
-    current_mean_distortion, drift_ratio, threshold, n_vectors, spec}.
-    """
-    import uuid
-
-    from wikid_spark.streaming.ingest import (
-        DEFAULT_LEASE_SECONDS,
-        _acquire_or_renew_lease,
-        _assert_lease_held,
-        _lease_heartbeat,
-        _release_lease,
-    )
-
-    writer_id = writer_id or f"refresh-{uuid.uuid4().hex[:12]}"
-    lease_s = DEFAULT_LEASE_SECONDS if lease_seconds is None else lease_seconds
-    lock_dir = index_dir + ".refresh_lock"
-    _acquire_or_renew_lease(lock_dir, writer_id, lease_s)
-    try:
-        healed = heal_index_swap(spark, index_dir)
-        built = load_ann_index_stats(spark, index_dir)
-        current = measure_index_distortion(spark, sf_dir, index_dir)
-        base, cur = built["mean_distortion"], current["mean_distortion"]
-        if base > 0:
-            drift = cur / base
-        else:
-            drift = 1.0 if cur == 0 else float("inf")
-        report = {
-            "refreshed": False,
-            "healed": healed,
-            "build_mean_distortion": base,
-            "current_mean_distortion": cur,
-            "drift_ratio": drift,
-            "threshold": ratio,
-            "n_vectors": current["n_vectors"],
-            "spec": load_ann_index_spec(index_dir, spark)._asdict(),
-        }
-        if not force and drift <= ratio:
-            return report
-        stage = index_dir + ".stage"
-        _fs_delete(spark, stage)
-        # The stage path is SHARED between refreshers, so losing the
-        # lease mid-build would let a successor interleave writes into
-        # it — heartbeat the build alive (round-15 review), then prove
-        # we still own the target before the promotion renames. The
-        # heartbeat now raises on observed loss AND cancels the build's
-        # job group (ADVICE r15): a holder whose lease changed hands
-        # stops writing into the shared stage dir mid-flight instead of
-        # merely failing the final promotion assert.
-        with _build_job_group(spark, writer_id) as cancel:
-            with _lease_heartbeat(lock_dir, writer_id, lease_s, on_lost=cancel):
-                spec = persist_ann_index(spark, sf_dir, stage)  # spec rederived
-        _acquire_or_renew_lease(lock_dir, writer_id, lease_s)
-        _assert_lease_held(lock_dir, writer_id)
-        _drop_index_handles(index_dir)
-        old = index_dir + ".old"
-        _fs_rename(spark, index_dir, old)
-        _fs_rename(spark, stage, index_dir)
-        _fs_delete(spark, old)
-        report.update(refreshed=True, spec=spec._asdict())
-        return report
-    finally:
-        _release_lease(lock_dir, writer_id)
-
-
 # ---------------------------------------------------------------------------
-# Versioned / pointer index layout (round 14): the OBJECT-STORE
-# promotion path. `refresh_ann_index`'s rename-pair promotion is
-# atomic on HDFS/local rename but a COPY on S3/GCS/ABFS — a reader can
-# observe a half-copied live tree. This layout never renames a
-# directory: every build lands in an immutable content-keyed
-# `<root>/versions/<vid>/` (committed by its own _INDEX_OK, the
-# persist_ann_index contract), and promotion is ONE single-object
+# Versioned / pointer index layout (round 14): the ONE promotion path.
+# It never renames a directory — a rename is a COPY on S3/GCS/ABFS,
+# where a reader could observe a half-copied live tree. Every build
+# lands in an immutable content-keyed `<root>/versions/<vid>/`
+# (committed by its own _INDEX_OK, the persist_ann_index contract),
+# and promotion is ONE single-object
 # overwrite of the `<root>/CURRENT` pointer — a whole-object PUT,
 # atomic on every major object store. Crash anywhere leaves either
 # the old pointer (safe: old version dirs are never mutated) or a
@@ -5392,8 +5248,6 @@ def refresh_ann_index(
 # against the superseded version keep working until gc_index_versions
 # (keep >= 2 gives one full swap of grace).
 # ---------------------------------------------------------------------------
-
-_CURRENT_PTR = "CURRENT"
 
 
 def index_version_id(sf_dir: str, spec: PQSpec) -> str:
@@ -5437,11 +5291,6 @@ def resolve_current_index(spark: SparkSession, root: str) -> str:
     return resolve_current(spark, root, _INDEX_OK)
 
 
-# Job-group cancel scope moved to the generic engine (round 16); the
-# rename-pair refresh above still uses it under this name.
-from wikid_spark.versioned import build_job_group as _build_job_group  # noqa: E402
-
-
 def publish_index_version(
     spark: SparkSession,
     sf_dir: str,
@@ -5471,10 +5320,8 @@ def publish_index_version(
         index_version_id(sf_dir, spec),
         lambda vdir: persist_ann_index(spark, sf_dir, vdir, spec),
         _INDEX_OK,
-        {
-            "fingerprint": corpus_fingerprint(sf_dir, "embeddings"),
-            "layout": _INDEX_LAYOUT_GEN,
-        },
+        corpus_fingerprint(sf_dir, "embeddings"),
+        _INDEX_LAYOUT_GEN,
         writer_id=writer_id,
         lease_seconds=lease_seconds,
     )
@@ -5500,16 +5347,23 @@ def refresh_ann_index_versioned(
     lease_seconds: float | None = None,
     keep: int = 2,
 ) -> dict:
-    """`refresh_ann_index`'s trigger semantics on the pointer layout:
-    measure the corpus's distortion under the CURRENT version; past
-    ``ratio`` x its build-time baseline (or ``force``), publish the
-    version for the corpus's current bytes and GC old generations.
-    Same single-writer lease as the rename-pair refresh (lock dir
-    ``<root>/.refresh_lock``); the promotion itself is the atomic
-    pointer PUT, so even a lease near-miss cannot produce a
+    """Retrain trigger for a versioned ANN root — the consumer of the
+    distortion metric sim_pq_index_stats defines. Measures the
+    corpus's distortion under the CURRENT version's persisted
+    artifacts; past ``ratio`` x its build-time baseline (or
+    ``force``), publishes the version for the corpus's current bytes
+    — fresh Lloyd centroids, fresh residual codebooks and a
+    corpus-size-rederived spec, so a corpus that grew past
+    PQ_WIDTH_THRESHOLD widens 8->16-byte codes on the same trigger —
+    and GCs old generations. Runs under the ingest single-writer lease
+    (streaming/ingest.py, lock dir ``<root>/.refresh_lock``): a second
+    live refresher raises ``ConcurrentWriterError``, a crashed one's
+    lease expires after ``lease_seconds`` and a successor takes over,
+    and a completed refresh releases it. The promotion itself is the
+    atomic pointer PUT, so even a lease near-miss cannot produce a
     half-promoted tree — the loser merely re-points to the same
-    content-keyed version. Bootstraps an empty root (no CURRENT) by
-    publishing unconditionally."""
+    content-keyed version. Bootstraps an empty root (no committed
+    CURRENT) by publishing unconditionally."""
     import uuid
 
     from wikid_spark.streaming.ingest import (
@@ -5517,16 +5371,15 @@ def refresh_ann_index_versioned(
         _acquire_or_renew_lease,
         _release_lease,
     )
+    from wikid_spark.versioned import committed_current
 
     writer_id = writer_id or f"refresh-{uuid.uuid4().hex[:12]}"
     lease_s = DEFAULT_LEASE_SECONDS if lease_seconds is None else lease_seconds
     lock_dir = root + "/.refresh_lock"
     _acquire_or_renew_lease(lock_dir, writer_id, lease_s)
     try:
-        current_vid = read_current_version(spark, root)
-        if current_vid is None or not _fs_exists(
-            spark, f"{root}/versions/{current_vid}/{_INDEX_OK}"
-        ):
+        current_vid = committed_current(spark, root, _INDEX_OK)
+        if current_vid is None:
             pub = publish_index_version(
                 spark, sf_dir, root, writer_id=writer_id, lease_seconds=lease_s
             )
@@ -5617,11 +5470,11 @@ def maybe_refresh_index(
     distortion rung forever. Returns the refresh report plus
     ``trigger`` ∈ {bootstrap, current, k_boundary, code_width,
     layout_migration, distortion, none}."""
+    from wikid_spark.versioned import committed_current
+
     kw = dict(writer_id=writer_id, lease_seconds=lease_seconds, keep=keep)
-    current_vid = read_current_version(spark, root)
-    if current_vid is None or not _fs_exists(
-        spark, f"{root}/versions/{current_vid}/{_INDEX_OK}"
-    ):
+    current_vid = committed_current(spark, root, _INDEX_OK)
+    if current_vid is None:
         rep = refresh_ann_index_versioned(spark, sf_dir, root, force=True, **kw)
         rep["trigger"] = "bootstrap"
         return rep
@@ -5654,13 +5507,10 @@ def maybe_refresh_index(
     # components current readers expect AND pay a full corpus encode
     # per call doing it (round-16 review).
     from wikid_spark.catalog import corpus_fingerprint
-    from wikid_spark.versioned import read_provenance
+    from wikid_spark.versioned import needs_layout_migration
 
-    prov = read_provenance(spark, cdir)
-    if (
-        prov is None
-        or prov.get("layout") != _INDEX_LAYOUT_GEN
-        or prov.get("fingerprint") == corpus_fingerprint(sf_dir, "embeddings")
+    if needs_layout_migration(
+        spark, cdir, corpus_fingerprint(sf_dir, "embeddings"), _INDEX_LAYOUT_GEN
     ):
         rep = refresh_ann_index_versioned(spark, sf_dir, root, force=True, **kw)
         rep["trigger"] = "layout_migration"

@@ -14,8 +14,8 @@ Layout under ``root``::
     versions/<vid>/...   immutable artifacts (committed by <ok_marker>,
                          provenance in version.json)
     CURRENT              the live version id — promotion is ONE object
-                         PUT, atomic on object stores where a
-                         rename-pair refresh is copy-then-delete
+                         PUT, atomic on object stores, where a
+                         directory rename is copy-then-delete
 
 Guarantees (pinned by tests/test_versioned_index.py through the ANN
 instance, shared by construction with every other instance):
@@ -33,9 +33,10 @@ instance, shared by construction with every other instance):
   committed versions plus CURRENT, so an in-flight serve that resolved
   the pointer before a flip keeps reading a live tree.
 * **Provenance**: each version records the content fingerprint and
-  layout generation it was built from (``version.json``), letting
-  refresh ladders distinguish a layout-only pointer mismatch (forced
-  migration) from real content drift.
+  layout generation it was built from (``version.json``, written and
+  read only here); ``needs_layout_migration`` lets every refresh
+  ladder distinguish a layout-only pointer mismatch (forced
+  migration) from real content drift by one rule.
 """
 
 from __future__ import annotations
@@ -87,6 +88,20 @@ def read_current_version(spark: SparkSession, root: str) -> str | None:
     return vid or None
 
 
+def committed_current(
+    spark: SparkSession, root: str, ok_marker: str
+) -> str | None:
+    """The version id CURRENT names if that version is committed
+    (``ok_marker`` present), else None — the one test both refresh
+    ladders and `resolve_current` use for "is there a live index"."""
+    vid = read_current_version(spark, root)
+    if vid is None or not _fs_exists(
+        spark, f"{root}/versions/{vid}/{ok_marker}"
+    ):
+        return None
+    return vid
+
+
 def resolve_current(spark: SparkSession, root: str, ok_marker: str) -> str:
     """The live version dir the pointer names. Retries briefly: on
     filesystems where the overwrite is create+truncate (local/HDFS)
@@ -95,11 +110,9 @@ def resolve_current(spark: SparkSession, root: str, ok_marker: str) -> str:
     import time as _time
 
     for _ in range(3):
-        vid = read_current_version(spark, root)
+        vid = committed_current(spark, root, ok_marker)
         if vid:
-            vdir = f"{root}/versions/{vid}"
-            if _fs_exists(spark, f"{vdir}/{ok_marker}"):
-                return vdir
+            return f"{root}/versions/{vid}"
         _time.sleep(0.05)
     raise FileNotFoundError(
         f"no committed CURRENT index under {root!r} — publish one with "
@@ -107,12 +120,21 @@ def resolve_current(spark: SparkSession, root: str, ok_marker: str) -> str:
     )
 
 
-def read_provenance(spark: SparkSession, vdir: str) -> dict | None:
+def needs_layout_migration(
+    spark: SparkSession, vdir: str, fingerprint: str, layout: str
+) -> bool:
+    """Whether the version at ``vdir`` must be force-republished
+    because OLDER code published it: no provenance at all, an older
+    layout generation, or the very corpus bytes (``fingerprint``) the
+    caller would publish now under a changed vid format. A pointer
+    mismatch that fails all three is real content change, which the
+    caller's own trigger decides."""
     import json
 
     if not _fs_exists(spark, f"{vdir}/{PROVENANCE}"):
-        return None
-    return json.loads(_fs_read_text(spark, f"{vdir}/{PROVENANCE}"))
+        return True
+    prov = json.loads(_fs_read_text(spark, f"{vdir}/{PROVENANCE}"))
+    return prov.get("layout") != layout or prov.get("fingerprint") == fingerprint
 
 
 def publish_version(
@@ -121,15 +143,18 @@ def publish_version(
     vid: str,
     build_fn,
     ok_marker: str,
-    provenance: dict,
+    fingerprint: str,
+    layout: str,
     writer_id: str | None = None,
     lease_seconds: float | None = None,
 ) -> dict:
     """Build (if absent) version ``vid`` with ``build_fn(vdir)`` and
     flip the pointer to it. Idempotent at every step — see the module
-    docstring's publish guarantee. ``provenance`` is written (healed if
-    missing) AFTER the commit-marker check so a crash between the
-    marker and the provenance write converges on the next publish.
+    docstring's publish guarantee. The provenance — the corpus content
+    ``fingerprint`` and ``layout`` generation the version is built
+    from — is written (healed if missing) AFTER the commit-marker
+    check so a crash between the marker and the provenance write
+    converges on the next publish.
     Callers already holding the root's lease pass their ``writer_id``
     AND ``lease_seconds`` — the acquire is then a heartbeat renew
     sized to the caller's cadence, and the lease is NOT released here
@@ -164,7 +189,11 @@ def publish_version(
                     build_fn(vdir)
             built = True
         if not _fs_exists(spark, f"{vdir}/{PROVENANCE}"):
-            _fs_write_text(spark, f"{vdir}/{PROVENANCE}", json.dumps(provenance))
+            _fs_write_text(
+                spark,
+                f"{vdir}/{PROVENANCE}",
+                json.dumps({"fingerprint": fingerprint, "layout": layout}),
+            )
         prev = read_current_version(spark, root)
         if prev != vid:
             _fs_write_text(spark, f"{root}/{CURRENT_PTR}", vid)
