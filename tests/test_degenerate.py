@@ -66,27 +66,45 @@ def test_degenerate_corpora(spark, empty_sf_dir, single_sf_dir, name):
         assert rows is not None  # ran to completion; emptiness is fine
 
 
-def test_assign_blas_empty_centroids_fails_loudly(spark):
+@pytest.mark.parametrize("branch", ["kernel", "jvm"])
+def test_assign_blas_empty_centroids_fails_loudly(spark, branch):
     """Round-7 regression: cogrouping a non-empty vector slice with an
     EMPTY centroid table (K=0) used to assign via an empty Series,
     which index-aligns to NaN and dies later with an opaque
-    Arrow/bigint cast error. The guard raises a ValueError naming the
-    condition instead."""
+    Arrow/bigint cast error. The guard raises naming the condition
+    instead — on both routes: the all-JVM twin used to return a null
+    cent_id (top_m=1) or drop every row (top_m=2) where the kernel
+    raised."""
     import pytest as _pytest
-    from pyspark.errors.exceptions.captured import PythonException
+    from pyspark.errors.exceptions.captured import (
+        PythonException,
+        SparkRuntimeException,
+    )
 
     from wikid_spark.queries.similarity import _assign_blas
 
     vecs = spark.createDataFrame(
-        [(1, [1.0, 2.0]), (2, [3.0, 4.0])], "vec_id long, qemb array<double>"
+        [(1, [1, 2]), (2, [3, 4])], "vec_id long, qemb array<long>"
     )
-    cents = spark.createDataFrame(
-        [], "cent_id long, cemb array<double>"
+    cents = spark.createDataFrame([], "cent_id long, cemb array<long>")
+    # an upper bound on K past the routing crossover forces the kernel
+    size = {"n_rows": 2, "k": 10**7 if branch == "kernel" else 1}
+    plan = _assign_blas(vecs, cents, **size)._jdf.queryExecution()
+    assert ("FlatMapCoGroupsInPandas" in plan.analyzed().toString()) == (
+        branch == "kernel"
     )
-    with _pytest.raises(PythonException, match="_assign_blas"):
-        _assign_blas(vecs, cents).collect()
+    raised, where = {
+        "kernel": (PythonException, "_assign_blas"),
+        "jvm": (SparkRuntimeException, "_assign_jvm"),
+    }[branch]
+    for top_m in (1, 2):
+        with _pytest.raises(raised, match=rf"{where}: .*\(K=0\)"):
+            _assign_blas(vecs, cents, top_m=top_m, **size).collect()
 
     # And the sane K=1 case still assigns every row to that centroid.
-    one = spark.createDataFrame([(0, [0.0, 0.0])], "cent_id long, cemb array<double>")
-    got = {r["vec_id"]: r["cent_id"] for r in _assign_blas(vecs, one).collect()}
+    one = spark.createDataFrame([(0, [0, 0])], "cent_id long, cemb array<long>")
+    got = {
+        r["vec_id"]: r["cent_id"]
+        for r in _assign_blas(vecs, one, **size).collect()
+    }
     assert got == {1: 0, 2: 0}

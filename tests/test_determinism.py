@@ -93,3 +93,77 @@ def test_retrain_rerun_identical(spark, name):
     S._drop_ann_memos()
     second = [tuple(r) for r in fn(spark, SF_SMALL).collect()]
     assert first == second
+
+
+# Kernel results must not depend on how many slices the cogrouped
+# harness hashes the input into (exact integer distances, exact int64
+# partial sums), so forcing the slice count to 1, 7 and 64 must give
+# identical rows; the all-JVM assignment twin is the reference.
+@pytest.mark.parametrize(
+    "kernel", ["assign_top1", "assign_top2", "assign_partials", "pq_encode"]
+)
+def test_kernel_slice_count_invariant(spark, monkeypatch, kernel):
+    import pyspark.sql.functions as F
+
+    import wikid_spark.queries.similarity as S
+    from wikid_spark.catalog import corpus_rows, table
+
+    emb = table(spark, SF_SMALL, "embeddings")
+    qemb = emb.select(
+        "vec_id", S.quantize_embedding(F.col("embedding")).alias("qemb")
+    )
+    n = corpus_rows(SF_SMALL, "embeddings")
+    k = S.derived_k(n)
+    cents = S._centroids(emb, k).localCheckpoint(eager=True)
+
+    def cell_sums(df, n_col, s_col):
+        return df.groupBy("cent_id").agg(
+            F.sum(n_col).alias("n"),
+            F.expr(
+                "array("
+                + ",".join(f"sum({s_col}[{d}])" for d in range(S.EMBED_DIMS))
+                + ")"
+            ).alias("s"),
+        )
+
+    if kernel == "pq_encode":
+        cb = S._pq_codebooks(emb)
+
+        def run():
+            return S._pq_encode(qemb, cb, with_dist=True, n_rows=n)
+
+        twin = None
+    elif kernel == "assign_partials":
+
+        def run():
+            return cell_sums(
+                S._assign_partials(qemb, cents, n_rows=n, k=k), "n", "s"
+            )
+
+        twin = cell_sums(
+            S._assign_jvm(qemb, cents).withColumn("one", F.lit(1)),
+            "one",
+            "qemb",
+        )
+    else:
+        top_m = 1 if kernel == "assign_top1" else 2
+
+        def run():
+            return S._assign_blas(qemb, cents, top_m=top_m, n_rows=n, k=k)
+
+        twin = S._assign_jvm(qemb, cents, top_m=top_m)
+        # route this small pass to the kernel, not the JVM twin
+        monkeypatch.setattr(S, "_ASSIGN_JVM_MAX_ROW_CELLS", 0)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = {}
+    for slices in (1, 7, 64):
+        monkeypatch.setattr(S, "_kernel_slices", lambda n_rows, k, cores: slices)
+        df = run()
+        assert "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().analyzed().toString()
+        got[slices] = rows(df)
+    assert got[1] and got[1] == got[7] == got[64]
+    if twin is not None:
+        assert got[1] == rows(twin)

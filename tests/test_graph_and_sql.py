@@ -491,7 +491,9 @@ def test_lloyd_train_converges_and_early_stops(spark):
     vecs = emb.select(
         "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
     )
-    cents, trace = lloyd_train(vecs, _centroids(emb, k=4), max_rounds=20, tol=0)
+    cents, trace = lloyd_train(
+        vecs, _centroids(emb, k=4), max_rounds=20, tol=0, n_rows=len(rows)
+    )
     assert len(trace) < 20, trace  # early-stopped: no padded rows
     last = trace[-1]
     assert last[2] == 0 and last[3] == 0  # exact fixpoint

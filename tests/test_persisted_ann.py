@@ -91,7 +91,11 @@ def test_persisted_serve_scan_is_partition_pruned(spark, tmp_path):
         )
         cents = spark.read.parquet(f"{out}/centroids")
         probes = S._assign_blas(
-            raw_sample.select("vec_id", "qemb"), cents, top_m=1
+            raw_sample.select("vec_id", "qemb"),
+            cents,
+            top_m=1,
+            n_rows=S._QUERY_SAMPLE_MAX_ROWS,
+            k=S.derived_k(S.corpus_rows(SF, "embeddings")),
         ).select(
             S.F.col("vec_id").alias("query_id"),
             S.F.col("cent_id").alias("pcell"),
@@ -108,7 +112,7 @@ def test_persisted_serve_scan_is_partition_pruned(spark, tmp_path):
         # rindex scan (and its PartitionFilters) from the final
         # executedPlan — plan pins must target the un-checkpointed tail
         tail = S._residual_serve(
-            emb, cents, cb, pruned, raw_sample, 1, S.PQ8, probes=probes,
+            emb, cents, cb, pruned, raw_sample, probes, S.PQ8,
             rerank_pushdown=False,
         )
         plan = tail._jdf.queryExecution().executedPlan().toString()
@@ -308,7 +312,13 @@ def test_mmr_candidate_scan_is_partition_pruned(spark, tmp_path):
                 S.quantize_embedding(S.F.col("embedding")).alias("qemb"),
             )
         )
-        probes = S._assign_blas(sample, cents, top_m=2)
+        probes = S._assign_blas(
+            sample,
+            cents,
+            top_m=2,
+            n_rows=S._QUERY_SAMPLE_MAX_ROWS,
+            k=S.derived_k(S.corpus_rows(SF, "embeddings")),
+        )
         cells = sorted({r["cent_id"] for r in probes.select("cent_id").collect()})
         assert cells
         mindex = spark.read.schema(

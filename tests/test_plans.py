@@ -341,7 +341,7 @@ def test_multi_assignment_matches_declarative_ranks(spark):
 
     got = {
         (r["vec_id"], r["cent_rank"]): r["cent_id"]
-        for r in _assignments_multi(emb, k=9, top_m=2).collect()
+        for r in _assignments_multi(emb, n_rows=len(rows), k=9, top_m=2).collect()
     }
 
     cents = _centroids(emb, k=9)
@@ -485,8 +485,14 @@ def test_mmr_ann_pool_comes_from_index_join(spark):
 
     import wikid_spark.queries.similarity as S
 
-    qemb, cents, a2 = S._trained_index(spark, SF)
-    probes = S._assign_blas(S._sample_filter(qemb), cents, top_m=2).select(
+    qemb, cents, a2, k = S._trained_index(spark, SF)
+    probes = S._assign_blas(
+        S._sample_filter(qemb),
+        cents,
+        top_m=2,
+        n_rows=S._QUERY_SAMPLE_MAX_ROWS,
+        k=k,
+    ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
@@ -520,12 +526,11 @@ def test_mmr_ann_pool_comes_from_index_join(spark):
 
 
 def test_probe_ranks_routes_big_k_to_blas_kernel(spark):
-    """ADVICE r16: most serving sites don't thread K into _probe_ranks,
-    so the K-row centroid frames carry it (`_wikid_k`, pinned by
-    lloyd_train / the seed builders / the persisted-handle load). Past
-    _PROBE_JVM_MAX_K the probe must route to the cogrouped BLAS kernel
-    (FlatMapCoGroupsInPandas) instead of the interpreted HOF ranks;
-    below it, the all-JVM projection (no Python node)."""
+    """`_probe_ranks` sizes the pass at the query-sample budget and the
+    caller's explicit ``k``, and routes by the one assignment crossover
+    (`_assign_in_jvm`): up to `_ASSIGN_JVM_MAX_ROW_CELLS` row·cells the
+    all-JVM projection (no Python node), one centroid row past it the
+    cogrouped BLAS kernel (FlatMapCoGroupsInPandas)."""
     import pyspark.sql.functions as F
 
     import wikid_spark.queries.similarity as S
@@ -549,57 +554,68 @@ def test_probe_ranks_routes_big_k_to_blas_kernel(spark):
     def plan_of(df):
         return df._jdf.queryExecution().analyzed().toString()
 
+    k_max = S._ASSIGN_JVM_MAX_ROW_CELLS // S._QUERY_SAMPLE_MAX_ROWS
     assert "FlatMapCoGroupsInPandas" not in plan_of(
-        S._probe_ranks(sample, cents)
+        S._probe_ranks(sample, cents, k=k_max)
     )
-    cents._wikid_k = S._PROBE_JVM_MAX_K + 1
-    assert "FlatMapCoGroupsInPandas" in plan_of(S._probe_ranks(sample, cents))
-    # an explicit small k overrides the pinned bound
-    assert "FlatMapCoGroupsInPandas" not in plan_of(
-        S._probe_ranks(sample, cents, k=10)
+    assert "FlatMapCoGroupsInPandas" in plan_of(
+        S._probe_ranks(sample, cents, k=k_max + 1)
     )
-    # and lloyd_train pins the attribute on its returned frame
-    trained, _ = S.lloyd_train(
-        sample.select("vec_id", "qemb"), cents.limit(4), max_rounds=1, dims=4
-    )
-    assert isinstance(getattr(trained, "_wikid_k", None), int)
-    # the BLAS route sizes its slices by the query budget, which the
-    # shared sample filter keeps exactly at any corpus size
+    # the sizing is the query budget, which the shared sample filter
+    # keeps exactly at any corpus size
     assert (
         S._sample_filter(spark.range(0, 10_000), "id").count()
         == S._QUERY_SAMPLE_MAX_ROWS
     )
 
 
+def test_kernel_entry_points_require_sizing():
+    """Every kernel entry point takes its sizing as required
+    keyword-only ints — no default, so no call site can silently skip
+    the slice bound or the routing rule."""
+    import inspect
+
+    import wikid_spark.queries.similarity as S
+
+    sizing = {
+        S._assign_blas: ("n_rows", "k"),
+        S._assign_partials: ("n_rows", "k"),
+        S._lloyd_round: ("n_rows", "k"),
+        S._probe_ranks: ("k",),  # rows: the query-sample budget
+        S._pq_encode: ("n_rows",),  # k: spec.codes
+        S._pq_train: ("n_rows",),
+        S.lloyd_train: ("n_rows",),  # k: the loop's own cell count
+    }
+    for fn, names in sizing.items():
+        params = inspect.signature(fn).parameters
+        assert {"n_rows", "k"} & set(params) == set(names), fn.__name__
+        for p in names:
+            assert params[p].default is inspect.Parameter.empty, (fn, p)
+            assert params[p].kind is inspect.Parameter.KEYWORD_ONLY, (fn, p)
+
+
 def test_kernel_slices_derivation():
     """Round-17 (guide §2.5): cogrouped-kernel slice counts derive from
-    the input instead of the legacy fixed 64 — compute-proportional
-    core fill, Arrow-batch and distance-matrix upper bounds, 64 only
-    when the caller cannot size the input."""
+    the pass's rows and K — compute-proportional core fill, with
+    Arrow-batch and distance-matrix upper bounds."""
     from wikid_spark.queries.similarity import (
-        _KERNEL_DEFAULT_SLICES,
         _KERNEL_MAX_SLICE_CELLS,
         _kernel_slices,
     )
 
-    # unknown input size -> legacy fixed count (streaming micro-batches)
-    assert _kernel_slices(None) == _KERNEL_DEFAULT_SLICES
     # a <=40-row probe sample is ONE slice, not 64
-    assert _kernel_slices(40, 40 * 142, cores=32) == 1
+    assert _kernel_slices(40, 142, cores=32) == 1
     # light compute at tiny corpora stays near-serial (task overhead
     # beats the parallel gain below ~32k cells/slice)
-    assert _kernel_slices(2_000, 2_000 * 16, cores=32) <= 2
+    assert _kernel_slices(2_000, 16, cores=32) <= 2
     # heavy compute fills the cores
-    assert _kernel_slices(20_000, 20_000 * 256, cores=32) == 32
+    assert _kernel_slices(20_000, 256, cores=32) == 32
     # past the core count only for Arrow-batch or memory bounds:
     # 10^9 rows x K=31623 is memory-bound at ~10^6 slices, each
     # holding <= _KERNEL_MAX_SLICE_CELLS distance-matrix cells
     n, k = 1_000_000_000, 31_623
-    s = _kernel_slices(n, n * k, cores=32)
+    s = _kernel_slices(n, k, cores=32)
     assert s > 900_000 and (n * k) / s <= _KERNEL_MAX_SLICE_CELLS
-    # rows-only fallback fill (K unknown to the caller)
-    assert _kernel_slices(2_000, cores=32) == 2
-    assert _kernel_slices(20_000, cores=32) == 20
 
 
 def test_pq_train_single_final_checkpoint(spark):
@@ -623,7 +639,7 @@ def test_pq_train_single_final_checkpoint(spark):
     # value identity vs the per-round-checkpoint legacy trainer
     legacy = cb0
     for _ in range(S.PQ_TRAIN_ROUNDS):
-        legacy = S._pq_lloyd_round(qemb, legacy, S.PQ4).localCheckpoint(
+        legacy = S._pq_lloyd_round(qemb, legacy, S.PQ4, n_rows=500).localCheckpoint(
             eager=True
         )
     got = sorted(map(tuple, cbt.collect()))

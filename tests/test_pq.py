@@ -12,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_DIR_SMALL
-from wikid_spark.catalog import table
+from wikid_spark.catalog import corpus_rows, table
 from wikid_spark.queries.similarity import (
     PQ_CODES,
     PQ_DIMS,
@@ -90,7 +90,7 @@ def test_pq_encode_passthrough_and_broadcast_plan(spark):
         "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
     )
     cb = _pq_codebooks(emb)
-    out = _pq_encode(qemb, cb)
+    out = _pq_encode(qemb, cb, n_rows=corpus_rows(SF_DIR_SMALL, "embeddings"))
     assert out.columns == ["vec_id", "qemb", "pqcode"]
     assert out.count() == qemb.count()
 
@@ -117,7 +117,8 @@ def test_pq_distortion_column_and_training_improves_it(spark):
         "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
     )
     cb0 = _pq_codebooks(emb)
-    enc = _pq_encode(qemb, cb0, with_dist=True).collect()
+    n = corpus_rows(SF_DIR_SMALL, "embeddings")
+    enc = _pq_encode(qemb, cb0, with_dist=True, n_rows=n).collect()
     X, C, codes = _numpy_reference(spark, SF_DIR_SMALL)
     for r in enc:
         want = int(
@@ -129,10 +130,10 @@ def test_pq_distortion_column_and_training_improves_it(spark):
         assert r["pqdist"] == want, r["vec_id"]
 
     seeded_total = sum(r["pqdist"] for r in enc)
-    cbt = _pq_train(qemb, cb0, PQ_TRAIN_ROUNDS)
+    cbt = _pq_train(qemb, cb0, PQ_TRAIN_ROUNDS, n_rows=n)
     trained_total = sum(
         r["pqdist"]
-        for r in _pq_encode(qemb, cbt, with_dist=True).collect()
+        for r in _pq_encode(qemb, cbt, with_dist=True, n_rows=n).collect()
     )
     assert trained_total <= seeded_total
 
@@ -175,7 +176,9 @@ def test_pq_dtab_survives_dropped_codewords(spark):
         ~((F.col("sub") == 0) & (F.col("code_id") == 3))
         & ~((F.col("sub") == 5) & (F.col("code_id") == PQ_CODES - 1))
     )
-    codes = _pq_encode(qemb, cb).select("vec_id", "pqcode")
+    codes = _pq_encode(
+        qemb, cb, n_rows=corpus_rows(SF_DIR_SMALL, "embeddings")
+    ).select("vec_id", "pqcode")
     from wikid_spark.queries.similarity import _pq_parts
 
     _, _, _, sample = _pq_parts(spark, SF_DIR_SMALL)
@@ -283,7 +286,7 @@ def test_pq8_sign_wrapped_word_roundtrips(spark):
     vec = spark.createDataFrame(
         [(1, [2000] * 64)], "vec_id long, qemb array<long>"
     )
-    out = _pq_encode(vec, cb, spec=PQ8).collect()[0]
+    out = _pq_encode(vec, cb, spec=PQ8, n_rows=1).collect()[0]
     assert out["pqcode"] < 0 and out["pqcode2"] < 0  # sign bit set
     for s in range(PQ8.subs):
         w = out["pqcode"] if s < 8 else out["pqcode2"]

@@ -249,12 +249,14 @@ def test_persist_with_training_aligns_centroids(spark, tmp_path):
     idx = str(tmp_path / "vidx_trained")
     vi.persist_vector_index(corpus, idx, train_rounds=3)
 
-    k = derived_k(corpus.count())
+    n = corpus.count()
+    k = derived_k(n)
     want_cents, _ = lloyd_train(
         vi._qemb(corpus).select("vec_id", "qemb"),
         _centroids(corpus, k),
         max_rounds=3,
         dims=DIM,
+        n_rows=n,
     )
     got = {
         r["cent_id"]: list(r["cemb"])

@@ -275,19 +275,18 @@ KERNEL_QUERIES = [
 
 
 def run_kernels(spark, sf_dir, reps):
-    """Round-17 training-path A/B, interleaved within one session so
-    host drift hits every variant equally. Variants:
+    """Kernel-slice A/B, interleaved within one session so host drift
+    hits every variant equally (the c32 slice watch). Variants:
 
-    * shipped  — derived kernel slices (`_kernel_slices`), single
-      final `_pq_train` checkpoint, folded `lloyd_train` rounds;
-    * fixed64  — shipped trainers, but every cogrouped kernel back at
-      the legacy fixed 64 slices (isolates the slice derivation);
-    * legacy   — fixed 64 slices AND the r16 per-round-checkpoint
-      `_pq_train` (isolates the training-chain fold on top).
+    * shipped  — derived kernel slices (`_kernel_slices`);
+    * fixed64  — every cogrouped kernel pass at a fixed 64 slices
+      (isolates the slice derivation).
 
     Each rep rebuilds the query plan with the ANN memo evicted, so
     BUILD cost (where the training work lives) is measured per rep:
-    reported per query as build/exec/total p50s."""
+    reported per query as build/exec/total p50s, plus the rows that
+    differ between the variants (must be 0: results are
+    slice-count-invariant)."""
     import statistics as st
 
     import wikid_spark.queries.similarity as S
@@ -295,87 +294,23 @@ def run_kernels(spark, sf_dir, reps):
 
     specs = all_queries()
     orig_slices = S._kernel_slices
-    orig_pq_train = S._pq_train
 
-    def slices64(n_rows, row_cells=None, cores=None):
-        return S._KERNEL_DEFAULT_SLICES
+    def slices64(n_rows, k, cores):
+        return 64
 
-    def pq_train_r16(qemb_df, cb0, rounds, spec=S.PQ4, n_rows=None):
-        cb = cb0
-        for _ in range(rounds):
-            new = S._pq_lloyd_round(
-                qemb_df, cb, spec, n_rows=n_rows
-            ).localCheckpoint(eager=True)
-            if cb is not cb0:
-                S._unpersist_checkpoint(cb)
-            cb = new
-        return cb
-
-    orig_lloyd = S.lloyd_train
-
-    def lloyd_train_r16(
-        vecs, cents0, max_rounds, tol=0, pad_trace=False,
-        dims=S.EMBED_DIMS, row_cells=None, n_rows=None,
-    ):
-        cents = cents0.select("cent_id", "cemb").localCheckpoint(eager=True)
-        prev_k = cents.count()
-        trace, fixed = [], None
-        for rnd in range(1, max_rounds + 1):
-            if fixed is not None:
-                trace.append((rnd, *fixed))
-                continue
-            newc = S._lloyd_round(
-                vecs, cents, dims=dims, row_cells=row_cells, n_rows=n_rows
-            ).localCheckpoint(eager=True)
-            shift = F.aggregate(
-                F.zip_with(
-                    F.col("cemb"), F.col("prev"),
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            stats = (
-                newc.join(
-                    cents.select("cent_id", F.col("cemb").alias("prev")),
-                    "cent_id",
-                )
-                .select(shift.alias("shift"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_cells"),
-                    F.max("shift").alias("max_shift"),
-                    F.sum("shift").alias("total_shift"),
-                )
-                .collect()[0]
-            )
-            n_cells = int(stats["n_cells"])
-            max_shift = stats["max_shift"]
-            trace.append((rnd, n_cells, max_shift, stats["total_shift"]))
-            converged = n_cells == prev_k and (
-                max_shift is None or max_shift <= tol
-            )
-            prev_cents = cents
-            cents = newc.select("cent_id", "cemb").localCheckpoint(eager=True)
-            S._unpersist_checkpoint(newc)
-            S._unpersist_checkpoint(prev_cents)
-            prev_k = n_cells
-            if converged:
-                if not pad_trace:
-                    break
-                if tol == 0:
-                    fixed = (n_cells, max_shift, stats["total_shift"])
-        cents._wikid_k = prev_k
-        return cents, trace
-
-    variants = {
-        "shipped": (orig_slices, orig_pq_train, orig_lloyd),
-        "fixed64": (slices64, orig_pq_train, orig_lloyd),
-        "legacy": (slices64, pq_train_r16, lloyd_train_r16),
-    }
+    variants = {"shipped": orig_slices, "fixed64": slices64}
 
     def _evict_memo():
         for key in list(S._ANN_MEMO):
             S._ann_memo_release(S._ANN_MEMO.pop(key))
+
+    def _rows(q, slices):
+        S._kernel_slices = slices
+        try:
+            _evict_memo()
+            return sorted(map(tuple, specs[q].fn(spark, sf_dir).collect()))
+        finally:
+            S._kernel_slices = orig_slices
 
     out = {}
     runs = {
@@ -383,18 +318,20 @@ def run_kernels(spark, sf_dir, reps):
         for q in KERNEL_QUERIES
     }
     # one warm pass per variant (codegen, python worker pool)
-    for v, (sl, pt, lt) in variants.items():
-        S._kernel_slices, S._pq_train, S.lloyd_train = sl, pt, lt
-        _evict_memo()
-        _noop(specs["sim_ivfpq_topk"].fn(spark, sf_dir))
+    for sl in variants.values():
+        S._kernel_slices = sl
+        try:
+            _evict_memo()
+            _noop(specs["sim_ivfpq_topk"].fn(spark, sf_dir))
+        finally:
+            S._kernel_slices = orig_slices
     order = list(variants)
     for rep in range(reps):
         # rotate the variant order per rep: block-position effects
         # (GC, block-manager churn) otherwise bias whichever variant
         # always runs first (measured ~1.6 s on a code-identical query)
         for v in order[rep % len(order):] + order[: rep % len(order)]:
-            sl, pt, lt = variants[v]
-            S._kernel_slices, S._pq_train, S.lloyd_train = sl, pt, lt
+            S._kernel_slices = variants[v]
             try:
                 for q in KERNEL_QUERIES:
                     _evict_memo()
@@ -407,29 +344,13 @@ def run_kernels(spark, sf_dir, reps):
                     runs[q][v]["build"].append(tb)
                     runs[q][v]["exec"].append(te)
             finally:
-                S._kernel_slices, S._pq_train, S.lloyd_train = (
-                    orig_slices, orig_pq_train, orig_lloyd,
-                )
-    # one value check: shipped vs legacy rows
-    mismatches = {}
+                S._kernel_slices = orig_slices
     for q in KERNEL_QUERIES:
-        _evict_memo()
-        a = sorted(map(tuple, specs[q].fn(spark, sf_dir).collect()))
-        S._kernel_slices, S._pq_train, S.lloyd_train = (
-            slices64, pq_train_r16, lloyd_train_r16,
-        )
-        try:
-            _evict_memo()
-            b = sorted(map(tuple, specs[q].fn(spark, sf_dir).collect()))
-        finally:
-            S._kernel_slices, S._pq_train, S.lloyd_train = (
-                orig_slices, orig_pq_train, orig_lloyd,
-            )
-        mismatches[q] = sum(x != y for x, y in zip(a, b)) + abs(
-            len(a) - len(b)
-        )
-    for q in KERNEL_QUERIES:
-        out[q] = {"value_mismatch_rows": mismatches[q]}
+        a, b = _rows(q, orig_slices), _rows(q, slices64)
+        out[q] = {
+            "value_mismatch_rows": sum(x != y for x, y in zip(a, b))
+            + abs(len(a) - len(b))
+        }
         for v in variants:
             b = st.median(runs[q][v]["build"])
             e = st.median(runs[q][v]["exec"])

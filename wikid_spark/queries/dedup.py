@@ -1268,7 +1268,7 @@ def nd_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
     k = derived_k(n)
-    cells = _assignments_multi(emb, k, top_m=2, row_cells=n * k).select(
+    cells = _assignments_multi(emb, n_rows=n, k=k, top_m=2).select(
         "vec_id", "embedding", "cent_id"
     )
     return (
@@ -1361,7 +1361,7 @@ def nd_semantic_capture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
     k = derived_k(n)
-    a2 = _assignments_multi(emb, k, top_m=2, row_cells=n * k).select(
+    a2 = _assignments_multi(emb, n_rows=n, k=k, top_m=2).select(
         "vec_id", "cent_id", "cent_rank"
     )
     # Ground truth through the shared block-pair BLAS grid — NOT a
@@ -1511,7 +1511,7 @@ def nd_semantic_capture_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") * _HASH_MULT) % _HASH_MOD
     ) % CAPTURE_SAMPLE_DIV == 0
     a3 = (
-        _assignments_multi(emb, k, top_m=3, row_cells=n * k)
+        _assignments_multi(emb, n_rows=n, k=k, top_m=3)
         .select("vec_id", "cent_id", "cent_rank")
         .filter(keep)
     )

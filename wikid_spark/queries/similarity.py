@@ -398,7 +398,7 @@ def _cell_ranks(qemb_col, cs_col):
     return F.array_sort(_cell_scores(qemb_col, cs_col))
 
 
-def _assignments(emb: DataFrame, row_cells: int | None = None) -> DataFrame:
+def _assignments(emb: DataFrame, *, n_rows: int) -> DataFrame:
     """(vec_id, embedding, cent_id): each vector mapped to its nearest
     centroid by integer squared-L2 over the quantized vectors, ties to
     the lowest cent_id.
@@ -415,14 +415,14 @@ def _assignments(emb: DataFrame, row_cells: int | None = None) -> DataFrame:
     return _assign_blas(
         qemb,
         _centroids(emb),
-        row_cells=row_cells,
         out_cols=["vec_id", "embedding"],
-        n_rows=row_cells // N_CENTROIDS if row_cells else None,
+        n_rows=n_rows,
+        k=N_CENTROIDS,
     ).select("vec_id", "embedding", "cent_id")
 
 
 def _assignments_multi(
-    emb: DataFrame, k: int, top_m: int = 2, row_cells: int | None = None
+    emb: DataFrame, *, n_rows: int, k: int, top_m: int = 2
 ) -> DataFrame:
     """(vec_id, embedding, cent_id, cent_rank): each vector mapped to
     its ``top_m`` nearest of ``k`` corpus-derived centroids — the
@@ -436,9 +436,9 @@ def _assignments_multi(
         qemb,
         _centroids(emb, k),
         top_m=top_m,
-        row_cells=row_cells,
         out_cols=["vec_id", "embedding"],
-        n_rows=row_cells // k if row_cells and k else None,
+        n_rows=n_rows,
+        k=k,
     ).select(
         "vec_id", "embedding", "cent_id", "cent_rank"
     )
@@ -530,9 +530,8 @@ def sim_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join + min_by aggregation — the corpus never shuffles on
     anything but its own key, so the index build is one pass."""
     emb = table(spark, sf_dir, "embeddings")
-    rc = corpus_rows(sf_dir, "embeddings") * N_CENTROIDS
     return (
-        _assignments(emb, row_cells=rc)
+        _assignments(emb, n_rows=corpus_rows(sf_dir, "embeddings"))
         .groupBy("cent_id")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy("cent_id")
@@ -566,7 +565,7 @@ def sim_ivf_derived_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = corpus_rows(sf_dir, "embeddings")
     k = derived_k(n)
     return (
-        _assignments_multi(emb, k, top_m=2, row_cells=n * k)
+        _assignments_multi(emb, n_rows=n, k=k, top_m=2)
         .groupBy("cent_id", "cent_rank")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy("cent_id", "cent_rank")
@@ -624,9 +623,9 @@ def sim_ivf_derived_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qemb,
         cents,
         top_m=2,
-        row_cells=n * k,
         out_cols=["vec_id", "embedding"],
         n_rows=n,
+        k=k,
     ).select("vec_id", "embedding", "cent_id", "cent_rank")
     # Query cells via the JVM sample kernel (round-16, guide §2.4):
     # filtering ``a2`` for the sample's rank-1 rows re-executed the
@@ -688,7 +687,6 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — per-query work is |cell|, not |corpus|."""
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
-    rc = n * N_CENTROIDS
     qemb = emb.select(
         "vec_id", "embedding", quantize_embedding(F.col("embedding")).alias("qemb")
     )
@@ -698,11 +696,10 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of filtering ``assigned`` (which re-ran the corpus
     # assignment in the broadcast branch — same cell by construction).
     cents = _centroids(emb).localCheckpoint(eager=True)
-    cents._wikid_k = N_CENTROIDS  # probe-kernel routing bound
     assigned = _assign_blas(
-        qemb, cents, row_cells=rc, out_cols=["vec_id", "embedding"], n_rows=n
+        qemb, cents, out_cols=["vec_id", "embedding"], n_rows=n, k=N_CENTROIDS
     ).select("vec_id", "embedding", "cent_id")
-    q = _probe_ranks(_sample_filter(qemb), cents).select(
+    q = _probe_ranks(_sample_filter(qemb), cents, k=N_CENTROIDS).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("qcell"),
@@ -1206,8 +1203,9 @@ def _lloyd_round(
     vecs: DataFrame,
     cents: DataFrame,
     dims: int = EMBED_DIMS,
-    row_cells: int | None = None,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
+    k: int,
 ) -> DataFrame:
     """One Lloyd re-centering over (vec_id, qemb) vectors, re-quantized
     floor(S/n). Returns the refined centroid table (cent_id, n, cemb).
@@ -1215,8 +1213,8 @@ def _lloyd_round(
     training over other vector tables (the streaming vector index)
     pass their own.
 
-    Two value-identical physical shapes, routed by ``row_cells``
-    (rows × K, same crossover as `_assign_blas`):
+    Two value-identical physical shapes, routed by ``n_rows`` × ``k``
+    (`_assign_in_jvm`, the `_assign_blas` crossover):
 
     * small — the all-JVM projection assignment feeds a row-level
       ``dims``-column hash agg (map-side partials); no Python pass.
@@ -1237,7 +1235,7 @@ def _lloyd_round(
     # post-agg projection); the re-quantization becomes a K-row
     # ``transform`` whose `x / n` is the same bigint÷bigint → double
     # Divide — outputs bit-identical (oracle-pinned at both small SFs).
-    if row_cells is not None and row_cells <= _ASSIGN_JVM_MAX_ROW_CELLS:
+    if _assign_in_jvm(n_rows, k):
         a1 = _assign_jvm(vecs, cents)
         sums = a1.groupBy("cent_id").agg(
             F.count(F.lit(1)).alias("n"),
@@ -1248,7 +1246,7 @@ def _lloyd_round(
             ).alias("s"),
         )
     else:
-        parts = _assign_partials(vecs, cents, n_rows=n_rows, row_cells=row_cells)
+        parts = _assign_partials(vecs, cents, n_rows=n_rows, k=k)
         sums = parts.groupBy("cent_id").agg(
             F.sum("n").alias("n"),
             F.expr(
@@ -1363,7 +1361,6 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook distributed-Lloyd layout."""
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
-    rc = n * N_CENTROIDS
     vecs = emb.select(
         "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
     )
@@ -1375,15 +1372,15 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shaped consumers) — measured ~2 redundant corpus passes per run
     # at sf0.1 (round-16, guide §5.3: checkpoint tiny reused state).
     cents0 = _centroids(emb).localCheckpoint(eager=True)
-    newc = _lloyd_round(vecs, cents0, row_cells=rc, n_rows=n).localCheckpoint(
-        eager=True
-    )
+    newc = _lloyd_round(
+        vecs, cents0, n_rows=n, k=N_CENTROIDS
+    ).localCheckpoint(eager=True)
     # Induced-assignment histogram, routed like `_lloyd_round`
     # (round-16, guide §2.3/§4.4): only per-cell COUNTS are needed, so
     # above the crossover the corpus-row Arrow return + count aggregate
     # collapse to a sum over slices×K partial rows; below it the
     # all-JVM assignment feeds a plain hash count.
-    if rc <= _ASSIGN_JVM_MAX_ROW_CELLS:
+    if _assign_in_jvm(n, N_CENTROIDS):
         c2 = (
             _assign_jvm(vecs, newc.select("cent_id", "cemb"))
             .groupBy("cent_id")
@@ -1392,7 +1389,7 @@ def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         c2 = (
             _assign_partials(
-                vecs, newc.select("cent_id", "cemb"), n_rows=n, row_cells=rc
+                vecs, newc.select("cent_id", "cemb"), n_rows=n, k=N_CENTROIDS
             )
             .groupBy("cent_id")
             .agg(F.sum("n").alias("n2"))
@@ -1455,7 +1452,6 @@ def sim_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     to sim_ivf_ann_topk. The centroid table stays K rows end to end."""
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
-    rc = n * N_CENTROIDS
     vecs = emb.select(
         "vec_id",
         "embedding",
@@ -1469,24 +1465,23 @@ def sim_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lloyd_round(
             vecs.select("vec_id", "qemb"),
             _centroids(emb),
-            row_cells=rc,
             n_rows=n,
+            k=N_CENTROIDS,
         )
         .select("cent_id", "cemb")
         .localCheckpoint(eager=True)
     )
-    # Seed K bounds the refined cell count (Lloyd only drops cells) —
-    # enough for `_probe_ranks`' kernel routing, no extra count job.
-    refined._wikid_k = N_CENTROIDS
+    # Seed K bounds the refined cell count (Lloyd only drops cells), so
+    # it sizes both consumers with no extra count job.
     assigned = _assign_blas(
-        vecs, refined, row_cells=rc, out_cols=["vec_id", "embedding"], n_rows=n
+        vecs, refined, out_cols=["vec_id", "embedding"], n_rows=n, k=N_CENTROIDS
     ).select("vec_id", "embedding", "cent_id")
     # Query cells via the JVM sample kernel instead of filtering
     # ``assigned`` (round-16, guide §2.4): the broadcast q branch
     # re-executed the corpus-wide Python assignment per serve; the
     # 40-row argmin against the same refined centroids is identical
     # by construction and leaves ``assigned`` with a single consumer.
-    q = _probe_ranks(_sample_filter(vecs), refined).select(
+    q = _probe_ranks(_sample_filter(vecs), refined, k=N_CENTROIDS).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("qcell"),
@@ -1519,61 +1514,124 @@ def sim_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # constant, so big corpora keep the BLAS plan.
 _ASSIGN_JVM_MAX_ROW_CELLS = 2_000_000
 
-# Cogrouped-kernel slice sizing (round-17, guide §2.5/§4.2): the
-# kernels used to hash every input into a FIXED 64 slices — 64 Arrow
-# round-trips for a ≤40-row probe sample, AND a hard 64-task ceiling
-# on a 10^9-row corpus, where one slice would also hold rows/64 × K
-# distance-matrix cells (an OOM, not a slowdown). Slice count now
-# derives from the input and the session:
+
+def _assign_in_jvm(n_rows: int, k: int) -> bool:
+    """The one JVM-vs-kernel routing rule for assignment passes:
+    ``n_rows`` input rows (or a bound) against ``k`` centroid rows (or
+    a bound) at most `_ASSIGN_JVM_MAX_ROW_CELLS` row·cells stay in the
+    all-JVM projection; larger passes take the cogrouped kernel."""
+    return n_rows * k <= _ASSIGN_JVM_MAX_ROW_CELLS
+
+
+# Cogrouped-kernel slice sizing (round-17, guide §2.5/§4.2): a fixed
+# slice count is wrong at both ends — a ≤40-row probe sample paid 64
+# Arrow round-trips, and a 10^9-row corpus hit a 64-task ceiling with
+# rows/64 × K distance-matrix cells per slice (an OOM, not a
+# slowdown). Every kernel pass is therefore sized from two required
+# ints, ``n_rows`` input rows and ``k`` centroid/codeword rows (each
+# exact or an upper bound: parquet-footer counts, derived K, the
+# query-sample budget, a checkpointed micro-batch count), whose
+# product is the pass's distance-matrix cells:
 #
-# * parallelize by COMPUTE, one slice per `_KERNEL_FILL_CELLS`
-#   distance-matrix cells (rows × K), capped at the core count —
-#   measured optimum across a {1..128}-slice sweep at sf0.1 AND sf1
-#   (OPTIMIZATION_r17.md): heavy kernels (PQ8: 256 codes) fill the
-#   cores, light ones (PQ4 at 2k rows: 32k cells) run 1-4 slices
-#   because task+Arrow overhead beats the parallel gain below that;
-# * when the caller knows rows but not K, fill by
-#   `_KERNEL_FILL_ROWS` instead (same sweep, assign-kernel row);
+# * parallelize by COMPUTE, one slice per `_KERNEL_FILL_CELLS` cells,
+#   capped at the core count — measured optimum across a
+#   {1..128}-slice sweep at sf0.1 AND sf1 (OPTIMIZATION_r17.md): heavy
+#   kernels (PQ8: 256 codes) fill the cores, light ones (PQ4 at 2k
+#   rows: 32k cells) run 1-4 slices because task+Arrow overhead beats
+#   the parallel gain below that;
 # * grow PAST the core count only when a slice would otherwise
 #   exceed `_KERNEL_SLICE_ROWS` rows (Arrow batch bound) or
 #   `_KERNEL_MAX_SLICE_CELLS` cells (~256 MB of float64 — the §5
 #   per-task state bound; at 10^9 rows × K=√n this is what forces
 #   ~10^6 slices instead of 64 OOM-sized ones).
-#
-# Callers that cannot size their input (unbounded streaming
-# micro-batches) keep the legacy 64.
 _KERNEL_SLICE_ROWS = 8_192
 _KERNEL_MAX_SLICE_CELLS = 32_000_000
 _KERNEL_FILL_CELLS = 32_768
-_KERNEL_FILL_ROWS = 1_024
-_KERNEL_DEFAULT_SLICES = 64
 
 
-def _kernel_slices(
-    n_rows: int | None,
-    row_cells: int | None = None,
-    cores: int | None = None,
-) -> int:
-    """Slice count for a cogrouped corpus×(centroids|codebook) kernel
-    pass: ``n_rows`` input rows, ``row_cells`` = rows × K when the
-    caller knows K (sizes the compute fill and bounds the per-slice
-    distance matrix), ``cores`` the session's defaultParallelism.
-    Returns the legacy 64 when the caller cannot size the input."""
+def _kernel_slices(n_rows: int, k: int, cores: int) -> int:
+    """Slice count for one cogrouped corpus×(centroids|codebook) kernel
+    pass over ``n_rows`` input rows and ``k`` table rows on ``cores``
+    (the session's defaultParallelism)."""
     import math
 
-    if n_rows is None:
-        return _KERNEL_DEFAULT_SLICES
+    cells = n_rows * k
     # hard lower bounds: Arrow batch size and per-slice matrix memory
     need = max(
         math.ceil(n_rows / _KERNEL_SLICE_ROWS),
-        math.ceil((row_cells or 0) / _KERNEL_MAX_SLICE_CELLS),
+        math.ceil(cells / _KERNEL_MAX_SLICE_CELLS),
     )
     # fill the cores in proportion to the compute on the table
-    if row_cells is not None:
-        fill = min(cores or 1, math.ceil(row_cells / _KERNEL_FILL_CELLS))
-    else:
-        fill = min(cores or 1, math.ceil(n_rows / _KERNEL_FILL_ROWS))
+    fill = min(cores, math.ceil(cells / _KERNEL_FILL_CELLS))
     return max(1, need, fill)
+
+
+def _cogroup_kernel(
+    label: str,
+    vecs: DataFrame,
+    table: DataFrame,
+    body,
+    schema: str,
+    *,
+    n_rows: int,
+    k: int,
+) -> DataFrame:
+    """The one cogrouped-pandas harness behind `_assign_blas`,
+    `_assign_partials` and `_pq_encode`: ``vecs`` (carrying
+    ``vec_id``) hash-splits into `_kernel_slices` slices on
+    pmod(xxhash64(vec_id)), the K-row ``table`` replicates to every
+    slice key (K × slices tiny rows — no corpus-scale skew or
+    shuffle of the small side), and ``body(vpdf, tpdf)`` runs once per
+    slice with every ``vecs`` column plus the slice key ``pk``. A slice
+    with no vectors returns no rows; vectors cogrouped with an EMPTY
+    table raise (nothing to assign them to — a silent empty assign
+    would index-align to NaN and break the bigint schema)."""
+    import pandas as pd
+
+    spark = vecs.sparkSession
+    n_parts = _kernel_slices(n_rows, k, spark.sparkContext.defaultParallelism)
+    v = vecs.select(
+        F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)).alias("pk"), *vecs.columns
+    )
+    t = table.crossJoin(
+        F.broadcast(spark.range(n_parts).select(F.col("id").alias("pk")))
+    )
+
+    def run(key, vpdf, tpdf):
+        if len(vpdf) == 0:
+            return pd.DataFrame()
+        if len(tpdf) == 0:
+            raise ValueError(
+                f"{label}: non-empty vector slice cogrouped with an empty "
+                "centroid/codebook table (K=0) — nothing to assign to"
+            )
+        return body(vpdf, tpdf)
+
+    return v.groupBy("pk").cogroup(t.groupBy("pk")).applyInPandas(run, schema)
+
+
+def _centroid_l2():
+    """``l2(X, cpdf) -> (cids, d)``: cent_id-sorted centroid ids and
+    the float64 squared-L2 matrix ||x||^2 - 2xC' + ||c||^2 of rows X
+    against a (cent_id, cemb) slice table. Every quantized product and
+    partial sum stays far below 2^53, so the distances are EXACT
+    integers, and the first argmin over the cent_id-sorted columns is
+    the (dist, cent_id) tie-break. Built by a factory so the kernels'
+    closures ship it by value to Python workers."""
+    import numpy as np
+
+    def l2(X, cpdf):
+        corder = np.argsort(cpdf["cent_id"].to_numpy())
+        cids = cpdf["cent_id"].to_numpy(dtype=np.int64)[corder]
+        C = np.array(cpdf["cemb"].to_numpy()[corder].tolist(), dtype=np.float64)
+        d = (
+            (X * X).sum(axis=1)[:, None]
+            - 2.0 * (X @ C.T)
+            + (C * C).sum(axis=1)[None, :]
+        )
+        return cids, d
+
+    return l2
 
 
 def _assign_jvm(
@@ -1588,20 +1646,28 @@ def _assign_jvm(
     are exact integers in both kernels and the tie-break is identical,
     so outputs are bit-identical (A/B'd exceptAll-empty both ways at
     sf0.1). Cost is |rows|·K·dims interpreted lambda evals (HOFs are
-    not codegen'd) — callers route by `_ASSIGN_JVM_MAX_ROW_CELLS`.
+    not codegen'd) — `_assign_blas` routes here by `_assign_in_jvm`.
     ``out_cols`` mirrors `_assign_blas`'s passthrough subset."""
     cols = out_cols if out_cols is not None else vecs.columns
     scored = vecs.crossJoin(F.broadcast(_cent_array(cents)))
+    # K=0 raises like the kernel instead of a null cent_id (top_m=1)
+    # or a silently dropped row (top_m>1)
+    cs = F.when(F.size("cs") > 0, F.col("cs")).otherwise(
+        F.raise_error(
+            F.lit(
+                "_assign_jvm: vectors assigned against an empty centroid "
+                "table (K=0) — nothing to assign to"
+            )
+        )
+    )
     if top_m == 1:
         return scored.select(
             *cols,
-            F.array_min(_cell_scores(F.col("qemb"), F.col("cs")))[
+            F.array_min(_cell_scores(F.col("qemb"), cs))["cent_id"].alias(
                 "cent_id"
-            ].alias("cent_id"),
+            ),
         )
-    ranked = F.slice(
-        F.array_sort(_cell_scores(F.col("qemb"), F.col("cs"))), 1, top_m
-    )
+    ranked = F.slice(F.array_sort(_cell_scores(F.col("qemb"), cs)), 1, top_m)
     return scored.select(
         *cols, F.posexplode(ranked).alias("_pos", "_s")
     ).select(
@@ -1615,96 +1681,64 @@ def _assign_blas(
     vecs: DataFrame,
     cents: DataFrame,
     top_m: int = 1,
-    row_cells: int | None = None,
     out_cols: list[str] | None = None,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
+    k: int,
 ) -> DataFrame:
     """Lloyd/IVF assignment on the BLAS path: appends ``cent_id`` (the
     nearest centroid by integer squared-L2, ties to lowest cent_id) to
     every input row, computing distances as one vectorized
-    ||x||^2 - 2xC' + ||c||^2 per corpus slice inside a cogrouped-pandas
-    kernel instead of K x EMBED_DIMS interpreted HOF lambda
-    evaluations per row (HOFs are not codegen'd; measured ~20x at sf10
-    on the Lloyd loop). Exactness is preserved: every quantized product
-    and partial sum stays far below 2^53, so the float64 distances are
-    EXACT integers, and argmin over centroids pre-sorted by cent_id
-    reproduces the (dist, cent_id) tie-break bit-for-bit.
+    ||x||^2 - 2xC' + ||c||^2 per corpus slice (`_centroid_l2`) inside
+    the cogrouped-pandas harness (`_cogroup_kernel`) instead of
+    K x EMBED_DIMS interpreted HOF lambda evaluations per row (HOFs
+    are not codegen'd; measured ~20x at sf10 on the Lloyd loop). The
+    float64 distances are exact integers, so the argmin reproduces the
+    (dist, cent_id) tie-break bit-for-bit.
 
-    ``vecs`` must carry ``vec_id`` and ``qemb``; every input column
-    passes through. Scale: corpus slices hash-partition by vec_id; the
-    K-row centroid table replicates to every slice key (K x slices tiny
-    rows), so each task gets (slice, all centroids) — no corpus-scale
-    skew, one Arrow round-trip of the vectors.
+    ``vecs`` must carry ``vec_id`` and ``qemb``. Scale: corpus slices
+    hash-partition by vec_id and the K-row centroid table replicates
+    to every slice, so each task gets (slice, all centroids) — no
+    corpus-scale skew, one Arrow round-trip of the vectors.
 
     ``top_m > 1`` returns the m nearest cells per vector (one row per
     (vector, rank), plus a ``cent_rank`` column, rank 1 = nearest) —
     the multi-assignment SemDeDup needs to catch near-dup pairs that
     straddle a cell boundary. Ordering stays the exact (dist, cent_id)
-    tie-break: distances are exact integers and the stable argsort
-    over cent_id-ascending columns reproduces ROW_NUMBER ORDER BY
-    dist, cent_id bit-for-bit.
+    tie-break: the stable argsort over cent_id-ascending columns
+    reproduces ROW_NUMBER ORDER BY dist, cent_id bit-for-bit.
 
-    ``row_cells`` (rows × centroids, when the caller has both at hand
-    from parquet footers / derived K) routes small problems to the
+    ``n_rows`` (input rows, or a bound) and ``k`` (centroid rows, or a
+    bound) size the pass: small ones (`_assign_in_jvm`) run the
     all-JVM projection twin — identical integers, no Python boundary
     (round-16, guide §4.4: don't pay a fixed Arrow round-trip to save
-    interpreted work smaller than the round-trip).
+    interpreted work smaller than the round-trip) — and the rest run
+    the kernel in `_kernel_slices` slices.
 
     ``out_cols`` names the input columns to CARRY THROUGH (default:
     all). Consumers that drop ``qemb`` right after assignment should
     say so here — the 8·dims bytes/row then never cross the Arrow
     boundary on the way back (guide §4.2: move only the columns the
     kernel's consumers need; top_m>1 would otherwise return them
-    top_m times).
-
-    ``n_rows`` (the input rowcount, when the caller has it from
-    parquet footers / a sample bound) sizes the slice count via
-    `_kernel_slices` instead of the legacy fixed 64."""
-    if row_cells is not None and row_cells <= _ASSIGN_JVM_MAX_ROW_CELLS:
+    top_m times)."""
+    if _assign_in_jvm(n_rows, k):
         return _assign_jvm(vecs, cents, top_m=top_m, out_cols=out_cols)
     import numpy as np
     import pandas as pd
 
-    n_parts = _kernel_slices(
-        n_rows, row_cells, vecs.sparkSession.sparkContext.defaultParallelism
-    )
-    in_cols = [f.name for f in vecs.schema.fields]
     if out_cols is None:
-        out_cols = in_cols
+        out_cols = vecs.columns
     by_name = {f.name: f for f in vecs.schema.fields}
     out_schema = ", ".join(
         f"{c} {by_name[c].dataType.simpleString()}" for c in out_cols
     ) + ", cent_id bigint"
     if top_m > 1:
         out_schema += ", cent_rank int"
+    l2 = _centroid_l2()
 
-    def assign(key, vpdf, cpdf):
-        qemb_in = vpdf["qemb"]
+    def assign(vpdf, cpdf):
+        cids, d = l2(np.array(vpdf["qemb"].tolist(), dtype=np.float64), cpdf)
         vpdf = vpdf[out_cols]
-        if len(vpdf) == 0:
-            out = vpdf.assign(cent_id=pd.Series([], dtype="int64"))
-            if top_m > 1:
-                out = out.assign(cent_rank=pd.Series([], dtype="int32"))
-            return out
-        if len(cpdf) == 0:
-            # Vectors with no centroid table have no nearest cell; a
-            # silent empty-Series assign would index-align to NaN and
-            # break the bigint schema — fail loudly instead.
-            raise ValueError(
-                "_assign_blas: non-empty vector slice cogrouped with an "
-                "empty centroid table (K=0) — nothing to assign to"
-            )
-        corder = np.argsort(cpdf["cent_id"].to_numpy())
-        cids = cpdf["cent_id"].to_numpy(dtype=np.int64)[corder]
-        C = np.array(
-            cpdf["cemb"].to_numpy()[corder].tolist(), dtype=np.float64
-        )
-        X = np.array(qemb_in.tolist(), dtype=np.float64)
-        d = (
-            (X * X).sum(axis=1)[:, None]
-            - 2.0 * (X @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )
         if top_m == 1:
             best = cids[np.argmin(d, axis=1)]  # first min = lowest cent_id
             return vpdf.assign(cent_id=best)
@@ -1713,31 +1747,26 @@ def _assign_blas(
         order = np.argsort(d, axis=1, kind="stable")[:, :m]
         reps = np.repeat(np.arange(len(vpdf)), m)
         out = vpdf.iloc[reps].reset_index(drop=True)
-        out = out.assign(
+        return out.assign(
             cent_id=cids[order.ravel()],
             cent_rank=pd.Series(
                 np.tile(np.arange(1, m + 1), len(vpdf)), dtype="int32"
             ),
         )
-        return out
 
-    spark = vecs.sparkSession
-    v = vecs.withColumn("pk", F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)))
-    c = cents.select("cent_id", "cemb").crossJoin(
-        F.broadcast(spark.range(n_parts).select(F.col("id").alias("pk")))
-    )
-    return (
-        v.groupBy("pk")
-        .cogroup(c.groupBy("pk"))
-        .applyInPandas(assign, out_schema)
+    return _cogroup_kernel(
+        "_assign_blas",
+        vecs,
+        cents.select("cent_id", "cemb"),
+        assign,
+        out_schema,
+        n_rows=n_rows,
+        k=k,
     )
 
 
 def _assign_partials(
-    vecs: DataFrame,
-    cents: DataFrame,
-    n_rows: int | None = None,
-    row_cells: int | None = None,
+    vecs: DataFrame, cents: DataFrame, *, n_rows: int, k: int
 ) -> DataFrame:
     """Fused Lloyd assign + per-cell PARTIAL re-centering (round-16,
     guide §2.3 "aggregate before you shuffle"): the same exact-integer
@@ -1752,44 +1781,18 @@ def _assign_partials(
     cell COUNTS (the induced-assignment histogram) sum ``n`` and ignore
     ``s`` — the kernel-side sums cost one bincount/add.at per batch,
     nothing crosses the boundary per corpus row either way.
-    ``n_rows``/``row_cells`` size the slice count (`_kernel_slices`)."""
+    ``n_rows``/``k`` size the slice count (`_kernel_slices`)."""
     import numpy as np
     import pandas as pd
 
-    n_parts = _kernel_slices(
-        n_rows, row_cells, vecs.sparkSession.sparkContext.defaultParallelism
-    )
+    l2 = _centroid_l2()
 
-    def recenter(key, vpdf, cpdf):
-        if len(vpdf) == 0:
-            return pd.DataFrame(
-                {
-                    "cent_id": pd.Series([], dtype="int64"),
-                    "n": pd.Series([], dtype="int64"),
-                    "s": pd.Series([], dtype=object),
-                }
-            )
-        if len(cpdf) == 0:
-            raise ValueError(
-                "_assign_partials: non-empty vector slice cogrouped with "
-                "an empty centroid table (K=0) — nothing to assign to"
-            )
-        corder = np.argsort(cpdf["cent_id"].to_numpy())
-        cids = cpdf["cent_id"].to_numpy(dtype=np.int64)[corder]
-        C = np.array(
-            cpdf["cemb"].to_numpy()[corder].tolist(), dtype=np.float64
-        )
+    def recenter(vpdf, cpdf):
         Xi = np.array(vpdf["qemb"].tolist(), dtype=np.int64)
-        X = Xi.astype(np.float64)
-        d = (
-            (X * X).sum(axis=1)[:, None]
-            - 2.0 * (X @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )
+        cids, d = l2(Xi.astype(np.float64), cpdf)
         best = np.argmin(d, axis=1)  # first min = lowest cent_id
-        k = len(cids)
-        counts = np.bincount(best, minlength=k)
-        sums = np.zeros((k, Xi.shape[1]), dtype=np.int64)
+        counts = np.bincount(best, minlength=len(cids))
+        sums = np.zeros((len(cids), Xi.shape[1]), dtype=np.int64)
         np.add.at(sums, best, Xi)
         nz = np.nonzero(counts)[0]
         return pd.DataFrame(
@@ -1800,35 +1803,27 @@ def _assign_partials(
             }
         )
 
-    spark = vecs.sparkSession
-    v = vecs.select(
-        F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)).alias("pk"), "qemb"
+    return _cogroup_kernel(
+        "_assign_partials",
+        vecs.select("vec_id", "qemb"),
+        cents.select("cent_id", "cemb"),
+        recenter,
+        "cent_id bigint, n bigint, s array<bigint>",
+        n_rows=n_rows,
+        k=k,
     )
-    c = cents.select("cent_id", "cemb").crossJoin(
-        F.broadcast(spark.range(n_parts).select(F.col("id").alias("pk")))
-    )
-    return (
-        v.groupBy("pk")
-        .cogroup(c.groupBy("pk"))
-        .applyInPandas(recenter, "cent_id bigint, n bigint, s array<bigint>")
-    )
-
-
-# JVM probe assignment is exact for any K; the routing threshold only
-# bounds the interpreted-HOF cost of a probe (|sample|·K·dims lambda
-# evals) before the cogrouped BLAS kernel amortizes better. K = ⌈√n⌉
-# crosses it near n ≈ 1.7e7 vectors — past the point SCALE.md moves
-# serving to the persisted partition-pruned index anyway.
-_PROBE_JVM_MAX_K = 4096
 
 
 def _probe_ranks(
-    sample: DataFrame, cents: DataFrame, top_m: int = 1, k: int | None = None
+    sample: DataFrame, cents: DataFrame, top_m: int = 1, *, k: int
 ) -> DataFrame:
-    """Cell assignment for a SAMPLE-sized frame (the fixed ≤40-row
-    query budget): the same (dist, cent_id) argmin/argsort as
-    `_assign_blas`, evaluated as a pure JVM projection against the
-    ONE-ROW broadcast centroid array — no shuffle, no Python pass.
+    """Cell assignment for a SAMPLE-sized frame (the fixed
+    ≤`_QUERY_SAMPLE_MAX_ROWS`-row query budget) against ``k``
+    centroid rows (or a bound): `_assign_blas` sized at the sample
+    budget, so below the one crossover (`_assign_in_jvm`, K ≤ 50k at
+    the 40-row budget) it is a pure JVM projection against the
+    ONE-ROW broadcast centroid array — no shuffle, no Python pass —
+    and past it the cogrouped BLAS kernel.
 
     Round-16 optimization (guide §2.4/§4): every serving query used to
     run the full cogrouped-pandas machinery (two exchanges + an Arrow
@@ -1836,30 +1831,15 @@ def _probe_ranks(
     rows; several consumed the corpus-wide ``a2`` twice (probe side +
     broadcast side), re-executing a corpus-scale Python pass per
     serve. Probe-side work is now O(|sample|·K·dims) inside one
-    projection at ANY corpus size, and the corpus assignment has a
-    single consumer. Distances are exact integers in both kernels and
-    the tie-break is (dist, cent_id) in both, so outputs are
-    bit-identical (oracle-pinned per query).
-
-    ``k`` (when the caller has the derived K at hand) routes corpora
-    past `_PROBE_JVM_MAX_K` back to the BLAS kernel; callers that do
-    not pass it are covered by the ``_wikid_k`` attribute the index
-    builders pin on their K-row centroid frames (lloyd_train's final
-    cell count, `_centroids`' limit, the persisted-handle load) —
-    ADVICE r16: most serving sites omitted ``k``, so the documented
-    fallback could never fire and probe cost grew as interpreted
-    |sample|·K·dims HOF evals past K ≈ 4096. Output schema matches
-    `_assign_blas`: every input column plus ``cent_id`` (and
-    ``cent_rank`` when ``top_m > 1``)."""
-    if k is None:
-        k = getattr(cents, "_wikid_k", None)
-    if k is not None and k > _PROBE_JVM_MAX_K:
-        # the probe sample is bounded by the fixed query budget
-        # (`_QUERY_SAMPLE_SQL`) — one kernel slice, not 64
-        return _assign_blas(
-            sample, cents, top_m=top_m, n_rows=_QUERY_SAMPLE_MAX_ROWS
-        )
-    return _assign_jvm(sample, cents, top_m=top_m)
+    projection, and the corpus assignment has a single consumer.
+    Distances are exact integers in both branches and the tie-break
+    is (dist, cent_id) in both, so outputs are bit-identical
+    (oracle-pinned per query). Output schema matches `_assign_blas`:
+    every input column plus ``cent_id`` (and ``cent_rank`` when
+    ``top_m > 1``)."""
+    return _assign_blas(
+        sample, cents, top_m=top_m, n_rows=_QUERY_SAMPLE_MAX_ROWS, k=k
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1885,17 +1865,17 @@ def lloyd_train(
     tol: int = 0,
     pad_trace: bool = False,
     dims: int = EMBED_DIMS,
-    row_cells: int | None = None,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ):
     """Run Lloyd rounds until the max integer centroid shift is <= tol
     with no cell dropped, or ``max_rounds``. Returns (final centroid
     DataFrame (cent_id, cemb), trace rows [(round, n_cells, max_shift,
     total_shift), ...]). ``pad_trace`` replays the fixpoint row for
     the remaining rounds (only valid — and only done — when tol == 0,
-    where fixpoint means bit-identical later rounds). ``row_cells``/
-    ``n_rows`` route and slice each round's assignment exactly as in
-    `_lloyd_round`.
+    where fixpoint means bit-identical later rounds). ``n_rows`` (the
+    corpus rows, or a bound) and the loop's own exact cell count size
+    each round's `_lloyd_round`.
 
     Per-round action budget (round-17, guide §1.2): the convergence
     shift joins the K-row previous centroids INSIDE the round's
@@ -1927,7 +1907,7 @@ def lloyd_train(
             trace.append((rnd, *fixed))
             continue
         newc = (
-            _lloyd_round(vecs, cents, dims=dims, row_cells=row_cells, n_rows=n_rows)
+            _lloyd_round(vecs, cents, dims=dims, n_rows=n_rows, k=prev_k)
             .join(
                 F.broadcast(
                     cents.select("cent_id", F.col("cemb").alias("prev"))
@@ -1972,11 +1952,6 @@ def lloyd_train(
         # frees here.
         cents = cents.localCheckpoint(eager=True)
         _unpersist_checkpoint(prev_backing)
-    # Pin the exact final cell count on the returned K-row frame so
-    # `_probe_ranks` can route huge-K corpora to the BLAS kernel even
-    # when the serving call site doesn't thread K (ADVICE r16). Known
-    # from the trace — no extra job.
-    cents._wikid_k = prev_k
     return cents, trace
 
 
@@ -2078,7 +2053,6 @@ def sim_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         LLOYD_TRACE_ROUNDS,
         tol=0,
         pad_trace=True,
-        row_cells=n * N_CENTROIDS,
         n_rows=n,
     )
     # trace rows are plain tuples — the final centroid checkpoint is
@@ -2148,7 +2122,7 @@ def _ann_memo_release(grp: dict) -> None:
     subs x codes codebooks). The group's frames must not be served
     after this — localCheckpoint lineage is truncated, so the blocks
     are the only copy."""
-    frames = list(grp.get("trained") or ())
+    frames = list((grp.get("trained") or ())[:3])  # (qemb, cents, a2), K
     for tup in grp.get("residual", {}).values():
         frames.extend(tup)
     for df in frames:
@@ -2206,9 +2180,11 @@ def _drop_ann_memos() -> None:
 def _trained_index(spark: SparkSession, sf_dir: str):
     """Build the production index ONCE: derived-K seeds,
     TRAINED_DERIVED_ROUNDS Lloyd rounds, top-2 corpus assignment.
-    Returns (qemb, cents, a2) so every probe depth — and the recall
+    Returns (qemb, cents, a2, k) so every probe depth — and the recall
     report, which audits three depths — shares one training run
-    instead of re-training per method.
+    instead of re-training per method; ``k`` is the derived seed K,
+    which bounds the trained cell count (Lloyd only drops cells) and
+    sizes every probe.
 
     Memoized through `_ann_memo_group` (session + sf_dir key,
     fingerprint generation check, LRU bound, eviction unpersists):
@@ -2239,22 +2215,21 @@ def _trained_index(spark: SparkSession, sf_dir: str):
         _centroids(emb, k),
         max_rounds=TRAINED_DERIVED_ROUNDS,
         tol=0,
-        row_cells=n * k,
         n_rows=n,
     )
     a2 = _assign_blas(
         qemb,
         cents,
         top_m=2,
-        row_cells=n * k,
         out_cols=["vec_id", "embedding"],
         n_rows=n,
+        k=k,
     ).select("vec_id", "embedding", "cent_id", "cent_rank")
-    grp["trained"] = (qemb, cents, a2)
+    grp["trained"] = (qemb, cents, a2, k)
     return grp["trained"]
 
 
-def _trained_probe_topk(qemb, cents, a2, nprobe: int) -> DataFrame:
+def _trained_probe_topk(qemb, cents, a2, k: int, nprobe: int) -> DataFrame:
     """Serve top-3 from the trained top-2 index at probe depth
     ``nprobe``. nprobe=1 reads the probe cell off the index rows the
     corpus pass already produced; deeper probes rank the SAMPLE
@@ -2269,7 +2244,7 @@ def _trained_probe_topk(qemb, cents, a2, nprobe: int) -> DataFrame:
     # to push 40 rows through the cogrouped kernel's exchanges. The
     # nprobe=1 cell equals a2's cent_rank=1 row by construction (same
     # centroids, same exact-integer argmin).
-    probes = _probe_ranks(_sample_filter(qemb), cents, top_m=nprobe).select(
+    probes = _probe_ranks(_sample_filter(qemb), cents, top_m=nprobe, k=k).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
@@ -2298,7 +2273,7 @@ def _trained_probe_topk(qemb, cents, a2, nprobe: int) -> DataFrame:
 
 
 def _trained_probe_topk_multi(
-    qemb: DataFrame, cents: DataFrame, a2: DataFrame, nprobes=(1, 2, 4)
+    qemb: DataFrame, cents: DataFrame, a2: DataFrame, k: int, nprobes=(1, 2, 4)
 ) -> dict[int, DataFrame]:
     """All probe depths served from ONE shared corpus candidate pass
     (round-11 recall-report cost bound): the sample ranks once against
@@ -2313,7 +2288,7 @@ def _trained_probe_topk_multi(
     the single-depth plan does. Only the recall report calls this —
     the registered per-depth queries keep their own certified plans."""
     probes = _probe_ranks(
-        _sample_filter(qemb), cents, top_m=max(nprobes)
+        _sample_filter(qemb), cents, top_m=max(nprobes), k=k
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -2533,15 +2508,17 @@ def _pq_encode(
     cb: DataFrame,
     with_dist: bool = False,
     spec: PQSpec = PQ4,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """Appends the packed PQ code word columns (``spec.cols``) to every
-    input row in ONE corpus pass: a cogrouped-pandas kernel computes
-    all spec.subs argmins per vector from a reshaped (subs, codes,
-    dims) codebook tensor — the `_assign_blas` discipline (corpus never
-    shuffles; the tiny codebook replicates to every slice). Distances
-    are exact integers in float64; np.argmin's first-minimum over
-    code_id-sorted codewords reproduces the (dist, code_id) tie-break.
+    input row in ONE corpus pass: a kernel in the cogrouped harness
+    (`_cogroup_kernel`) computes all spec.subs argmins per vector from
+    per-sub codebook slices — the `_assign_blas` discipline (corpus
+    never shuffles; the tiny codebook replicates to every slice).
+    Distances are exact integers in float64; np.argmin's first-minimum
+    over code_id-sorted codewords reproduces the (dist, code_id)
+    tie-break.
 
     Packing accumulates in uint64 and reinterprets as int64: a
     multi-word spec's top byte can set the sign bit, and the uint64
@@ -2553,16 +2530,11 @@ def _pq_encode(
     the chosen sub-distances) — for the index-quality audit.
 
     ``vecs`` must carry ``vec_id`` and ``qemb``; all columns pass
-    through. ``n_rows`` (input rowcount, when known) sizes the slice
-    count — the per-sub distance matrix is rows × spec.codes cells."""
+    through. ``n_rows`` (input rows, or a bound) and ``k =
+    spec.codes`` size the slice count — the per-sub distance matrix
+    is rows × spec.codes cells."""
     import numpy as np
-    import pandas as pd
 
-    n_parts = _kernel_slices(
-        n_rows,
-        n_rows * spec.codes if n_rows is not None else None,
-        vecs.sparkSession.sparkContext.defaultParallelism,
-    )
     # Destructure the spec to plain ints/strings BEFORE the closure:
     # a PQSpec instance in the closure would pickle its class by
     # reference, which workers driven from a sys.path-injected repo
@@ -2581,20 +2553,8 @@ def _pq_encode(
     if with_dist:
         out_schema += ", pqdist bigint"
 
-    def encode(key, vpdf, cpdf):
+    def encode(vpdf, cpdf):
         vpdf = vpdf[out_cols]
-        if len(vpdf) == 0:
-            out = vpdf.assign(
-                **{c: pd.Series([], dtype="int64") for c in word_cols}
-            )
-            if with_dist:
-                out = out.assign(pqdist=pd.Series([], dtype="int64"))
-            return out
-        if len(cpdf) == 0:
-            raise ValueError(
-                "_pq_encode: non-empty vector slice cogrouped with an "
-                "empty codebook table — nothing to encode with"
-            )
         # Per-sub codebooks: Lloyd training can drop a cell in one
         # subspace but not another, so code counts vary by sub — slice
         # the codebook per sub instead of one uniform reshape.
@@ -2624,15 +2584,14 @@ def _pq_encode(
             out = out.assign(pqdist=dist)
         return out
 
-    spark = vecs.sparkSession
-    v = vecs.withColumn("pk", F.pmod(F.xxhash64("vec_id"), F.lit(n_parts)))
-    c = cb.select("sub", "code_id", "cw").crossJoin(
-        F.broadcast(spark.range(n_parts).select(F.col("id").alias("pk")))
-    )
-    return (
-        v.groupBy("pk")
-        .cogroup(c.groupBy("pk"))
-        .applyInPandas(encode, out_schema)
+    return _cogroup_kernel(
+        "_pq_encode",
+        vecs,
+        cb.select("sub", "code_id", "cw"),
+        encode,
+        out_schema,
+        n_rows=n_rows,
+        k=spec.codes,
     )
 
 
@@ -2661,7 +2620,8 @@ def _pq_lloyd_round(
     qemb_df: DataFrame,
     cb: DataFrame,
     spec: PQSpec = PQ4,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """One Lloyd re-centering of the PQ codebooks, ALL subspaces in a
     single corpus pass: encode under the current codebooks (the same
@@ -2706,7 +2666,8 @@ def _pq_train(
     cb0: DataFrame,
     rounds: int,
     spec: PQSpec = PQ4,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """``rounds`` Lloyd refinements of the seeded codebooks. The
     rounds form a LINEAR chain — round r's encode is the only consumer
@@ -2715,8 +2676,8 @@ def _pq_train(
     §1.2: same per-round encode passes, two fewer materialization
     barriers per trained family; the per-round checkpoints dated from
     the no-ReusedExchange finding, which only matters for
-    MULTI-consumer subtrees). ``n_rows`` threads the corpus rowcount
-    into each round's encode kernel for slice sizing."""
+    MULTI-consumer subtrees). ``n_rows`` (the corpus rows, or a
+    bound) sizes each round's encode kernel with ``k = spec.codes``."""
     cb = cb0
     for _ in range(rounds):
         cb = _pq_lloyd_round(qemb_df, cb, spec, n_rows=n_rows)
@@ -3383,16 +3344,15 @@ def _ivfpq_plan(
                 cents,
                 max_rounds=TRAINED_DERIVED_ROUNDS,
                 tol=0,
-                row_cells=n * k,
                 n_rows=n,
             )
     index = _assign_blas(
         _pq_encode(qemb, cb, n_rows=n),
         cents,
         top_m=2,
-        row_cells=n * k,
         out_cols=["vec_id", "pqcode"],
         n_rows=n,
+        k=k,
     ).select("vec_id", "cent_id", "pqcode")
 
     raw_sample = _sample_filter(
@@ -3983,7 +3943,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once per method row). Training is deterministic, so the report
     # is byte-identical to per-method builds — just ~half the build
     # passes (the round-9 verdict's shared-build item).
-    _, tcents, _ = trained
+    tcents = trained[1]
 
     def _ckpt_codes(parts):
         qemb_, cb_, codes_, sample_ = parts
@@ -4303,17 +4263,9 @@ def _residual_index(
             return got
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
-    qemb = emb.select(
-        "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
-    )
     if cents is None:
         cents = _trained_index(spark, sf_dir)[1]
-    a1 = _assign_blas(qemb, cents, top_m=1, n_rows=n)
-    rv = a1.join(F.broadcast(cents), "cent_id").select(
-        "vec_id",
-        "cent_id",
-        F.zip_with("qemb", "cemb", lambda a, b: a - b).alias("qemb"),
-    )
+    rv = _residual_vectors(spark, sf_dir, cents, k=derived_k(n))
     cb = _pq_train(
         rv.select("vec_id", "qemb"),
         _pq_seed_codebooks(rv, spec),
@@ -4354,7 +4306,13 @@ def _ivfpq_residual_plan(
             quantize_embedding(F.col("embedding")).alias("qemb"),
         )
     )
-    return _residual_serve(emb, cents, cb, rindex, raw_sample, nprobe, spec)
+    probes = _probe_ranks(
+        raw_sample.select("vec_id", "qemb"),
+        cents,
+        top_m=nprobe,
+        k=derived_k(corpus_rows(sf_dir, "embeddings")),
+    ).select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("pcell"))
+    return _residual_serve(emb, cents, cb, rindex, raw_sample, probes, spec)
 
 
 def _residual_serve(
@@ -4363,14 +4321,14 @@ def _residual_serve(
     cb: DataFrame,
     rindex: DataFrame,
     raw_sample: DataFrame,
-    nprobe: int,
+    probes: DataFrame,
     spec: PQSpec = PQ4,
-    probes: DataFrame | None = None,
     rerank_pushdown: bool = True,
 ) -> DataFrame:
-    """The residual IVFADC serving tail over an EXPLICIT index — the
-    shared plan of the in-plan queries (`_ivfpq_residual_plan`) and the
-    persisted-index serving path (`serve_persisted_topk`, which hands a
+    """The residual IVFADC serving tail over an EXPLICIT index and the
+    sample's (query_id, pcell) ``probes`` — the shared plan of the
+    in-plan queries (`_ivfpq_residual_plan`) and the persisted-index
+    serving path (`serve_persisted_topk`, which hands a
     partition-PRUNED ``rindex`` scan plus the probes that derived the
     pruning so the probe assignment isn't computed twice).
 
@@ -4382,12 +4340,6 @@ def _residual_serve(
     identical either way; ``False`` exists for plan-pin tests, which
     must target the un-checkpointed tail (an eager localCheckpoint
     removes everything upstream from the final executedPlan)."""
-    if probes is None:
-        probes = _probe_ranks(
-            raw_sample.select("vec_id", "qemb"), cents, top_m=nprobe
-        ).select(
-            F.col("vec_id").alias("query_id"), F.col("cent_id").alias("pcell")
-        )
     qres = (
         probes.join(
             F.broadcast(
@@ -4463,7 +4415,10 @@ def _residual_serve_multi(
         )
     )
     probes = _probe_ranks(
-        raw_sample.select("vec_id", "qemb"), cents, top_m=max(nprobes)
+        raw_sample.select("vec_id", "qemb"),
+        cents,
+        top_m=max(nprobes),
+        k=derived_k(corpus_rows(sf_dir, "embeddings")),
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("cent_id").alias("pcell"),
@@ -4867,7 +4822,7 @@ def persist_ann_index(
     # runs once per artifact, not once per downstream consumer.
     cents = cents.localCheckpoint(eager=True)
     cents.write.mode("overwrite").parquet(f"{out_dir}/centroids")
-    rv = _residual_vectors(spark, sf_dir, cents)
+    rv = _residual_vectors(spark, sf_dir, cents, k=k)
     cb = _pq_train(
         rv.select("vec_id", "qemb"), _pq_seed_codebooks(rv, spec),
         PQ_TRAIN_ROUNDS, spec, n_rows=n,
@@ -4928,6 +4883,7 @@ def persist_ann_index(
         top_m=2,
         out_cols=["vec_id", "embedding", "label"],
         n_rows=n,
+        k=k,
     ).select("vec_id", "embedding", "label", "cent_id", "cent_rank")
     (
         mindex.repartition("cent_id")
@@ -4960,17 +4916,18 @@ def persist_ann_index(
 
 
 def _residual_vectors(
-    spark: SparkSession, sf_dir: str, cents: DataFrame
+    spark: SparkSession, sf_dir: str, cents: DataFrame, *, k: int
 ) -> DataFrame:
     """(vec_id, cent_id, qemb): each corpus vector's quantized residual
     against its nearest (rank-1) centroid — the encode input of the
-    residual index, against an EXPLICIT centroid table."""
+    residual index, against an EXPLICIT ``k``-row (or fewer) centroid
+    table."""
     emb = table(spark, sf_dir, "embeddings")
     qemb = emb.select(
         "vec_id", quantize_embedding(F.col("embedding")).alias("qemb")
     )
     a1 = _assign_blas(
-        qemb, cents, top_m=1, n_rows=corpus_rows(sf_dir, "embeddings")
+        qemb, cents, n_rows=corpus_rows(sf_dir, "embeddings"), k=k
     )
     return a1.join(F.broadcast(cents), "cent_id").select(
         "vec_id",
@@ -4996,7 +4953,10 @@ def load_ann_index_spec(
 
 class AnnIndexHandle(NamedTuple):
     """Hold-open serving handle over one persisted index: the loaded
-    spec plus the three artifact DataFrames. The DataFrames pin their
+    spec, the three artifact DataFrames, and ``k`` — the derived K of
+    the build corpus (`stats.json`), which bounds the centroid rows
+    (Lloyd only drops cells) and sizes every probe without a Spark
+    job. The DataFrames pin their
     resolved FileIndex, so the parallel partition-listing job a fresh
     ``spark.read.parquet`` pays over the >32 cell directories (one
     task per dir — 448-task stages dominated the sf10 warm serve wall,
@@ -5010,6 +4970,7 @@ class AnnIndexHandle(NamedTuple):
     cents: DataFrame
     cb: DataFrame
     rindex: DataFrame
+    k: int
 
 
 _INDEX_HANDLE_CACHE: dict = {}
@@ -5063,11 +5024,8 @@ def load_ann_index(
         + ["cent_id bigint"]
     )
     rindex = spark.read.schema(rindex_schema).parquet(f"{index_dir}/rindex")
-    # Pin K for `_probe_ranks`' kernel routing (ADVICE r16): one
-    # metadata-only count over the K-row centroid parquet, paid once
-    # per handle load, never per serve.
-    cents._wikid_k = cents.count()
-    handle = AnnIndexHandle(spec, cents, cb, rindex)
+    k = derived_k(load_ann_index_stats(spark, index_dir)["n_vectors"])
+    handle = AnnIndexHandle(spec, cents, cb, rindex, k)
     _INDEX_HANDLE_CACHE[key] = handle
     while len(_INDEX_HANDLE_CACHE) > _INDEX_HANDLE_MAX:
         _INDEX_HANDLE_CACHE.pop(next(iter(_INDEX_HANDLE_CACHE)))
@@ -5097,7 +5055,7 @@ def serve_persisted_topk(
     per-serve partition-listing job is paid once per session, not per
     serve (round 12)."""
     handle = load_ann_index(spark, index_dir, spec)
-    spec, cents, cb, rindex = handle
+    spec, cents, cb, rindex, k = handle
     emb = table(spark, sf_dir, "embeddings")
     raw_sample = _sample_filter(
         emb.select(
@@ -5107,7 +5065,9 @@ def serve_persisted_topk(
         )
     )
     probes = (
-        _probe_ranks(raw_sample.select("vec_id", "qemb"), cents, top_m=nprobe)
+        _probe_ranks(
+            raw_sample.select("vec_id", "qemb"), cents, top_m=nprobe, k=k
+        )
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("cent_id").alias("pcell"),
@@ -5125,15 +5085,7 @@ def serve_persisted_topk(
             "left_semi",
         )
     return _residual_serve(
-        emb,
-        cents,
-        cb,
-        rindex,
-        raw_sample,
-        nprobe,
-        spec,
-        probes=probes,
-        rerank_pushdown=True,
+        emb, cents, cb, rindex, raw_sample, probes, spec, rerank_pushdown=True
     )
 
 
@@ -5209,7 +5161,7 @@ def measure_index_distortion(
     is dimensionless drift. One corpus encode pass (the nightly-audit
     cost, same as sim_pq_index_stats per variant)."""
     handle = load_ann_index(spark, index_dir)
-    rv = _residual_vectors(spark, sf_dir, handle.cents)
+    rv = _residual_vectors(spark, sf_dir, handle.cents, k=handle.k)
     row = (
         _pq_encode(
             rv,
@@ -6186,8 +6138,8 @@ def sim_mmr_ann_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall ceiling it trades away); everything after the pool cut is
     anchor-budget-bounded exactly as `sim_mmr_multi` — pairwise sims
     distributed over anchors x 20 rows, greedy driver-side."""
-    qemb, cents, a2 = _trained_index(spark, sf_dir)
-    probes = _probe_ranks(_sample_filter(qemb), cents, top_m=2).select(
+    qemb, cents, a2, k = _trained_index(spark, sf_dir)
+    probes = _probe_ranks(_sample_filter(qemb), cents, top_m=2, k=k).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
@@ -6286,7 +6238,7 @@ def sim_mmr_ann_multi_persisted(
         quantize_embedding(F.col("embedding")).alias("qemb"),
     )
     probes = (
-        _probe_ranks(sample, handle.cents, top_m=2)
+        _probe_ranks(sample, handle.cents, top_m=2, k=handle.k)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),
@@ -6418,7 +6370,7 @@ def sim_hard_negatives_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute columns do in sim_ivfpq8_serve_persisted's layout). The
     approximation cost is quantified in sim_recall_report's
     hard_neg_ann row against the exact miner."""
-    _, cents, _ = _trained_index(spark, sf_dir)
+    _, cents, _, k = _trained_index(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     n = corpus_rows(sf_dir, "embeddings")
     embl = emb.select(
@@ -6431,13 +6383,13 @@ def sim_hard_negatives_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         embl,
         cents,
         top_m=2,
-        row_cells=n * derived_k(n),
         out_cols=["vec_id", "embedding", "label"],
         n_rows=n,
+        k=k,
     ).select(
         "vec_id", "embedding", "label", "cent_id"
     )
-    probes = _probe_ranks(_sample_filter(embl), cents, top_m=4).select(
+    probes = _probe_ranks(_sample_filter(embl), cents, top_m=4, k=k).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("label").alias("qlabel"),
@@ -6518,7 +6470,7 @@ def sim_hard_negatives_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     probes = (
-        _probe_ranks(sample, handle.cents, top_m=4)
+        _probe_ranks(sample, handle.cents, top_m=4, k=handle.k)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qe"),

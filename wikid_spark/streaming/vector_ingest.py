@@ -43,6 +43,7 @@ assignment kernel; nothing corpus-scale ever shuffles.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -71,25 +72,42 @@ def _qemb(vectors: DataFrame) -> DataFrame:
     )
 
 
-def _assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+def _assign_cells(
+    vectors: DataFrame, centroids: DataFrame, *, n_rows: int, k: int
+) -> DataFrame:
     """(vec_id, embedding, cent_id): top-2 cells per vector against an
     explicit centroid table — the batch-side assignment against the
-    index's FROZEN centroids."""
+    index's FROZEN centroids, sized by ``n_rows`` vectors (or a bound)
+    and ``k`` centroid rows (or a bound)."""
     return _assign_blas(
         _qemb(vectors),
         centroids,
         top_m=2,
         out_cols=["vec_id", "embedding"],
+        n_rows=n_rows,
+        k=k,
     ).select("vec_id", "embedding", "cent_id")
 
 
-def _sign_cells(vectors: DataFrame, index_dir: str) -> dict:
+def _batch_sizing(batch: DataFrame, index_dir: str) -> dict:
+    """Kernel sizing for one micro-batch: one count of the batch (the
+    writer checkpoints it eagerly first; the count also bounds its kept
+    subset) and the row count of the frozen K-row centroid table."""
+    cents = batch.sparkSession.read.parquet(f"{index_dir}/centroids")
+    return {"n_rows": batch.count(), "k": cents.count()}
+
+
+def _sign_cells(
+    vectors: DataFrame, index_dir: str, *, n_rows: int, k: int
+) -> dict:
     """The vector index's `sign` kernel for the shared evolving-index
-    engine: top-2 cell assignments against the index's FROZEN centroid
-    table (read back from the index dir, never re-derived per batch),
-    cell-partitioned so probes directory-prune on cent_id."""
+    engine, with its sizing bound by the caller: top-2 cell
+    assignments against the index's FROZEN centroid table (read back
+    from the index dir, never re-derived per batch), cell-partitioned
+    so probes directory-prune on cent_id."""
     cents = vectors.sparkSession.read.parquet(f"{index_dir}/centroids")
-    return {"cells": (_assign_cells(vectors, cents), ("cent_id",))}
+    cells = _assign_cells(vectors, cents, n_rows=n_rows, k=k)
+    return {"cells": (cells, ("cent_id",))}
 
 
 def persist_vector_index(
@@ -123,7 +141,8 @@ def persist_vector_index(
             n_rows=n,
         )
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    _engine.persist_index(_sign_cells, vectors, index_dir)
+    # n and K bound the (possibly Lloyd-shrunk) table: no second count
+    _engine.persist_index(partial(_sign_cells, n_rows=n, k=k), vectors, index_dir)
 
 
 def _read_cells(
@@ -145,8 +164,14 @@ def vector_batch_verdicts(
     that vector's (rounded) cosine. The index scan is pruned to the
     batch's touched cells (cent_id IN-pushdown on the directory
     partitioning — batch-bounded, corpus-independent)."""
+    sizing = _batch_sizing(batch, index_dir)
+    return _cell_verdicts(spark, batch, index_dir, as_of_batch, threshold, sizing)
+
+
+def _cell_verdicts(spark, batch, index_dir, as_of_batch, threshold, sizing):
+    """`vector_batch_verdicts` with the batch's `_batch_sizing`."""
     cents = spark.read.parquet(f"{index_dir}/centroids")
-    assigned = _assign_cells(batch, cents).localCheckpoint(eager=True)
+    assigned = _assign_cells(batch, cents, **sizing).localCheckpoint(eager=True)
     # Touched-cell set is ≤ 2·|batch| ids, but a huge micro-batch (or
     # a replay over a fat window) must not inline an unbounded literal
     # list into the plan: mirror dedup_ingest's CAND_PUSHDOWN_MAX_IDS
@@ -214,9 +239,8 @@ def append_kept_to_vector_index(
     partition — overwrite mode, so a replayed batch rewrites its own
     appends byte-identically instead of duplicating them. Assignment
     uses the index's frozen centroids (read back, not re-derived)."""
-    _engine.append_kept(
-        _sign_cells, batch, kept_ids, "vec_id", index_dir, batch_id
-    )
+    sign = partial(_sign_cells, **_batch_sizing(batch, index_dir))
+    _engine.append_kept(sign, batch, kept_ids, "vec_id", index_dir, batch_id)
 
 
 def vector_verdict_batch_writer(
@@ -226,13 +250,23 @@ def vector_verdict_batch_writer(
     state ``batch_id < n`` (replay-deterministic), then the kept
     vectors' assignments appended under ``batch_id = n``.
     ``checkpoint_batch``: the batch feeds both the probe and the
-    append-side re-assignment, so it is eagerly materialized once."""
+    append-side re-assignment, so it is eagerly materialized once, and
+    the probe's one count of it sizes the append of its kept subset
+    too."""
+    sizing: dict = {}  # each batch's probe sizes it; its append reuses it
+
+    def probe(spark, batch, index_dir, as_of_batch):
+        sizing.update(_batch_sizing(batch, index_dir))
+        return _cell_verdicts(
+            spark, batch, index_dir, as_of_batch, COSINE_THRESHOLD, sizing
+        )
+
     return _engine.verdict_batch_writer(
         spark,
         index_dir,
         out_dir,
-        probe=vector_batch_verdicts,
-        sign=_sign_cells,
+        probe=probe,
+        sign=lambda kept, d: _sign_cells(kept, d, **sizing),
         id_col="vec_id",
         checkpoint_batch=True,
     )
