@@ -167,3 +167,48 @@ def test_kernel_slice_count_invariant(spark, monkeypatch, kernel):
     assert got[1] and got[1] == got[7] == got[64]
     if twin is not None:
         assert got[1] == rows(twin)
+
+
+# Slice counts follow defaultParallelism, so a trained query must give
+# the same rows on one core as on N. One JVM holds one SparkContext, so
+# the local[1] run is a subprocess (its own cwd: two sessions in one
+# cwd contend for the Derby metastore lock).
+_LOCAL1_RUN = """
+import json, sys
+from wikid_spark.oracle import canonical_rows
+from wikid_spark.registry import all_queries
+from wikid_spark.session import get_spark
+
+spark = get_spark(app_name="wikid_spark_local1")
+df = all_queries()[sys.argv[1]].fn(spark, sys.argv[2])
+rows = canonical_rows(df.columns, [tuple(r) for r in df.collect()])
+spark.stop()
+print(json.dumps(rows))
+"""
+
+
+def test_core_count_invariant(spark, tmp_path):
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from wikid_spark.oracle import canonical_rows
+
+    name = "sim_kmeans_converged"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, env.get("PYTHONPATH")) if p
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _LOCAL1_RUN, name, SF_SMALL],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    one_core = [tuple(r) for r in json.loads(out.stdout.strip().splitlines()[-1])]
+
+    df = all_queries()[name].fn(spark, SF_SMALL)
+    n_core = canonical_rows(df.columns, [tuple(r) for r in df.collect()])
+    assert spark.sparkContext.defaultParallelism > 1
+    assert one_core and one_core == n_core

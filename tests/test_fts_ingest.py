@@ -10,16 +10,33 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from wikid_spark.catalog import table
+from wikid_spark.operators import fts as O
 from wikid_spark.operators.fts import bm25_from_docs
 from wikid_spark.streaming import fts_ingest as FI
 
 SF = "/root/testdata/sf0.001"
 TERMS = ["spark", "vector"]
 CUTS = [300, 350, 420, 500]  # base = <300; three appended batches
+# Small enough to spread the base's postings over many buckets (the
+# shipped rule gives the sf0.001 base one bucket).
+MANY_BUCKETS_PER_BUCKET = 1 << 8
+
+
+def _persist_base(spark, idx, per_bucket=None):
+    """Build the base; with ``per_bucket`` the base sizes its buckets
+    under that rule, and everything after it runs under the shipped
+    one, so later writers and readers only agree with the base by
+    reading its recorded count."""
+    with pytest.MonkeyPatch.context() as mp:
+        if per_bucket is not None:
+            mp.setattr(O, "FTS_POSTINGS_PER_BUCKET", per_bucket)
+        FI.persist_streaming_fts_index(_docs(spark, hi=CUTS[0]), idx)
 
 
 def _docs(spark, lo=None, hi=None):
@@ -42,9 +59,14 @@ def _rebuild_scores(spark, hi):
     return _scores(bm25_from_docs(_docs(spark, hi=hi), "doc_id", "text", TERMS))
 
 
-def test_streamed_index_serves_equal_rebuild_per_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "per_bucket", [None, MANY_BUCKETS_PER_BUCKET], ids=["derived", "forced_many"]
+)
+def test_streamed_index_serves_equal_rebuild_per_batch(spark, tmp_path, per_bucket):
     idx = str(tmp_path / "fts_evolving")
-    FI.persist_streaming_fts_index(_docs(spark, hi=CUTS[0]), idx)
+    _persist_base(spark, idx, per_bucket)
+    n = O.fts_layout_buckets(spark, idx)
+    assert (n == 1) if per_bucket is None else (n > 1)
     w = FI.fts_index_batch_writer(spark, idx)
     for bid, (lo, hi) in enumerate(zip(CUTS, CUTS[1:])):
         # serve BEFORE the append: as_of_batch=bid sees batches < bid
@@ -52,9 +74,31 @@ def test_streamed_index_serves_equal_rebuild_per_batch(spark, tmp_path):
             FI.bm25_streaming(spark, idx, TERMS, as_of_batch=bid)
         ) == _rebuild_scores(spark, lo)
         w(_docs(spark, lo, hi), bid)
+        # the batch's postings land in the base's recorded buckets
+        batch = spark.read.schema(O._POSTINGS_SCHEMA).parquet(
+            f"{idx}/postings/batch_id={bid}"
+        )
+        assert batch.count() > 0
+        assert batch.filter(
+            F.col("tbucket") != O._term_bucket_col(F.col("term"), n)
+        ).count() == 0
+    assert O.fts_layout_buckets(spark, idx) == n
     assert _scores(FI.bm25_streaming(spark, idx, TERMS)) == _rebuild_scores(
         spark, CUTS[-1]
     )
+
+
+def test_missing_layout_raises_on_append_and_serve(spark, tmp_path):
+    idx = str(tmp_path / "fts_no_layout")
+    _persist_base(spark, idx)
+    os.remove(os.path.join(idx, "layout.json"))
+    path = re.escape(f"{idx}/layout.json")
+    with pytest.raises(ValueError, match=path):
+        FI.append_docs_to_fts_index(_docs(spark, CUTS[0], CUTS[1]), idx, 0)
+    with pytest.raises(ValueError, match=path):
+        FI.bm25_streaming(spark, idx, TERMS)
+    # the refused append wrote nothing
+    assert not glob.glob(os.path.join(idx, "*", "batch_id=0"))
 
 
 def test_replayed_append_is_idempotent(spark, tmp_path):
@@ -93,21 +137,27 @@ def test_compaction_preserves_serving_and_restores_layout(spark, tmp_path):
 
 
 def test_streamed_probe_is_bucket_pruned(spark, tmp_path):
-    import re
-
     idx = str(tmp_path / "fts_pruned")
-    FI.persist_streaming_fts_index(_docs(spark, hi=CUTS[0]), idx)
+    _persist_base(spark, idx, MANY_BUCKETS_PER_BUCKET)
     FI.append_docs_to_fts_index(_docs(spark, CUTS[0], CUTS[1]), idx, 0)
+    n = O.fts_layout_buckets(spark, idx)
+    expect = sorted({O._term_bucket_py(t, n) for t in TERMS})
     prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
-        probe = (
-            FI._read(spark, idx, "postings", None)
-            .filter(F.col("tbucket").isin([27, 45]))
-            .filter(F.col("term").isin(TERMS))
-        )
+        # the serve's own plan: it must prune with the recorded count
+        probe = FI.bm25_streaming(spark, idx, TERMS)
         plan = probe._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
-    m = re.search(r"PartitionFilters: \[tbucket#\d+ IN(?:SET)? \(?27,\s*45", plan)
-    assert m, plan[:4000]
+    found = re.findall(
+        r"PartitionFilters: \[tbucket#\d+ IN(?:SET)? \(?([0-9, ]+)", plan
+    )
+    # postings and termstats scans both carry the bucket filter
+    assert len(found) >= 2, plan[:4000]
+    for g in found:
+        assert sorted(int(x) for x in g.split(",")) == expect
+    total = len(glob.glob(
+        os.path.join(idx, "postings", "batch_id=-1", "tbucket=*")
+    ))
+    assert len(expect) < total

@@ -15,18 +15,68 @@ import os
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from wikid_spark.catalog import table
 from wikid_spark.operators import fts as O
 
 SF = "/root/testdata/sf0.001"
 TERMS = ["spark", "vector"]
+# Postings per bucket small enough to spread the sf0.001 corpus (~28k
+# postings, one bucket under the shipped rule) over ~110 buckets, so
+# the pruning tests have buckets to prune.
+MANY_BUCKETS_PER_BUCKET = 1 << 8
 
 
 def _build(spark, tmp_path):
     out = str(tmp_path / "fts_index")
     O.persist_fts_index(table(spark, SF, "documents"), "doc_id", "text", out)
     return out
+
+
+def _build_many(spark, tmp_path):
+    """A many-bucket index; the serve side then runs under the shipped
+    rule, so it can only prune right by reading the recorded count."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(O, "FTS_POSTINGS_PER_BUCKET", MANY_BUCKETS_PER_BUCKET)
+        return _build(spark, tmp_path)
+
+
+def _recorded_buckets(spark, out):
+    n = O.fts_layout_buckets(spark, out)
+    return {O._term_bucket_py(t, n) for t in TERMS}
+
+
+def test_fts_term_buckets_rule():
+    per = O.FTS_POSTINGS_PER_BUCKET
+    assert per == 1 << 22
+    assert O.fts_term_buckets(0) == 1
+    assert O.fts_term_buckets(1) == 1
+    assert O.fts_term_buckets(per) == 1
+    assert O.fts_term_buckets(per + 1) == 2
+    assert O.fts_term_buckets(int(2e13)) == O.FTS_MAX_TERM_BUCKETS == 65536
+
+
+def test_persisted_layout_records_derived_bucket_count(spark, tmp_path):
+    """The sf0.001 corpus is one bucket under the shipped rule; the
+    recorded count is what the build laid the directories out under."""
+    import json
+
+    out = _build(spark, tmp_path)
+    with open(os.path.join(out, "layout.json")) as f:
+        assert json.load(f) == {"term_buckets": 1}
+    assert O.fts_layout_buckets(spark, out) == 1
+    assert [os.path.basename(d) for d in
+            glob.glob(os.path.join(out, "postings", "tbucket=*"))] == ["tbucket=0"]
+
+
+def test_missing_layout_raises_on_serve(spark, tmp_path):
+    out = _build(spark, tmp_path)
+    os.remove(os.path.join(out, "layout.json"))
+    for probe in (O.bm25_persisted, O.fts_persisted_postings,
+                  O.fts_termstats, O.fts_impact_prefix):
+        with pytest.raises(ValueError, match=re.escape(f"{out}/layout.json")):
+            probe(spark, out, TERMS)
 
 
 def test_persist_writes_committed_artifacts(spark, tmp_path):
@@ -66,7 +116,7 @@ def test_persisted_scan_is_bucket_pruned(spark, tmp_path):
     PartitionFilter naming EXACTLY the query terms' buckets (directory
     pruning) and the term equality reaches PushedFilters (row-group
     pruning within the bucket via the build-time term sort)."""
-    out = _build(spark, tmp_path)
+    out = _build_many(spark, tmp_path)
     prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
@@ -78,10 +128,13 @@ def test_persisted_scan_is_bucket_pruned(spark, tmp_path):
         r"PartitionFilters: \[tbucket#\d+ IN(?:SET)? \(?([0-9, ]+)", plan
     )
     assert m, plan[:4000]
-    expect = {O._term_bucket_py(t) for t in TERMS}
+    expect = _recorded_buckets(spark, out)
     assert {int(x) for x in m.group(1).split(",")} == expect
     total = len(glob.glob(os.path.join(out, "postings", "tbucket=*")))
     assert len(expect) < total
+    # one file per bucket directory, at the many-bucket layout too
+    for d in glob.glob(os.path.join(out, "postings", "tbucket=*")):
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
     assert re.search(r"PushedFilters: \[.*In\(term", plan), plan[:4000]
 
 
@@ -258,7 +311,7 @@ def test_multi_anchor_persisted_equals_inplan(spark):
 def test_max_score_probe_scans_are_bucket_pruned(spark, tmp_path):
     """VERDICT r15 #2: PartitionFilters pinned on BOTH max-score index
     scans (termstats ub probe + topc floor-seed probe)."""
-    out = _build(spark, tmp_path)
+    out = _build_many(spark, tmp_path)
     prev = spark.conf.get("spark.sql.maxMetadataStringLength", "100")
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
@@ -271,7 +324,7 @@ def test_max_score_probe_scans_are_bucket_pruned(spark, tmp_path):
         }
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
-    expect = {O._term_bucket_py(t) for t in TERMS}
+    expect = _recorded_buckets(spark, out)
     for name, plan in plans.items():
         m = re.search(
             r"PartitionFilters: \[tbucket#\d+ IN(?:SET)? \(?([0-9, ]+)", plan

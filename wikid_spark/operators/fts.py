@@ -17,10 +17,13 @@ B-tree gives the reference on one node.
 
 from __future__ import annotations
 
+import json
 import unicodedata
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+
+from wikid_spark.fsutil import _fs_exists, _fs_read_text, _fs_write_text
 
 # Unicode-aware token split: like \W+ but keeping non-ASCII letters
 # and digits whole, so folded Greek/Cyrillic words survive tokenization
@@ -357,22 +360,39 @@ def bm25_from_docs(
 # directories.
 #
 # Layout <out_dir>/
+#   layout.json                {"term_buckets": n}, written first
 #   postings/ tbucket=<b>/...  (term, doc, pos, doc_len), term-sorted
-#   termstats/ tbucket=<b>/... (term, df)
+#   termstats/ tbucket=<b>/... (term, df, ub_q6)
+#   topc/ tbucket=<b>/...      (term, doc, c_q6) impact prefix
 #   stats/                     1 row (n_docs double, avgdl double)
 #   _FTS_OK                    commit marker, written last
 #
-# The partition key is crc32(term) % N_TERM_BUCKETS — chosen over
-# xxhash64 because the SAME bucket is computable driver-side
-# (zlib.crc32) with no Spark job, so a serve plans its partition
-# filter from the query string alone. Bucket count bounds directory
-# fan-out at web-scale vocabularies (partitionBy(term) would create
-# one directory per distinct term); within a bucket the postings sort
-# by term, so parquet min/max row-group stats prune the non-matching
-# terms that share the bucket.
+# The partition key is crc32(term) % n — chosen over xxhash64 because
+# the SAME bucket is computable driver-side (zlib.crc32) with no Spark
+# job, so a serve plans its partition filter from the query string
+# alone. n is sized once per index from the postings count the build
+# already aggregates (`fts_term_buckets`), recorded in layout.json,
+# and read back by every later writer and reader (`fts_layout_buckets`
+# — appends and compaction keep the base's count; a serve prunes with
+# the count the directories were laid out under). Buckets bound the
+# directory fan-out at web-scale vocabularies (partitionBy(term) would
+# create one directory per distinct term) and the file size at corpus
+# scale; within a bucket the postings sort by term, so parquet min/max
+# row-group stats prune the non-matching terms that share the bucket.
+# A fixed count would cost a small corpus one tiny file per touched
+# bucket on every append and compaction, and put 1/count of a 100 TB
+# corpus behind each directory; the derived count keeps bucket files
+# near FTS_POSTINGS_PER_BUCKET rows at every scale.
 # ---------------------------------------------------------------------------
 
-FTS_TERM_BUCKETS = 64
+# Postings rows per bucket file. Measured on the sf0.1 persisted index
+# (one bucket): 270,704 postings in 266,658 parquet bytes, 0.99 B per
+# posting (term-sorted, so dictionary/RLE encoded; the whole index is
+# 1.03 B per posting). A full bucket is then ~4 MB, and still one task
+# at 10x that density; at bench and sf0.1 scale every index is 1 bucket.
+FTS_POSTINGS_PER_BUCKET = 1 << 22
+# Directory fan-out cap, the same as `derived_k`'s cell cap.
+FTS_MAX_TERM_BUCKETS = 65536
 # Impact-ordered prefix depth: per term, the top-N (doc, c_q6) BM25
 # contributions persisted alongside termstats (round 16, VERDICT r15
 # #1 — the max-score/WAND discipline FTS5's own query planner applies
@@ -381,6 +401,13 @@ FTS_TERM_BUCKETS = 64
 # pass; deeper = tighter floors, 32 ≈ one parquet page per term.
 FTS_IMPACT_PREFIX = 32
 _FTS_OK = "_FTS_OK"
+_FTS_LAYOUT = "layout.json"
+# Bump together with every on-disk FTS layout change (F2 = the round-16
+# layout: termstats.ub_q6 + the topc/ impact prefix; F3 = the term-bucket
+# count sized from the corpus and recorded in layout.json). Folded into
+# every FTS cache key and version id, so older slots rebuild and
+# versioned roots migrate.
+_FTS_LAYOUT_GEN = "F3"
 _POSTINGS_SCHEMA = "term string, doc bigint, pos int, doc_len int, tbucket int"
 _TERMSTATS_SCHEMA = "term string, df bigint, ub_q6 bigint, tbucket int"
 # Per-term impact-ordered prefix: the FTS_IMPACT_PREFIX largest
@@ -388,16 +415,52 @@ _TERMSTATS_SCHEMA = "term string, df bigint, ub_q6 bigint, tbucket int"
 _TOPC_SCHEMA = "term string, doc bigint, c_q6 bigint, tbucket int"
 
 
-def _term_bucket_py(term: str) -> int:
+def fts_term_buckets(postings: int) -> int:
+    """Term-bucket count for an index of ``postings`` rows: one bucket
+    per FTS_POSTINGS_PER_BUCKET rows (ceil), at least 1, at most
+    FTS_MAX_TERM_BUCKETS."""
+    per = FTS_POSTINGS_PER_BUCKET
+    return int(min(FTS_MAX_TERM_BUCKETS, max(1, -(-int(postings) // per))))
+
+
+def write_fts_layout(spark: SparkSession, index_dir: str, buckets: int) -> None:
+    """Record the index's term-bucket count. Written before any part,
+    so every committed index (and every half-built one an append could
+    see) carries it."""
+    _fs_write_text(
+        spark, f"{index_dir}/{_FTS_LAYOUT}", json.dumps({"term_buckets": buckets})
+    )
+
+
+def fts_layout_buckets(spark: SparkSession, index_dir: str) -> int:
+    """The term-bucket count recorded in ``index_dir``'s layout.json —
+    the one reader of the layout every FTS writer and reader uses."""
+    path = f"{index_dir}/{_FTS_LAYOUT}"
+    if not _fs_exists(spark, path):
+        raise ValueError(
+            f"FTS index layout {path} is missing: the index predates the "
+            "recorded layout or was never built; rebuild it"
+        )
+    return int(json.loads(_fs_read_text(spark, path))["term_buckets"])
+
+
+def _term_bucket_py(term: str, buckets: int) -> int:
     import zlib
 
-    return zlib.crc32(term.encode("utf-8")) % FTS_TERM_BUCKETS
+    return zlib.crc32(term.encode("utf-8")) % buckets
 
 
-def _term_bucket_col(col: Column) -> Column:
-    return F.pmod(
-        F.crc32(col.cast("binary")), F.lit(FTS_TERM_BUCKETS)
-    ).cast("int")
+def _term_bucket_col(col: Column, buckets: int) -> Column:
+    return F.pmod(F.crc32(col.cast("binary")), F.lit(buckets)).cast("int")
+
+
+def _probe_buckets(
+    spark: SparkSession, index_dir: str, terms: list[str]
+) -> list[int]:
+    """The sorted bucket ids of already-folded ``terms`` under the
+    index's recorded layout — a serve's partition filter."""
+    n = fts_layout_buckets(spark, index_dir)
+    return sorted({_term_bucket_py(t, n) for t in terms})
 
 
 def persist_fts_index(
@@ -408,15 +471,19 @@ def persist_fts_index(
     stats (n_docs counts EVERY document, zero-token ones included —
     the `bm25_from_docs` denominator discipline, so persisted scores
     are bit-identical to the in-plan path). Deterministic: same corpus
-    bytes → byte-identical index. The `_FTS_OK` marker commits last
-    through the Hadoop FS API (object-store safe)."""
+    bytes → byte-identical index. The term-bucket count is sized from
+    the postings count (Σ doc length, from the same stats job) and
+    recorded in layout.json before any part; the `_FTS_OK` marker
+    commits last through the Hadoop FS API (object-store safe)."""
     spark = df.sparkSession
     toks = tokenize(text_col)
-    n_docs, avgdl = df.select(F.size(toks).alias("_dl")).agg(
-        F.count(F.lit(1)).cast("double"), F.avg("_dl")
+    n_docs, avgdl, n_postings = df.select(F.size(toks).alias("_dl")).agg(
+        F.count(F.lit(1)).cast("double"), F.avg("_dl"), F.sum("_dl")
     ).first()
+    buckets = fts_term_buckets(n_postings or 0)
+    write_fts_layout(spark, out_dir, buckets)
     postings = build_inverted_index(df, id_col, text_col).withColumn(
-        "tbucket", _term_bucket_col(F.col("term"))
+        "tbucket", _term_bucket_col(F.col("term"), buckets)
     )
     # One file per bucket, term-sorted inside it: repartition keeps
     # every write task from fragmenting every bucket dir (the
@@ -508,8 +575,6 @@ def persist_fts_index(
         [(float(n_docs), float(avgdl) if avgdl is not None else 0.0)],
         "n_docs double, avgdl double",
     ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/stats")
-    from wikid_spark.queries.similarity import _fs_write_text
-
     _fs_write_text(spark, f"{out_dir}/{_FTS_OK}")
 
 
@@ -521,14 +586,29 @@ def fts_persisted_postings(
     PartitionFilters) + term equality (row-group pruning within the
     bucket via the build-time sort)."""
     t = [fold_term(s) for s in terms]
-    buckets = sorted({_term_bucket_py(s) for s in t})
-    # Explicit schema: a degenerate (empty) corpus partitionBy-writes
-    # zero data files and inference fails; the layout fixes the schema.
+    return _bucket_pruned(
+        spark, index_dir, "postings", _POSTINGS_SCHEMA, t,
+        _probe_buckets(spark, index_dir, t),
+    )
+
+
+def _bucket_pruned(
+    spark: SparkSession,
+    index_dir: str,
+    part: str,
+    schema: str,
+    terms: list[str],
+    buckets: list[int],
+) -> DataFrame:
+    """One bucketed part's rows for folded ``terms``: partition filter
+    on their ``buckets``, then term equality. Explicit schema: a
+    degenerate (empty) corpus partitionBy-writes zero data files and
+    inference fails; the layout fixes the schema."""
     return (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(f"{index_dir}/postings")
+        spark.read.schema(schema)
+        .parquet(f"{index_dir}/{part}")
         .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(t))
+        .filter(F.col("term").isin(terms))
     )
 
 
@@ -539,14 +619,11 @@ def fts_termstats(
     termstats — df for scoring, ub_q6 for max-score pruning. Terms are
     expected already folded (the multi-anchor path's term union comes
     from tokenized anchor documents, folded by construction)."""
-    buckets = sorted({_term_bucket_py(t) for t in terms})
-    return (
-        spark.read.schema(_TERMSTATS_SCHEMA)
-        .parquet(f"{index_dir}/termstats")
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(list(terms)))
-        .select("term", "df", "ub_q6")
-    )
+    t = list(terms)
+    return _bucket_pruned(
+        spark, index_dir, "termstats", _TERMSTATS_SCHEMA, t,
+        _probe_buckets(spark, index_dir, t),
+    ).select("term", "df", "ub_q6")
 
 
 def fts_impact_prefix(
@@ -556,14 +633,11 @@ def fts_impact_prefix(
     the query terms — the max-score floor seed. ≤ FTS_IMPACT_PREFIX
     rows per term, so a serve collects ~32·|terms| rows, never a
     corpus-scale frame."""
-    buckets = sorted({_term_bucket_py(t) for t in terms})
-    return (
-        spark.read.schema(_TOPC_SCHEMA)
-        .parquet(f"{index_dir}/topc")
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(list(terms)))
-        .select("term", "doc", "c_q6")
-    )
+    t = list(terms)
+    return _bucket_pruned(
+        spark, index_dir, "topc", _TOPC_SCHEMA, t,
+        _probe_buckets(spark, index_dir, t),
+    ).select("term", "doc", "c_q6")
 
 
 def bm25_persisted(
@@ -579,17 +653,13 @@ def bm25_persisted(
     query reads ~Σ_t df(t) postings rows plus two tiny side tables,
     never the corpus."""
     t = [fold_term(s) for s in terms]
-    buckets = sorted({_term_bucket_py(s) for s in t})
+    buckets = _probe_buckets(spark, index_dir, t)
     corpus = spark.read.parquet(f"{index_dir}/stats")
-    dfreq = (
-        spark.read.schema(_TERMSTATS_SCHEMA)
-        .parquet(f"{index_dir}/termstats")
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(t))
-        .select("term", "df")
-    )
+    dfreq = _bucket_pruned(
+        spark, index_dir, "termstats", _TERMSTATS_SCHEMA, t, buckets
+    ).select("term", "df")
     tf = (
-        fts_persisted_postings(spark, index_dir, terms)
+        _bucket_pruned(spark, index_dir, "postings", _POSTINGS_SCHEMA, t, buckets)
         .groupBy("term", "doc", "doc_len")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -610,11 +680,10 @@ def ensure_fts_index(spark: SparkSession, sf_dir: str) -> str:
     from wikid_spark.catalog import table as _table
 
     fp = corpus_fingerprint(sf_dir, "documents")
-    # v2: termstats gained ub_q6 and the topc/ impact prefix landed
-    # (round 16) — the bump rebuilds any v1 slot instead of serving an
-    # index missing the max-score state.
+    # The layout generation rebuilds any slot written under an older
+    # on-disk layout instead of serving it.
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|b{FTS_TERM_BUCKETS}|v2".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|{_FTS_LAYOUT_GEN}".encode()
     ).hexdigest()[:16]
     return ensure_cached_build(
         "wikid_fts_index",
@@ -638,15 +707,11 @@ def ensure_fts_index(spark: SparkSession, sf_dir: str) -> str:
 # refresh promotes with one atomic PUT.
 # ---------------------------------------------------------------------------
 
-# Bump together with every on-disk FTS layout change (F2 = the round-16
-# layout: termstats.ub_q6 + the topc/ impact prefix).
-_FTS_LAYOUT_GEN = "F2"
-
 
 def fts_index_version_id(sf_dir: str) -> str:
     """Content-keyed version id: digest of (documents content
-    fingerprint, bucket count, layout generation). Identical corpus
-    bytes always map to one version dir, so racing publishers converge
+    fingerprint, layout generation). Identical corpus bytes always map
+    to one version dir, so racing publishers converge
     (persist_fts_index is deterministic) and re-publishing an
     unchanged corpus is a pointer no-op."""
     import hashlib
@@ -655,7 +720,7 @@ def fts_index_version_id(sf_dir: str) -> str:
 
     fp = corpus_fingerprint(sf_dir, "documents")
     return hashlib.md5(
-        f"{fp}|b{FTS_TERM_BUCKETS}|{_FTS_LAYOUT_GEN}".encode()
+        f"{fp}|{_FTS_LAYOUT_GEN}".encode()
     ).hexdigest()[:16]
 
 

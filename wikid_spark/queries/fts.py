@@ -1204,19 +1204,16 @@ def fts_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from wikid_spark.catalog import corpus_fingerprint, ensure_cached_build
+    from wikid_spark.operators.fts import _FTS_LAYOUT_GEN, _FTS_OK
     from wikid_spark.streaming import fts_ingest as FI
-
-    from wikid_spark.operators.fts import FTS_TERM_BUCKETS
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     fp = corpus_fingerprint(sf_dir, "documents")
-    # Fold the bucket count into the key (the ensure_fts_index
-    # discipline): a changed FTS_TERM_BUCKETS must rebuild, or the
-    # serve would prune with buckets computed under the NEW count
-    # against directories laid out under the OLD one (round-15
-    # review #2 of the second pass).
+    # Fold the layout generation into the key (the ensure_fts_index
+    # discipline): a slot written under an older on-disk layout
+    # rebuilds instead of serving.
     key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{fp}|stream|b{FTS_TERM_BUCKETS}|v1".encode()
+        f"{os.path.abspath(sf_dir)}|{fp}|stream|{_FTS_LAYOUT_GEN}".encode()
     ).hexdigest()[:16]
     # pmod + NULL-coalesce make the three-way split TOTAL: Spark %
     # keeps the dividend's sign (a doc_id = -1 row would land in NO
@@ -1231,9 +1228,9 @@ def fts_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         FI.compact_streaming_fts_index(spark, d)
         from wikid_spark.queries.similarity import _fs_write_text
 
-        _fs_write_text(spark, f"{d}/_FTS_OK")
+        _fs_write_text(spark, f"{d}/{_FTS_OK}")
 
-    idx = ensure_cached_build("wikid_fts_stream_index", key, build, "_FTS_OK")
+    idx = ensure_cached_build("wikid_fts_stream_index", key, build, _FTS_OK)
     ranked = FI.bm25_streaming(spark, idx, SEARCH_TERMS)
     return (
         ranked.select("doc", F.round("score", 4).alias("score"))
@@ -1271,7 +1268,7 @@ def fts_hybrid_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from wikid_spark.catalog import corpus_fingerprint, ensure_cached_build
-    from wikid_spark.operators.fts import FTS_TERM_BUCKETS
+    from wikid_spark.operators.fts import _FTS_LAYOUT_GEN
     from wikid_spark.streaming import fts_ingest as FI, vector_ingest as vi
     from wikid_spark.streaming.hybrid import hybrid_rrf_streaming
 
@@ -1281,7 +1278,7 @@ def fts_hybrid_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp_e = corpus_fingerprint(sf_dir, "embeddings")
     key = hashlib.md5(
         f"{os.path.abspath(sf_dir)}|{fp_d}|{fp_e}|hystream|"
-        f"b{FTS_TERM_BUCKETS}|v1".encode()
+        f"{_FTS_LAYOUT_GEN}".encode()
     ).hexdigest()[:16]
     dres = F.coalesce(F.pmod(F.col("doc_id"), F.lit(3)), F.lit(0))
     vres = F.coalesce(F.pmod(F.col("vec_id"), F.lit(3)), F.lit(0))

@@ -4819,8 +4819,8 @@ def persist_ann_index(
         n_rows=n,
     )
     # Each stage builds from the CHECKPOINTED predecessor so training
-    # runs once per artifact, not once per downstream consumer.
-    cents = cents.localCheckpoint(eager=True)
+    # runs once per artifact, not once per downstream consumer;
+    # lloyd_train already returns a fresh eager checkpoint.
     cents.write.mode("overwrite").parquet(f"{out_dir}/centroids")
     rv = _residual_vectors(spark, sf_dir, cents, k=k)
     cb = _pq_train(

@@ -11,6 +11,15 @@ postings, per-term document frequencies, and corpus-stat increments
 under deterministic ``batch_id=n`` partitions, and BM25 serves from
 base + deltas with read-your-own-writes across batches.
 
+The term-bucket count is sized ONCE, by the corpus base, from its
+postings count (`operators.fts.fts_term_buckets` of the base's
+Σ doc length), and recorded in ``{index_dir}/layout.json`` before any
+part is written. Appends, compaction and serves never re-derive it:
+they read it back (`operators.fts.fts_layout_buckets`), so a batch's
+postings land in the base's buckets and a probe prunes with the count
+the directories were laid out under. An index without layout.json
+raises instead of guessing.
+
 Why every component stays exactly reconstructible (serve ==
 from-scratch rebuild, which the tests pin):
 
@@ -30,7 +39,8 @@ Replay/crash inherit the engine contract: appends overwrite their own
 ``batch_id=n`` paths (at-least-once replays rewrite byte-identically);
 `compact_streaming_fts_index` folds deltas into the ``batch_id=-1``
 base with the shared heal-preamble + two-rename swap, keeping the
-``tbucket`` directory partitioning so probes stay partition-pruned.
+``tbucket`` directory partitioning (and so the recorded bucket count)
+so probes stay partition-pruned.
 
 Scale: an append costs one tokenize pass over the BATCH; a serve reads
 the query terms' bucket directories across base + deltas (still
@@ -48,12 +58,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 from wikid_spark.operators.fts import (
     _POSTINGS_SCHEMA,
+    _probe_buckets,
     _term_bucket_col,
-    _term_bucket_py,
     bm25_score_tail,
     build_inverted_index,
     fold_term,
+    fts_layout_buckets,
+    fts_term_buckets,
     tokenize,
+    write_fts_layout,
 )
 from wikid_spark.streaming import evolving_index as _engine
 
@@ -85,10 +98,23 @@ def _write_components(
     derive from the just-written parquet (a columnar re-read — no
     second explode; round-15 review caught the three-jobs-three-
     tokenizes shape the old sign-dict write had), and the stat
-    increments are a size-only map pass (no explode)."""
+    increments are a size-only map pass (no explode).
+
+    The base collects its one-row stat increment first: its Σ doc
+    length is the postings count that sizes the index's term buckets,
+    recorded in layout.json before any part. An append reads that
+    count back and keeps its stats write lazy."""
     spark = docs.sparkSession
+    if batch_id == _engine.BASE_BATCH_ID:
+        row = _stats_increment(docs).first()
+        stats = spark.createDataFrame([tuple(row)], _STATS_SCHEMA)
+        buckets = fts_term_buckets(row["sum_dl"])
+        write_fts_layout(spark, index_dir, buckets)
+    else:
+        stats = _stats_increment(docs)
+        buckets = fts_layout_buckets(spark, index_dir)
     postings = build_inverted_index(docs, "doc_id", "text").withColumn(
-        "tbucket", _term_bucket_col(F.col("term"))
+        "tbucket", _term_bucket_col(F.col("term"), buckets)
     )
     _engine.write_part(postings, index_dir, "postings", batch_id, ("tbucket",))
     written = spark.read.schema(_POSTINGS_SCHEMA).parquet(
@@ -98,7 +124,7 @@ def _write_components(
         F.count_distinct("doc").alias("df")
     )
     _engine.write_part(termstats, index_dir, "termstats", batch_id, ("tbucket",))
-    _engine.write_part(_stats_increment(docs), index_dir, "stats", batch_id, ())
+    _engine.write_part(stats, index_dir, "stats", batch_id, ())
 
 
 def persist_streaming_fts_index(docs: DataFrame, index_dir: str) -> None:
@@ -165,7 +191,7 @@ def bm25_streaming(
     (exact-integer partials). Scan shape matches `bm25_persisted`:
     bucket-dir pruned across base + deltas, never the corpus."""
     t = [fold_term(s) for s in terms]
-    buckets = sorted({_term_bucket_py(s) for s in t})
+    buckets = _probe_buckets(spark, index_dir, t)
     corpus = _read(spark, index_dir, "stats", as_of_batch).agg(
         F.sum("n_docs").cast("double").alias("n_docs"),
         (
@@ -193,8 +219,9 @@ def bm25_streaming(
 def compact_streaming_fts_index(spark: SparkSession, index_dir: str) -> None:
     """Fold base + deltas into a single ``batch_id=-1`` base per
     component (shared crash-safe heal/two-rename discipline). The
-    bucketed parts keep tbucket directory pruning and return to
-    one-directory-per-bucket; the additive parts (termstats partials,
+    bucketed parts keep tbucket directory pruning under the recorded
+    bucket count (layout.json is not touched) and return to
+    one-file-per-bucket; the additive parts (termstats partials,
     stat increments) are folded AS ROWS — their serving aggregations
     are sums, so row-level folding preserves every served value."""
     for part in ("postings", "termstats"):
