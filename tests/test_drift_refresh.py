@@ -15,6 +15,7 @@ import os
 import pytest
 
 import wikid_spark.queries.similarity as S
+from wikid_spark.fsutil import _fs_write_text
 
 SF = "/root/testdata/sf0.001"
 
@@ -102,7 +103,7 @@ def test_code_width_crossing_forces_respec(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "root")
     S.maybe_refresh_index(spark, corp, root)
     assert S.load_ann_index_spec(
-        f"{root}/versions/{S.read_current_version(spark, root)}"
+        spark, f"{root}/versions/{S.read_current_version(spark, root)}"
     ) == S.PQ4
     # K would not move (same rowcount-ish regime): isolate the width
     # rung by dropping the threshold between builds, then nudging the
@@ -112,7 +113,7 @@ def test_code_width_crossing_forces_respec(spark, tmp_path, monkeypatch):
     rep = S.maybe_refresh_index(spark, corp, root)
     assert rep["trigger"] == "code_width" and rep["refreshed"] is True
     vid = S.read_current_version(spark, root)
-    assert S.load_ann_index_spec(f"{root}/versions/{vid}") == S.PQ8
+    assert S.load_ann_index_spec(spark, f"{root}/versions/{vid}") == S.PQ8
 
 
 def test_layout_mismatch_forces_migration(spark, tmp_path):
@@ -132,7 +133,7 @@ def test_layout_mismatch_forces_migration(spark, tmp_path):
     shutil.copytree(
         f"{root}/versions/{real_vid}", f"{root}/versions/{fake_vid}"
     )
-    S._fs_write_text(spark, f"{root}/CURRENT", fake_vid)
+    _fs_write_text(spark, f"{root}/CURRENT", fake_vid)
     rep = S.maybe_refresh_index(spark, corp, root)
     assert rep["trigger"] == "layout_migration" and rep["refreshed"] is True
     assert S.read_current_version(spark, root) == real_vid
@@ -141,7 +142,7 @@ def test_layout_mismatch_forces_migration(spark, tmp_path):
     assert rep2["trigger"] == "current"
     # the pre-provenance shape (no version.json at all) migrates too
     os.remove(f"{root}/versions/{fake_vid}/version.json")
-    S._fs_write_text(spark, f"{root}/CURRENT", fake_vid)
+    _fs_write_text(spark, f"{root}/CURRENT", fake_vid)
     rep3 = S.maybe_refresh_index(spark, corp, root)
     assert rep3["trigger"] == "layout_migration"
     assert S.read_current_version(spark, root) == real_vid

@@ -30,7 +30,7 @@ def test_persist_writes_committed_artifacts(spark, tmp_path):
     out, spec = _build(spark, tmp_path)
     assert spec == S.PQ8
     assert os.path.exists(os.path.join(out, S._INDEX_OK))
-    assert S.load_ann_index_spec(out) == S.PQ8
+    assert S.load_ann_index_spec(spark, out) == S.PQ8
     cents = spark.read.parquet(f"{out}/centroids")
     assert cents.count() == S.derived_k(
         S.corpus_rows(SF, "embeddings")
@@ -165,7 +165,7 @@ def test_persist_commits_via_hadoop_fs_on_uri_out_dir(spark, tmp_path):
     spec = S.persist_ann_index(spark, SF, out, spec=S.PQ8)
     local = str(tmp_path / "uri_index")
     assert os.path.exists(os.path.join(local, S._INDEX_OK))
-    assert S.load_ann_index_spec(out, spark) == spec == S.PQ8
+    assert S.load_ann_index_spec(spark, out) == spec == S.PQ8
     # serving from the URI path round-trips the spec through the FS too
     got = sorted(
         tuple(r)

@@ -222,10 +222,13 @@ def test_stream_stream_interval_join_equals_batch(
 
 
 def test_keyed_merge_equals_batch_reaggregation(spark, tmp_path):
-    """MERGE-by-rewrite sink: sequentially merging N update batches must
-    equal one-shot aggregation of their union (the q08 associative-SUM
-    invariant), and re-merging a batch through the ledgered foreachBatch
-    writer must change nothing (replay idempotency)."""
+    """Keyed-merge sink: merging N update batches through the ledgered
+    foreachBatch writer must equal one-shot aggregation of their union
+    (the q08 associative-SUM invariant), a batch touching one alias must
+    rewrite only that alias's bucket, and re-delivering a batch_id must
+    change nothing (replay idempotency)."""
+    import os
+
     import pyspark.sql.functions as F
 
     events = table(spark, SF, "events")
@@ -235,13 +238,14 @@ def test_keyed_merge_equals_batch_reaggregation(spark, tmp_path):
         F.lit(1).cast("bigint").alias("count"),
     )
     target = str(tmp_path / "merge_target")
+    writer = ingest.merge_upsert_batch_writer(spark, target)
     # deterministic batch split: a bare limit() without ORDER BY may
     # pick different rows when the plan re-executes for the oneshot
     batches = [updates.filter(F.col("alias") != "click"),
                updates.filter(F.col("alias") == "click"),
                updates.filter(F.col("entity_id").cast("int") % 3 == 0)]
-    for b in batches:
-        ingest.merge_alias_counts(spark, target, b)
+    for batch_id, b in enumerate(batches):
+        writer(b, batch_id)
     oneshot = {
         (r["alias"], r["entity_id"]): r["count"]
         for r in batches[0].unionByName(batches[1]).unionByName(batches[2])
@@ -255,14 +259,22 @@ def test_keyed_merge_equals_batch_reaggregation(spark, tmp_path):
     }
     assert merged == oneshot
 
-    # dynamic overwrite only rewrites affected buckets: merging a batch
-    # touching ONE alias must leave every other key untouched
-    ingest.merge_alias_counts(
-        spark,
-        target,
+    def bucket_files():
+        return {
+            d: sorted(os.listdir(os.path.join(target, d)))
+            for d in os.listdir(target)
+            if d.startswith("pk=")
+        }
+
+    # only the affected bucket is rewritten: merging a batch touching
+    # ONE alias must leave every other key, and every other bucket's
+    # files, untouched
+    before = bucket_files()
+    writer(
         spark.createDataFrame(
             [("click", "0", 7)], "alias string, entity_id string, count bigint"
         ),
+        3,
     )
     after = {
         (r["alias"], r["entity_id"]): r["count"]
@@ -273,9 +285,16 @@ def test_keyed_merge_equals_batch_reaggregation(spark, tmp_path):
     assert {k: v for k, v in after.items() if k != ("click", "0")} == {
         k: v for k, v in oneshot.items() if k != ("click", "0")
     }
+    click_pk = spark.read.parquet(target).filter(
+        F.col("alias") == "click"
+    ).select("pk").distinct().collect()
+    assert len(click_pk) == 1
+    changed = {
+        d for d, files in bucket_files().items() if before.get(d) != files
+    }
+    assert changed == {f"pk={click_pk[0]['pk']}"}
 
-    # ledgered writer: a replayed batch_id is a no-op
-    writer = ingest.merge_upsert_batch_writer(spark, target)
+    # a replayed batch_id is a no-op
     replay = spark.createDataFrame(
         [("click", "0", 100)], "alias string, entity_id string, count bigint"
     )
@@ -333,64 +352,86 @@ def test_stateful_running_stats_stream_equals_batch(
     assert multi > 0
 
 
-def test_keyed_merge_crash_between_merge_and_marker_is_safe(spark, tmp_path):
+@pytest.mark.parametrize("crash_at", ["promotion", "staged_marker"])
+def test_keyed_merge_crash_between_merge_and_marker_is_safe(
+    spark, tmp_path, monkeypatch, crash_at
+):
     """The failure the naive ledger misses: a crash AFTER the merge
-    started mutating the table but BEFORE the done-marker landed. With
-    stage-and-promote, a replay after a crash mid-PROMOTION must resume
-    promotion from the staged (already-computed) state instead of
-    re-merging against the half-promoted table — applying the batch
-    exactly once."""
+    started but BEFORE the done-marker landed, at either point of the
+    stage-and-promote protocol. A crash mid-PROMOTION must replay by
+    resuming promotion from the staged (already-computed) state instead
+    of re-merging against the half-promoted table; a crash after
+    staging but before the ``_STAGED`` marker must leave the live table
+    untouched and replay by recomputing the stage. Either way the batch
+    applies exactly once."""
+    import builtins
     import shutil as _shutil
 
-    import pyspark.sql.functions as F
-
-    from wikid_spark.streaming import ingest
-
     target = str(tmp_path / "merge_target")
-    base = spark.createDataFrame(
-        [("NYC", "Q60", 5), ("Boston", "Q100", 2), ("LA", "Q65", 4)],
-        "alias string, entity_id string, count bigint",
-    )
-    ingest.merge_alias_counts(spark, target, base)
     writer = ingest.merge_upsert_batch_writer(spark, target)
+
+    def live():
+        return {
+            (r["alias"], r["entity_id"]): r["count"]
+            for r in spark.read.parquet(target)
+            .select("alias", "entity_id", "count").collect()
+        }
+
+    writer(
+        spark.createDataFrame(
+            [("NYC", "Q60", 5), ("Boston", "Q100", 2), ("LA", "Q65", 4)],
+            "alias string, entity_id string, count bigint",
+        ),
+        0,
+    )
+    base = live()
+    assert base == {("NYC", "Q60"): 5, ("Boston", "Q100"): 2, ("LA", "Q65"): 4}
     batch = spark.createDataFrame(
         [("NYC", "Q60", 1), ("Boston", "Q100", 1), ("LA", "Q65", 1)],
         "alias string, entity_id string, count bigint",
     )
 
-    # crash after the FIRST bucket directory is promoted
-    real_copytree = _shutil.copytree
-    state = {"copies": 0}
+    with monkeypatch.context() as m:
+        if crash_at == "promotion":
+            # crash after the FIRST bucket directory is promoted
+            real_copytree = _shutil.copytree
+            state = {"copies": 0}
 
-    def crashing_copytree(src, dst, **kw):
-        if state["copies"] >= 1:
-            raise RuntimeError("simulated crash mid-promotion")
-        state["copies"] += 1
-        return real_copytree(src, dst, **kw)
+            def crashing_copytree(src, dst, **kw):
+                if state["copies"] >= 1:
+                    raise RuntimeError("simulated crash mid-promotion")
+                state["copies"] += 1
+                return real_copytree(src, dst, **kw)
 
-    _shutil.copytree = crashing_copytree
-    try:
-        with pytest.raises(RuntimeError):
+            m.setattr(_shutil, "copytree", crashing_copytree)
+        else:
+            # crash once the stage is written, before _STAGED lands
+            def crashing_open(path, *a, **kw):
+                if str(path).endswith("_STAGED"):
+                    raise RuntimeError("simulated crash before _STAGED")
+                return builtins.open(path, *a, **kw)
+
+            m.setattr(ingest, "open", crashing_open, raising=False)
+        with pytest.raises(RuntimeError, match="simulated crash"):
             writer(batch, 42)
-    finally:
-        _shutil.copytree = real_copytree
 
-    # replay: must resume from staging, not re-merge → exactly-once
+    if crash_at == "staged_marker":
+        assert live() == base  # nothing promoted before the marker
+        staging = tmp_path / "merge_target" / "_staging_batch_42"
+        assert not (staging / "_STAGED").exists()
+        # an unmarked stage may be torn: drop one staged bucket so a
+        # replay that trusted it would lose that bucket's update
+        staged = sorted(p for p in staging.iterdir() if p.name.startswith("pk="))
+        assert len(staged) >= 2
+        _shutil.rmtree(staged[0])
+
+    # replay: exactly-once
     writer(batch, 42)
-    got = {
-        (r["alias"], r["entity_id"]): r["count"]
-        for r in spark.read.parquet(target)
-        .select("alias", "entity_id", "count").collect()
-    }
+    got = live()
     assert got == {("NYC", "Q60"): 6, ("Boston", "Q100"): 3, ("LA", "Q65"): 5}
     # and a THIRD delivery after success is a clean no-op
     writer(batch, 42)
-    again = {
-        (r["alias"], r["entity_id"]): r["count"]
-        for r in spark.read.parquet(target)
-        .select("alias", "entity_id", "count").collect()
-    }
-    assert again == got
+    assert live() == got
 
 
 def test_keyed_merge_single_writer_lease(spark, tmp_path):
@@ -817,634 +858,3 @@ def test_lsm_cycle_append_compact_bucketed_probe(spark, tmp_path):
         for t in ("lsh_bands", "lsh_shingles", "lsh_sizes"):
             spark.sql(f"DROP TABLE IF EXISTS lsmidx.{t}")
         spark.sql("DROP DATABASE IF EXISTS lsmidx")
-
-
-class _FakeDeltaStore:
-    """In-memory stand-in for one Delta table: rows keyed by
-    (alias, entity_id), plus the commit-history userMetadata stamps the
-    seam's replay dedup reads."""
-
-    def __init__(self):
-        self.rows = {}
-        self.commits = []
-        self.merge_calls = []
-        self.history_limits = []
-        self.exists = True  # isDeltaTable answer; create-path tests flip it
-
-
-class _FakeRow(dict):
-    def __getitem__(self, k):
-        return dict.__getitem__(self, k)
-
-
-def _make_fake_delta(store):
-    """A fake delta.tables.DeltaTable honoring exactly the surface the
-    seam uses: isDeltaTable / forPath / history / alias / merge
-    builder. execute() applies real additive-merge semantics to the
-    in-memory store so the test can assert outcomes, and records the
-    builder arguments so the test can assert the MERGE itself."""
-
-    class _FakeMergeBuilder:
-        def __init__(self, spark, source_df, condition):
-            self._spark = spark
-            self._source = source_df
-            self._cond = condition
-            self._update_set = None
-            self._insert_all = False
-
-        def whenMatchedUpdate(self, set):
-            self._update_set = set
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            self._insert_all = True
-            return self
-
-        def execute(self):
-            stamp = self._spark.conf.get(
-                "spark.databricks.delta.commitInfo.userMetadata"
-            )
-            store.merge_calls.append(
-                {
-                    "condition": self._cond,
-                    "update_set": self._update_set,
-                    "insert_all": self._insert_all,
-                    "stamp": stamp,
-                }
-            )
-            assert self._update_set == {"count": "t.count + u.count"}
-            assert self._insert_all
-            for r in self._source.collect():
-                k = (r["alias"], r["entity_id"])
-                store.rows[k] = store.rows.get(k, 0) + r["count"]
-            store.commits.append(stamp)
-
-    class _FakeDeltaTable:
-        @classmethod
-        def isDeltaTable(cls, spark, path):
-            return store.exists
-
-        @classmethod
-        def forPath(cls, spark, path):
-            t = cls()
-            t._spark = spark
-            return t
-
-        def history(self, limit=None):
-            store.history_limits.append(limit)
-            commits = store.commits if limit is None else store.commits[-limit:]
-
-            class _H:
-                def select(_self, col):
-                    return _self
-
-                def collect(_self):
-                    return [_FakeRow(userMetadata=s) for s in commits]
-
-            return _H()
-
-        def alias(self, a):
-            return self
-
-        def merge(self, source_df, condition):
-            return _FakeMergeBuilder(self._spark, source_df, condition)
-
-    return _FakeDeltaTable
-
-
-def test_delta_merge_seam_via_injected_fake(spark, tmp_path):
-    """merge_upsert_batch_writer with an injected DeltaTable class must
-    route through MERGE INTO instead of stage-and-promote: additive
-    update semantics, history-backed replay idempotency (same batch_id
-    re-applied is a no-op), per-commit userMetadata stamps, and the
-    writer lease still held on the target."""
-    import os
-
-    import pyspark.sql.functions as F  # noqa: F401
-
-    store = _FakeDeltaStore()
-    target = str(tmp_path / "delta_target")
-    writer = ingest.merge_upsert_batch_writer(
-        spark, target, writer_id="w-delta",
-        delta_table_cls=_make_fake_delta(store),
-    )
-    b0 = spark.createDataFrame(
-        [("click", "0", 2), ("click", "0", 3), ("view", "1", 1)],
-        "alias string, entity_id string, count bigint",
-    )
-    writer(b0, 0)
-    # partial-aggregated before the merge: one source row per key
-    assert store.rows == {("click", "0"): 5, ("view", "1"): 1}
-    assert store.commits == ["batch=0"]
-    call = store.merge_calls[0]
-    assert call["condition"] == (
-        "t.alias = u.alias AND t.entity_id = u.entity_id"
-    )
-    assert call["update_set"] == {"count": "t.count + u.count"}
-    assert call["insert_all"] and call["stamp"] == "batch=0"
-
-    b1 = spark.createDataFrame(
-        [("click", "0", 10)], "alias string, entity_id string, count bigint"
-    )
-    writer(b1, 1)
-    assert store.rows[("click", "0")] == 15
-    writer(b1, 1)  # replay: history already holds batch=1 → no-op
-    assert store.rows[("click", "0")] == 15
-    assert store.commits == ["batch=0", "batch=1"]
-    # the conf stamp is cleaned up after each commit
-    assert (
-        spark.conf.get(
-            "spark.databricks.delta.commitInfo.userMetadata", None
-        )
-        is None
-    )
-    # single-writer lease discipline is unchanged on the Delta path
-    assert os.path.exists(os.path.join(target, ingest.LEASE_FILE))
-
-
-def test_delta_seam_first_batch_creates_table(spark, tmp_path, monkeypatch):
-    """When the target is not yet a Delta table, the first batch goes
-    through _delta_create_table with the bucketed partials and the
-    idempotent (txnAppId, txnVersion) identity."""
-    created = {}
-
-    def fake_create(partials, target_dir, writer_id, batch_id):
-        created["cols"] = set(partials.columns)
-        created["rows"] = {
-            (r["alias"], r["entity_id"]): r["count"]
-            for r in partials.collect()
-        }
-        created["target"] = target_dir
-        created["writer_id"] = writer_id
-        created["batch_id"] = batch_id
-
-    monkeypatch.setattr(ingest, "_delta_create_table", fake_create)
-
-    class _NeverDelta:
-        @classmethod
-        def isDeltaTable(cls, spark, path):
-            return False
-
-    target = str(tmp_path / "delta_new")
-    writer = ingest.merge_upsert_batch_writer(
-        spark, target, writer_id="w0", delta_table_cls=_NeverDelta
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1), ("a", "1", 2)],
-        "alias string, entity_id string, count bigint",
-    )
-    writer(b, 7)
-    assert created["cols"] == {"alias", "entity_id", "count", "pk"}
-    assert created["rows"] == {("a", "1"): 3}
-    assert created["target"] == target
-    assert created["writer_id"] == "w0" and created["batch_id"] == 7
-
-
-def test_delta_seam_absent_without_injection(spark, tmp_path):
-    """In this container delta does not import, so the default writer
-    must be the parquet stage-and-promote path (the emulation contract
-    the crash/lease tests pin) — not an AttributeError at first batch."""
-    assert ingest._import_delta() is None
-    target = str(tmp_path / "plain")
-    writer = ingest.merge_upsert_batch_writer(spark, target, writer_id="wp")
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    writer(b, 0)
-    got = spark.read.parquet(target).collect()
-    assert [(r["alias"], r["entity_id"], r["count"]) for r in got] == [
-        ("a", "1", 1)
-    ]
-
-
-def test_delta_create_branch_is_replay_idempotent(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r9: the table-CREATING batch must be replay-safe. The
-    create commit now carries the same ``batch=<id>`` userMetadata
-    stamp as MERGE commits, so a replay that finds the table existing
-    takes the merge branch, sees the stamp in history, and no-ops —
-    instead of re-applying the additive merge and double-counting
-    every key from the first batch."""
-    store = _FakeDeltaStore()
-    store.exists = False  # not a Delta table until batch 0 creates it
-
-    def fake_write(self):
-        """Stand-in for partials.write on the Delta format: applies the
-        rows to the store and records — like real Delta — the
-        userMetadata stamp carried by the PER-WRITE option (the create
-        path no longer touches the session conf; see
-        test_delta_create_table_sets_userMetadata_stamp)."""
-        df = self
-
-        class _W:
-            _opts = {}
-
-            def format(self, f):
-                return self
-
-            def partitionBy(self, c):
-                return self
-
-            def option(self, k, v):
-                self._opts[k] = v
-                return self
-
-            def save(self, path):
-                for r in df.collect():
-                    k = (r["alias"], r["entity_id"])
-                    store.rows[k] = store.rows.get(k, 0) + r["count"]
-                store.commits.append(self._opts.get("userMetadata"))
-                store.exists = True
-
-        return _W()
-
-    b0 = spark.createDataFrame(
-        [("click", "0", 2), ("view", "1", 1)],
-        "alias string, entity_id string, count bigint",
-    )
-    # patch the CONCRETE DataFrame class (pyspark 4: classic.dataframe)
-    monkeypatch.setattr(type(b0), "write", property(fake_write))
-    target = str(tmp_path / "delta_create_replay")
-    writer = ingest.merge_upsert_batch_writer(
-        spark,
-        target,
-        writer_id="w0",
-        delta_table_cls=_make_fake_delta(store),
-    )
-    writer(b0, 0)
-    assert store.rows == {("click", "0"): 2, ("view", "1"): 1}
-    assert store.commits == ["batch=0"]
-
-    # At-least-once replay of the CREATE batch: table now exists, the
-    # merge branch consults history, finds batch=0, and no-ops.
-    writer(b0, 0)
-    assert store.rows == {("click", "0"): 2, ("view", "1"): 1}
-    assert store.commits == ["batch=0"]
-    assert store.merge_calls == []
-
-
-def test_delta_create_table_sets_userMetadata_stamp(spark, monkeypatch):
-    """Unit pin on the production _delta_create_table: the batch stamp
-    rides the PER-WRITE userMetadata option (race-free across writers
-    sharing the session) and the session conf is never touched — a
-    pre-existing user-set session stamp survives the create."""
-    seen = {}
-    meta_key = "spark.databricks.delta.commitInfo.userMetadata"
-
-    class _FakeWriter:
-        def __init__(self, df):
-            self._df = df
-
-        def format(self, f):
-            return self
-
-        def partitionBy(self, c):
-            return self
-
-        def option(self, k, v):
-            seen[k] = v
-            return self
-
-        def save(self, path):
-            seen["conf_at_save"] = self._df.sparkSession.conf.get(
-                meta_key, None
-            )
-
-    df = spark.createDataFrame(
-        [("a", "1", 1, 0)],
-        "alias string, entity_id string, count bigint, pk int",
-    )
-    monkeypatch.setattr(
-        type(df), "write", property(lambda self: _FakeWriter(self))
-    )
-    spark.conf.set(meta_key, "user-set-stamp")
-    try:
-        ingest._delta_create_table(df, "/tmp/nowhere", "w9", 4)
-    finally:
-        user_stamp_after = spark.conf.get(meta_key, None)
-        spark.conf.unset(meta_key)
-    assert seen["userMetadata"] == "batch=4"
-    assert seen["txnAppId"] == "w9" and seen["txnVersion"] == 4
-    # the session conf is not the stamp channel on the create path
-    assert seen["conf_at_save"] == "user-set-stamp"
-    assert user_stamp_after == "user-set-stamp"
-
-
-def test_delta_refuses_to_create_over_parquet_state(spark, tmp_path):
-    """ADVICE r9: the Delta create path must not build a table inside
-    a directory holding parquet stage-and-promote state — that is an
-    existing table in the OTHER protocol, and mixing produces a failed
-    tree instead of resuming the ledger."""
-    import os
-
-    import pytest
-
-    store = _FakeDeltaStore()
-    store.exists = False
-    target = str(tmp_path / "parquet_protocol_target")
-    os.makedirs(os.path.join(target, "pk=3"))
-    open(os.path.join(target, "_merged_batch_0"), "w").close()
-    writer = ingest.merge_upsert_batch_writer(
-        spark,
-        target,
-        writer_id="w1",
-        delta_table_cls=_make_fake_delta(store),
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    with pytest.raises(RuntimeError, match="parquet merge-protocol state"):
-        writer(b, 0)
-    assert store.rows == {} and store.commits == []
-
-
-def test_delta_requires_explicit_opt_in(spark, tmp_path, monkeypatch):
-    """ADVICE r9: import-detection must not flip the sink format. With
-    delta importable but use_delta unset, the writer stays on the
-    parquet stage-and-promote protocol; use_delta=True without the
-    package raises instead of silently falling back."""
-    import os
-
-    import pytest
-
-    store = _FakeDeltaStore()
-    monkeypatch.setattr(
-        ingest, "_import_delta", lambda: _make_fake_delta(store)
-    )
-    target = str(tmp_path / "no_optin")
-    writer = ingest.merge_upsert_batch_writer(spark, target, writer_id="w2")
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    writer(b, 0)
-    # parquet protocol ran: ledger marker + bucket dirs, no Delta commits
-    assert os.path.exists(os.path.join(target, "_merged_batch_0"))
-    assert store.commits == [] and store.rows == {}
-
-    monkeypatch.setattr(ingest, "_import_delta", lambda: None)
-    with pytest.raises(RuntimeError, match="use_delta=True"):
-        ingest.merge_upsert_batch_writer(
-            spark, str(tmp_path / "x"), writer_id="w3", use_delta=True
-        )
-
-
-def test_delta_history_scan_is_bounded(spark, tmp_path):
-    """ADVICE r9: the replay-dedup scan reads only the last
-    DELTA_HISTORY_LOOKBACK commits, not the full (unboundedly growing)
-    table history."""
-    store = _FakeDeltaStore()
-    target = str(tmp_path / "bounded_history")
-    writer = ingest.merge_upsert_batch_writer(
-        spark,
-        target,
-        writer_id="w4",
-        delta_table_cls=_make_fake_delta(store),
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    writer(b, 0)
-    writer(b, 1)
-    assert store.history_limits == [
-        ingest.DELTA_HISTORY_LOOKBACK,
-        ingest.DELTA_HISTORY_LOOKBACK,
-    ]
-    # a stamp older than the lookback window is invisible — the dedup
-    # contract holds because foreachBatch never replays that far back
-    store.commits = [f"batch={i}" for i in range(500)]
-    writer(b, 499)  # within window → deduped
-    assert len(store.commits) == 500
-
-
-def test_delta_create_recovers_from_crashed_first_commit(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r10: the Delta create itself writes partitionBy('pk')
-    data files BEFORE the first _delta_log commit, so a crash in that
-    window leaves bare pk=* dirs with no ledger markers. On replay
-    isDeltaTable is still false; the protocol guard must treat that as
-    recoverable (Delta's create only consults its log) instead of
-    raising forever and wedging the stream. Parquet-protocol state is
-    identified by its ledger markers, which always coexist with any
-    pk= bucket the protocol promotes."""
-    import os
-
-    created = {}
-    monkeypatch.setattr(
-        ingest,
-        "_delta_create_table",
-        lambda partials, target_dir, writer_id, batch_id: created.update(
-            batch_id=batch_id
-        ),
-    )
-
-    class _NeverDelta:
-        @classmethod
-        def isDeltaTable(cls, spark, path):
-            return False
-
-    target = str(tmp_path / "crashed_delta_create")
-    os.makedirs(os.path.join(target, "pk=3"))  # debris, no markers
-    writer = ingest.merge_upsert_batch_writer(
-        spark, target, writer_id="w5", delta_table_cls=_NeverDelta
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    writer(b, 0)  # replay of the crashed create: recovers, no raise
-    assert created == {"batch_id": 0}
-
-    # …but a staging ledger marker WITHOUT pk= dirs still refuses:
-    # that is parquet-protocol state mid-flight.
-    import pytest
-
-    target2 = str(tmp_path / "staged_parquet_state")
-    os.makedirs(os.path.join(target2, "_staging_batch_0"))
-    writer2 = ingest.merge_upsert_batch_writer(
-        spark, target2, writer_id="w6", delta_table_cls=_NeverDelta
-    )
-    with pytest.raises(RuntimeError, match="parquet merge-protocol state"):
-        writer2(b, 0)
-
-
-def test_protocol_guard_refuses_committed_merge_alias_counts(
-    spark, tmp_path
-):
-    """ADVICE r11: merge_alias_counts writes bare pk=* buckets with no
-    ledger markers — at the filesystem level indistinguishable from
-    crashed Delta-create debris with data files. The guard must refuse
-    to create a Delta table over marker-less pk= buckets that HOLD
-    data files (the existing counts would become invisible to Delta
-    readers → silent undercount) unless the operator explicitly passes
-    reclaim_bare_buckets=True; EMPTY pk= dirs (nothing to lose) stay
-    auto-recoverable."""
-    import os
-
-    import pytest
-
-    # end-to-end: a real merge_alias_counts table (pk= buckets with
-    # committed data files, no markers) refuses by default…
-    target = str(tmp_path / "alias_counts_table")
-    updates = spark.createDataFrame(
-        [("a", "1", 2)], "alias string, entity_id string, count bigint"
-    )
-    ingest.merge_alias_counts(spark, target, updates)
-    with pytest.raises(RuntimeError, match="reclaim_bare_buckets"):
-        ingest._refuse_parquet_protocol_state(target, spark)
-    # …and the refusal reaches the writer's create path
-    class _NeverDelta:
-        @classmethod
-        def isDeltaTable(cls, spark, path):
-            return False
-
-    writer = ingest.merge_upsert_batch_writer(
-        spark, target, writer_id="wg1", delta_table_cls=_NeverDelta
-    )
-    with pytest.raises(RuntimeError, match="parquet merge-protocol state"):
-        writer(updates, 0)
-
-    # the explicit operator flag opts in to reclaiming the buckets
-    ingest._refuse_parquet_protocol_state(
-        target, spark, reclaim_bare_buckets=True
-    )
-
-    # bare pk= debris without data files stays auto-recoverable
-    target3 = str(tmp_path / "crashed_debris")
-    os.makedirs(os.path.join(target3, "pk=5"))
-    ingest._refuse_parquet_protocol_state(target3, spark)
-
-
-def test_protocol_guard_lists_file_uri_via_hadoop_fs(spark, tmp_path):
-    """ADVICE r10: the guard lists the target through the Hadoop
-    FileSystem API, so it works on URIs a driver-local os.listdir
-    cannot see (file:, s3a:, abfss:, …) — exercised here with the
-    file: scheme, which FileNotFoundError'd the old os.listdir path."""
-    import os
-
-    import pytest
-
-    target = str(tmp_path / "uri_target")
-    os.makedirs(target)
-    open(os.path.join(target, "_merged_batch_0"), "w").close()
-    with pytest.raises(RuntimeError, match="parquet merge-protocol state"):
-        ingest._refuse_parquet_protocol_state(f"file:{target}", spark)
-    # absent target (any scheme) is silently fine
-    ingest._refuse_parquet_protocol_state(
-        f"file:{tmp_path}/does_not_exist", spark
-    )
-
-
-def test_delta_merge_restores_prior_session_stamp(spark, tmp_path):
-    """ADVICE r10: the MERGE path must save-and-restore any
-    pre-existing user-set userMetadata conf value instead of
-    unconditionally unsetting it."""
-    meta_key = "spark.databricks.delta.commitInfo.userMetadata"
-    store = _FakeDeltaStore()
-    writer = ingest.merge_upsert_batch_writer(
-        spark,
-        str(tmp_path / "restore_stamp"),
-        writer_id="w7",
-        delta_table_cls=_make_fake_delta(store),
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    spark.conf.set(meta_key, "user-session-stamp")
-    try:
-        writer(b, 0)
-        assert store.commits == ["batch=0"]
-        assert spark.conf.get(meta_key, None) == "user-session-stamp"
-    finally:
-        spark.conf.unset(meta_key)
-
-
-def test_delta_stamp_interleaved_writers_both_stamped(spark, tmp_path):
-    """Round-10 verdict finding: two MERGE sinks for DIFFERENT targets
-    sharing one SparkSession (one driver process, two foreachBatch
-    threads — the per-target lease does not serialize across tables)
-    must not interleave the session-global userMetadata stamp window.
-    Writer A blocks mid-execute (where real Delta reads the stamp, at
-    commit time); writer B attempts its own merge concurrently. With
-    the stamp lock, B waits until A's commit completes and BOTH commits
-    carry their own batch id; against the unlocked code, B runs through
-    A's window and A's commit lands unstamped (B's finally restores
-    first) — an unstamped commit re-applies on replay (double-count)."""
-    import threading
-
-    meta_key = "spark.databricks.delta.commitInfo.userMetadata"
-    a_mid, a_go = threading.Event(), threading.Event()
-    commits_a, commits_b = [], []
-
-    def make_fake(commits, mid=None, go=None):
-        class _Builder:
-            def whenMatchedUpdate(self, set):
-                return self
-
-            def whenNotMatchedInsertAll(self):
-                return self
-
-            def execute(self):
-                if mid is not None:
-                    mid.set()
-                    assert go.wait(timeout=30)
-                # real Delta reads the stamp at COMMIT time — the end
-                # of execute(), after any concurrent writer interleaved
-                commits.append(spark.conf.get(meta_key, None))
-
-        class _Fake:
-            @classmethod
-            def isDeltaTable(cls, s, path):
-                return True
-
-            @classmethod
-            def forPath(cls, s, path):
-                return cls()
-
-            def history(self, limit=None):
-                class _H:
-                    def select(_self, col):
-                        return _self
-
-                    def collect(_self):
-                        return []
-
-                return _H()
-
-            def alias(self, a):
-                return self
-
-            def merge(self, src, cond):
-                return _Builder()
-
-        return _Fake
-
-    writer_a = ingest.merge_upsert_batch_writer(
-        spark,
-        str(tmp_path / "tgt_a"),
-        writer_id="wA",
-        delta_table_cls=make_fake(commits_a, a_mid, a_go),
-    )
-    writer_b = ingest.merge_upsert_batch_writer(
-        spark,
-        str(tmp_path / "tgt_b"),
-        writer_id="wB",
-        delta_table_cls=make_fake(commits_b),
-    )
-    b = spark.createDataFrame(
-        [("a", "1", 1)], "alias string, entity_id string, count bigint"
-    )
-    ta = threading.Thread(target=writer_a, args=(b, 3))
-    ta.start()
-    assert a_mid.wait(timeout=30)
-    tb = threading.Thread(target=writer_b, args=(b, 7))
-    tb.start()
-    tb.join(timeout=2.0)
-    # B is serialized behind A's stamp window, not interleaved into it
-    assert tb.is_alive(), "writer B ran inside writer A's stamp window"
-    a_go.set()
-    ta.join(timeout=30)
-    tb.join(timeout=30)
-    assert commits_a == ["batch=3"]
-    assert commits_b == ["batch=7"]
-    assert spark.conf.get(meta_key, None) is None

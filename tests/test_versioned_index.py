@@ -18,6 +18,7 @@ import time
 import pytest
 
 import wikid_spark.queries.similarity as S
+from wikid_spark.fsutil import _fs_write_text
 
 SF = "/root/testdata/sf0.001"
 SF2 = "/root/testdata/sf0.01"
@@ -242,7 +243,7 @@ def test_fts_layout_migration(spark, tmp_path):
     shutil.copytree(
         f"{root}/versions/{real_vid}", f"{root}/versions/{fake_vid}"
     )
-    S._fs_write_text(spark, f"{root}/CURRENT", fake_vid)
+    _fs_write_text(spark, f"{root}/CURRENT", fake_vid)
     rep = O.maybe_refresh_fts_index(spark, SF, root)
     assert rep["trigger"] == "layout_migration" and rep["refreshed"] is True
     assert rep["version"] == real_vid

@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from wikid_spark.catalog import table
+from wikid_spark.fsutil import _fs_write_text
 from wikid_spark.operators.fts import (
     bm25_from_docs,
     near_search,
@@ -1226,8 +1227,6 @@ def fts_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         FI.append_docs_to_fts_index(docs.filter(residue == 1), d, 0)
         FI.append_docs_to_fts_index(docs.filter(residue == 2), d, 1)
         FI.compact_streaming_fts_index(spark, d)
-        from wikid_spark.queries.similarity import _fs_write_text
-
         _fs_write_text(spark, f"{d}/{_FTS_OK}")
 
     idx = ensure_cached_build("wikid_fts_stream_index", key, build, _FTS_OK)
@@ -1284,8 +1283,6 @@ def fts_hybrid_serve_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     vres = F.coalesce(F.pmod(F.col("vec_id"), F.lit(3)), F.lit(0))
 
     def build(d: str) -> None:
-        from wikid_spark.queries.similarity import _fs_write_text
-
         FI.persist_streaming_fts_index(docs.filter(dres == 0), f"{d}/fts")
         FI.append_docs_to_fts_index(docs.filter(dres == 1), f"{d}/fts", 0)
         FI.append_docs_to_fts_index(docs.filter(dres == 2), f"{d}/fts", 1)

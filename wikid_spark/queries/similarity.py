@@ -15,6 +15,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from wikid_spark.catalog import corpus_rows, table
+from wikid_spark.fsutil import _fs_read_text, _fs_write_text
 from wikid_spark.functions.vectors import cosine_similarity
 from wikid_spark.registry import query
 
@@ -4772,13 +4773,6 @@ ANN_CELL_PUSHDOWN_MAX_IDS = 10_000
 _INDEX_OK = "_INDEX_OK"
 
 
-# Hadoop-FS helpers moved to fsutil (round 16) so the generic
-# versioned-root engine shares them without a queries-package import
-# cycle; re-imported here for the call sites below and the modules
-# importing them from this namespace.
-from wikid_spark.fsutil import _fs_read_text, _fs_write_text  # noqa: E402
-
-
 def persist_ann_index(
     spark: SparkSession,
     sf_dir: str,
@@ -4936,19 +4930,12 @@ def _residual_vectors(
     )
 
 
-def load_ann_index_spec(
-    index_dir: str, spark: SparkSession | None = None
-) -> PQSpec:
-    """Read the persisted spec. With a session, reads through the
-    Hadoop FileSystem API (any URI the cluster supports); without one,
-    driver-local paths only."""
+def load_ann_index_spec(spark: SparkSession, index_dir: str) -> PQSpec:
+    """Read the persisted spec through the Hadoop FileSystem API (any
+    URI the cluster supports)."""
     import json
-    import os
 
-    if spark is not None:
-        return PQSpec(**json.loads(_fs_read_text(spark, f"{index_dir}/spec.json")))
-    with open(os.path.join(index_dir, "spec.json")) as fh:
-        return PQSpec(**json.load(fh))
+    return PQSpec(**json.loads(_fs_read_text(spark, f"{index_dir}/spec.json")))
 
 
 class AnnIndexHandle(NamedTuple):
@@ -5012,7 +4999,7 @@ def load_ann_index(
         return cached
     _sweep_index_handles()
     if spec is None:
-        spec = load_ann_index_spec(index_dir, spark)
+        spec = load_ann_index_spec(spark, index_dir)
     cents = spark.read.parquet(f"{index_dir}/centroids")
     cb = spark.read.parquet(f"{index_dir}/codebooks")
     # Explicit schema: a DEGENERATE (empty) corpus partitionBy-writes
@@ -5441,7 +5428,7 @@ def maybe_refresh_index(
     cdir = f"{root}/versions/{current_vid}"
     k_now = derived_k(n_now)
     k_built = derived_k(load_ann_index_stats(spark, cdir)["n_vectors"])
-    spec_built = load_ann_index_spec(cdir, spark)
+    spec_built = load_ann_index_spec(spark, cdir)
     if k_now != k_built or spec_now != spec_built:
         rep = refresh_ann_index_versioned(spark, sf_dir, root, force=True, **kw)
         rep["trigger"] = (

@@ -1,24 +1,25 @@
-"""Micro-batch ingestion with exactly-once additive merge.
+"""Micro-batch alias-count ingestion, exactly-once under replay.
 
 Replaces the reference's hand-rolled idempotency — pre-scanned id sets
 + `ON CONFLICT … count=count+excluded.count` upserts
 (wikidata.py:90-92, 262-269; wikipedia.py:280-282, 108-115 in
 /root/reference/scripts/wiki/) — with the Spark-native contract:
+**foreachBatch + checkpoint** gives at-least-once batch delivery with a
+monotonically increasing ``batch_id``, and each sink makes a replayed
+batch a no-op. Two sink shapes, one per concern:
 
-* **foreachBatch + checkpoint** gives at-least-once batch delivery with
-  a monotonically increasing ``batch_id``.
-* Each batch writes its own partial aggregate to a DETERMINISTIC path
+* **Append log** (`alias_count_batch_writer`, `start_alias_count_ingest`):
+  each batch writes its own partial aggregate to a DETERMINISTIC path
   keyed by ``batch_id`` in overwrite mode — a replayed batch overwrites
-  its own previous output, so the sink is effectively exactly-once
-  without any table format dependency (the same pattern Delta's MERGE
-  would subsume on a cluster with Delta available).
-* Readers merge the partials by re-aggregation (associative SUM —
-  `plans.wiki.merge_alias_counts` semantics), so no reader ever sees a
-  torn update. ``compact`` folds the log when the partial count grows.
-
-This is the log-structured-merge shape that scales: every batch write
-is append-only and partition-local; the only global operation is the
-read-side groupBy, which AQE sizes at runtime.
+  its own previous output. `read_alias_counts` merges the partials by
+  re-aggregation (associative SUM — `plans.wiki.merge_alias_counts`
+  semantics), so no reader ever sees a torn update. Every write is
+  append-only and partition-local; the only global operation is the
+  read-side groupBy, which AQE sizes at runtime.
+* **Keyed merge** (`merge_upsert_batch_writer`): the one in-place
+  upsert. Each batch folds into a ``pk``-bucketed table through a
+  ledgered, leased stage-and-promote protocol that rewrites only the
+  buckets the batch touches.
 """
 
 from __future__ import annotations
@@ -55,13 +56,6 @@ def read_alias_counts(spark: SparkSession, target_dir: str) -> DataFrame:
     )
 
 
-def compact(spark: SparkSession, target_dir: str, into: str) -> None:
-    """Fold the batch log into one base partial at ``into`` (a new
-    batch_id directory outside the streaming counter range). Caller
-    removes the old partials after the write commits."""
-    read_alias_counts(spark, target_dir).write.mode("overwrite").parquet(into)
-
-
 N_MERGE_BUCKETS = 64  # partition-key fanout of the keyed-merge table
 
 
@@ -72,48 +66,18 @@ def _merge_bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(N_MERGE_BUCKETS)).cast("int")
 
 
-def merge_alias_counts(
-    spark: SparkSession, target_dir: str, updates: DataFrame
-) -> None:
-    """Keyed MERGE emulation over plain parquet — the incremental half
-    of the reference's ``ON CONFLICT … DO UPDATE count = count +
-    excluded.count`` upsert (wikidata.py:262-269), without a table
-    format dependency (Delta's MERGE would subsume this on a cluster
-    that has it):
-
-    1. partial-aggregate the updates and bucket them by hash(alias),
-    2. read ONLY the affected buckets of the target (partition pruning;
-       the affected-bucket list is metadata-scale — ≤ N_MERGE_BUCKETS
-       values),
-    3. union + re-aggregate (associative SUM, the q08 invariant),
-    4. dynamic-partition-overwrite: only the affected bucket
-       directories are rewritten; untouched buckets are never read or
-       written.
-
-    The read side is ``localCheckpoint``-ed before the overwrite: Spark
-    (correctly) refuses to overwrite a path that is also a source of
-    the running plan, and the checkpoint cuts that lineage. The
-    materialized set is the affected buckets only, bounded by the
-    update's key spread.
-    """
-    merged = _merged_affected_state(spark, target_dir, updates)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("pk").parquet(target_dir)
-    finally:
-        spark.conf.set(mode_key, prev)
-
-
 def _merged_affected_state(
     spark: SparkSession, target_dir: str, updates: DataFrame
 ) -> DataFrame:
     """The post-merge (alias, entity_id, count, pk) rows for exactly the
     buckets ``updates`` touches, computed from the live table WITHOUT
-    modifying it. (Spark's partition discovery ignores underscore- and
-    dot-prefixed children, so staging directories and ledger markers
-    inside ``target_dir`` are never read back as data.)"""
+    modifying it: partial-aggregate the updates, read only the affected
+    ``pk`` buckets (partition pruning; the bucket list is
+    metadata-scale, ≤ N_MERGE_BUCKETS values), then union and
+    re-aggregate (associative SUM). (Spark's partition discovery
+    ignores underscore- and dot-prefixed children, so staging
+    directories and ledger markers inside ``target_dir`` are never read
+    back as data.)"""
     partials = (
         updates.groupBy("alias", "entity_id")
         .agg(F.sum("count").alias("count"))
@@ -136,234 +100,6 @@ def _merged_affected_state(
         .withColumn("pk", _merge_bucket(F.col("alias")))
         .localCheckpoint()
     )
-
-
-def _import_delta():
-    """Optional-import seam for the table-format merge path: the
-    `delta-spark` package's DeltaTable when the cluster ships it, else
-    None (this container does not — the parquet stage-and-promote
-    emulation below remains the tested local path). Same pattern as
-    operators/multimodal._import_pil: callers can inject a fake class
-    to exercise the Delta plumbing without the dependency."""
-    try:
-        from delta.tables import DeltaTable
-
-        return DeltaTable
-    except ImportError:
-        return None
-
-
-# Replay-dedup lookback on the Delta path: foreachBatch only ever
-# replays batches at/after the last unfinished checkpoint offset, so a
-# replayed batch_id is always within the most recent few commits. 100
-# leaves two orders of magnitude of slack over the single in-flight
-# batch while keeping the per-batch history scan O(1) in stream age.
-DELTA_HISTORY_LOOKBACK = 100
-
-
-def _list_children(target_dir: str, spark: SparkSession | None = None):
-    """Child names of ``target_dir`` (empty if absent). With a session,
-    list through the Hadoop FileSystem API so the protocol guard works
-    on any supported URI (s3a://, abfss://, hdfs://, file:) — a
-    driver-local os.listdir silently sees nothing there, exactly where
-    Delta targets usually live. Without a session, fall back to
-    os.listdir (local paths only)."""
-    if spark is not None:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jpath):
-            return []
-        return [st.getPath().getName() for st in fs.listStatus(jpath)]
-    import os
-
-    try:
-        return os.listdir(target_dir)
-    except FileNotFoundError:
-        return []
-
-
-def _refuse_parquet_protocol_state(
-    target_dir: str,
-    spark: SparkSession | None = None,
-    reclaim_bare_buckets: bool = False,
-) -> None:
-    """Creating a Delta table over a directory holding parquet
-    stage-and-promote state would produce a failed or mixed tree
-    instead of resuming the ledger — fail loudly; the operator migrates
-    the table explicitly (read_alias_counts → one Delta write) instead.
-
-    Two distinct parquet layouts are protected (ADVICE r11):
-
-    * The STAGE-AND-PROMOTE writer's state is identified by its ledger
-      markers (``_merged_batch_*`` / ``_staging_batch_*``), which that
-      protocol guarantees coexist with any ``pk=`` bucket it promotes
-      (staging markers precede promotion; the merged marker outlives
-      staging cleanup).
-    * A ``merge_alias_counts`` table is bare ``pk=`` buckets with NO
-      markers (dynamic partition overwrite leaves no root marker —
-      its _SUCCESS lands in the discarded staging dir). At the
-      filesystem level this is INDISTINGUISHABLE from a crashed Delta
-      first commit, which also leaves marker-less pk= data files (the
-      create writes partitionBy('pk') data before the first
-      _delta_log commit). So: bare pk= buckets that CONTAIN data
-      files refuse unless the operator passes
-      ``reclaim_bare_buckets=True`` after verifying no
-      merge_alias_counts table lives there — creating Delta over a
-      live counts table makes the counts invisible to Delta readers
-      (silent undercount). EMPTY pk= directories hold no counts to
-      lose and stay auto-recoverable as crashed-create debris
-      (ADVICE r10: Delta's create only consults its log, so the
-      replayed save() resumes cleanly)."""
-    children = _list_children(target_dir, spark)
-    state = [
-        c
-        for c in children
-        if c.startswith(("_merged_batch_", "_staging_batch_"))
-    ]
-    if not state and not reclaim_bare_buckets:
-        for c in children:
-            if c.startswith("pk=") and any(
-                not g.startswith((".", "_"))
-                for g in _list_children(f"{target_dir}/{c}", spark)
-            ):
-                state = [
-                    f"{c} holds data files with no ledger markers — a "
-                    "committed merge_alias_counts table, or crashed "
-                    "Delta-create debris; pass reclaim_bare_buckets="
-                    "True only after verifying no counts table lives "
-                    "here"
-                ]
-                break
-    if state:
-        raise RuntimeError(
-            f"refusing to create a Delta table at {target_dir!r}: the "
-            f"directory holds parquet merge-protocol state ({state[:3]}"
-            f"{'...' if len(state) > 3 else ''}); migrate the existing "
-            "table explicitly before switching formats"
-        )
-
-
-# Serializes the session-global userMetadata stamp window on the MERGE
-# path: foreachBatch bodies run on driver threads, so two sinks for
-# DIFFERENT targets sharing one SparkSession (the per-target lease does
-# not serialize across tables) could otherwise interleave set/restore —
-# stamping A's commit with B's batch id, or landing A unstamped after
-# B's finally restores first, which makes A's replay re-apply the
-# additive MERGE (double-count). DeltaTable.merge has no per-commit
-# userMetadata option (the save() path does — see _delta_create_table),
-# so the conf window is unavoidable there; the lock bounds it.
-import threading as _threading
-
-_DELTA_STAMP_LOCK = _threading.Lock()
-
-
-def _delta_create_table(
-    partials: DataFrame, target_dir: str, writer_id: str, batch_id: int
-) -> None:
-    """First-batch table creation on the Delta path. The create commit
-    is stamped with the SAME ``batch=<id>`` userMetadata the MERGE
-    commits carry: txnAppId/txnVersion only dedup save()-path commits,
-    so without the stamp an at-least-once replay of the table-creating
-    batch would find the table existing, take the merge branch, see no
-    stamp in history, and re-apply the additive MERGE — double-counting
-    every key from the first batch. The stamp rides the PER-WRITE
-    ``userMetadata`` option (not the session conf), so concurrent
-    writers in one session cannot cross-stamp or clobber a user-set
-    session value. Module-level so tests can intercept it without a
-    Delta runtime present."""
-    (
-        partials.write.format("delta")
-        .partitionBy("pk")
-        .option("txnAppId", writer_id)
-        .option("txnVersion", batch_id)
-        .option("userMetadata", f"batch={batch_id}")
-        .save(target_dir)
-    )
-
-
-def _delta_merge_batch_writer(
-    spark: SparkSession,
-    target_dir: str,
-    delta_table_cls,
-    writer_id: str,
-    lease_seconds: float,
-    reclaim_bare_buckets: bool = False,
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch hook applying the keyed additive merge as a Delta
-    ``MERGE INTO`` — what `merge_upsert_batch_writer`'s parquet
-    stage-and-promote protocol emulates by hand. Delta's ACID commit
-    replaces the staging/promotion machinery outright; the two pieces
-    that remain OURS are:
-
-    * replay idempotency: an at-least-once replayed batch re-applied
-      through an additive MERGE double-counts, so each commit stamps
-      ``userMetadata = "batch=<id>"`` and a replay consults the table
-      HISTORY before merging — the dedup ledger and the data share one
-      transaction log, closing the marker-file crash window the
-      parquet path documents.
-    * the single-writer heartbeat lease, kept for symmetry with the
-      parquet path (Delta serializes conflicting commits, but a second
-      live STREAM would still interleave batches semantically).
-
-    The replay-dedup history scan is bounded to the last
-    ``DELTA_HISTORY_LOOKBACK`` commits: foreachBatch replays only
-    batches at or after the last unfinished checkpoint offset, so any
-    replayed batch_id sits within the last handful of commits — an
-    unbounded history() would grow the per-batch driver work linearly
-    with stream lifetime.
-    """
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        _acquire_or_renew_lease(target_dir, writer_id, lease_seconds)
-        partials = (
-            batch.groupBy("alias", "entity_id")
-            .agg(F.sum("count").alias("count"))
-            .withColumn("pk", _merge_bucket(F.col("alias")))
-        )
-        if not delta_table_cls.isDeltaTable(spark, target_dir):
-            _refuse_parquet_protocol_state(
-                target_dir, spark, reclaim_bare_buckets
-            )
-            _delta_create_table(partials, target_dir, writer_id, batch_id)
-            return
-        tgt = delta_table_cls.forPath(spark, target_dir)
-        stamp = f"batch={batch_id}"
-        applied = {
-            r["userMetadata"]
-            for r in tgt.history(DELTA_HISTORY_LOOKBACK)
-            .select("userMetadata")
-            .collect()
-        }
-        if stamp in applied:
-            return
-        # MERGE has no per-commit userMetadata option, so the stamp must
-        # transit the session conf: the module lock serializes the
-        # set→execute→restore window across concurrent sinks in this
-        # session, and the prior value is RESTORED (not unset) so a
-        # user-set session stamp survives the batch.
-        meta_key = "spark.databricks.delta.commitInfo.userMetadata"
-        with _DELTA_STAMP_LOCK:
-            prev = spark.conf.get(meta_key, None)
-            spark.conf.set(meta_key, stamp)
-            try:
-                (
-                    tgt.alias("t")
-                    .merge(
-                        partials.alias("u"),
-                        "t.alias = u.alias AND t.entity_id = u.entity_id",
-                    )
-                    .whenMatchedUpdate(set={"count": "t.count + u.count"})
-                    .whenNotMatchedInsertAll()
-                    .execute()
-                )
-            finally:
-                if prev is None:
-                    spark.conf.unset(meta_key)
-                else:
-                    spark.conf.set(meta_key, prev)
-
-    return write_batch
 
 
 LEASE_FILE = "_WRITER_LEASE"
@@ -546,12 +282,15 @@ def merge_upsert_batch_writer(
     target_dir: str,
     writer_id: str | None = None,
     lease_seconds: float = DEFAULT_LEASE_SECONDS,
-    delta_table_cls=None,
-    use_delta: bool = False,
-    reclaim_bare_buckets: bool = False,
 ) -> Callable[[DataFrame, int], None]:
-    """foreachBatch hook applying the keyed merge per micro-batch,
-    idempotent under at-least-once replay INCLUDING a crash at any
+    """foreachBatch hook applying the keyed additive merge per
+    micro-batch — the incremental half of the reference's ``ON CONFLICT
+    (alias, entity_id) DO UPDATE SET count = count + excluded.count``
+    upsert (wikidata.py:262-269) over plain parquet partitioned by
+    ``pk`` (a hash bucket of ``alias``). Each batch reads and rewrites
+    only the buckets it touches (`_merged_affected_state`).
+
+    Idempotent under at-least-once replay INCLUDING a crash at any
     point inside the merge — an additive merge applied twice
     double-counts, so "skip if marker exists" alone is not enough (a
     crash between merge and marker would re-merge on replay).
@@ -570,8 +309,7 @@ def merge_upsert_batch_writer(
        partition discovery), then swap it in with two ``os.rename``
        metadata ops (live → trash, temp → live). The only window in
        which a reader can see the bucket absent is between the two
-       renames — microseconds, vs. the full rmtree+copytree it
-       replaced. Deterministic staged content → re-promoting after a
+       renames. Deterministic staged content → re-promoting after a
        crash converges to the same state (replay sees ``_STAGED`` and
        resumes promotion WITHOUT recomputing from the now
        partially-promoted live table, which would double-count); a
@@ -599,30 +337,6 @@ def merge_upsert_batch_writer(
     import socket
 
     wid = writer_id or f"{socket.gethostname()}-{os.getpid()}"
-
-    # Table-format seam, EXPLICIT opt-in only: ``use_delta=True`` (or a
-    # test injecting a DeltaTable class) collapses the whole
-    # stage-and-promote protocol into an ACID MERGE INTO with
-    # history-backed replay dedup — see _delta_merge_batch_writer.
-    # Import-detection alone must NOT flip the sink format: a cluster
-    # that happens to ship delta-spark would otherwise silently start
-    # writing Delta commits over an existing parquet-protocol target.
-    # The parquet protocol below is the dependency-free emulation and
-    # stays the tested local path.
-    if use_delta or delta_table_cls is not None:
-        dt_cls = (
-            delta_table_cls if delta_table_cls is not None else _import_delta()
-        )
-        if dt_cls is None:
-            raise RuntimeError(
-                "merge_upsert_batch_writer(use_delta=True) requires the "
-                "delta-spark package (delta.tables.DeltaTable), which is "
-                "not importable on this cluster"
-            )
-        return _delta_merge_batch_writer(
-            spark, target_dir, dt_cls, wid, lease_seconds,
-            reclaim_bare_buckets,
-        )
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         _acquire_or_renew_lease(target_dir, wid, lease_seconds)
