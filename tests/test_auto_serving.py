@@ -29,14 +29,14 @@ def test_auto_large_branch_dispatches_all_dials(spark, monkeypatch):
     all-dials composition: residual IVFADC, PQ8 codes, nprobe=4."""
     calls = {}
 
-    def fake_plan(spark_, sf_dir_, nprobe=None, spec=None):
-        calls.update(nprobe=nprobe, spec=spec)
-        return "sentinel"
+    def fake_plan(spark_, sf_dir_, nprobes=None, spec=None):
+        calls.update(nprobes=nprobes, spec=spec)
+        return {d: "sentinel" for d in nprobes}
 
     monkeypatch.setattr(S, "corpus_rows", lambda *a: S.PQ_WIDTH_THRESHOLD)
     monkeypatch.setattr(S, "_ivfpq_residual_plan", fake_plan)
     assert S.sim_ann_auto_topk(spark, SF) == "sentinel"
-    assert calls == {"nprobe": 4, "spec": S.PQ8}
+    assert calls == {"nprobes": (4,), "spec": S.PQ8}
 
 
 def test_auto_high_small_branch_is_exact_brute(spark):
@@ -107,8 +107,8 @@ def test_auto_balanced_small_branch_serves_derived_depth(spark):
     want = sorted(
         tuple(r)
         for r in S._trained_probe_topk(
-            *S._trained_index(spark, SF), nprobe=np_
-        ).collect()
+            *S._trained_index(spark, SF), (np_,)
+        )[np_].collect()
     )
     assert got == want and len(got) > 0
 
@@ -119,14 +119,14 @@ def test_auto_balanced_large_branch_derives_nprobe(spark, monkeypatch):
     ceil(20000^(1/4)) = 12."""
     calls = {}
 
-    def fake_plan(spark_, sf_dir_, nprobe=None, spec=None):
-        calls.update(nprobe=nprobe, spec=spec)
-        return "sentinel"
+    def fake_plan(spark_, sf_dir_, nprobes=None, spec=None):
+        calls.update(nprobes=nprobes, spec=spec)
+        return {d: "sentinel" for d in nprobes}
 
     monkeypatch.setattr(S, "corpus_rows", lambda *a: S.PQ_WIDTH_THRESHOLD)
     monkeypatch.setattr(S, "_ivfpq_residual_plan", fake_plan)
     assert S.ann_auto_topk(spark, SF, tier="balanced") == "sentinel"
-    assert calls == {"nprobe": 12, "spec": S.PQ8}
+    assert calls == {"nprobes": (12,), "spec": S.PQ8}
 
 
 @pytest.mark.parametrize(

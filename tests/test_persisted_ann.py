@@ -64,12 +64,12 @@ def test_persisted_serve_matches_in_plan_twin(spark, tmp_path):
 
 
 def test_persisted_serve_scan_is_partition_pruned(spark, tmp_path):
-    """The 100 TB IO claim, plan-pinned: the rindex scan inside the
-    serve carries a cent_id PartitionFilter naming EXACTLY the probed
-    cells (directory pruning), and the production serve's exact
-    re-rank pushes the k-bounded shortlist ids into the embeddings
-    scan (row-group skipping) instead of reading the corpus-width
-    raw-vector column."""
+    """The 100 TB IO claim, plan-pinned: the serve's cell pruning
+    (`_cell_pruned`) gives the rindex scan a cent_id PartitionFilter
+    naming EXACTLY the probed cells (directory pruning), and the
+    production serve's exact re-rank pushes the k-bounded shortlist
+    ids into the embeddings scan (row-group skipping) instead of
+    reading the corpus-width raw-vector column."""
     import re
 
     out, _ = _build(spark, tmp_path)
@@ -77,18 +77,12 @@ def test_persisted_serve_scan_is_partition_pruned(spark, tmp_path):
     # plan toString truncates long metadata at 100 chars by default
     spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
     try:
-        # The rerank pushdown eagerly checkpoints the shortlist, so the
-        # FINAL serve plan no longer contains the rindex scan. Pin the
-        # partition pruning on the un-pushed serving tail over the same
-        # pruned scan (exactly what executes inside the checkpoint)...
-        emb = S.table(spark, SF, "embeddings")
-        raw_sample = S._sample_filter(
-            emb.select(
-                "vec_id",
-                S.F.col("embedding").alias("qe"),
-                S.quantize_embedding(S.F.col("embedding")).alias("qemb"),
-            )
-        )
+        # The shortlist-id pushdown eagerly checkpoints the shortlist,
+        # so the FINAL serve plan no longer contains the rindex scan.
+        # Pin the partition pruning on the serve's pruning function
+        # over the same scan (exactly what executes inside the
+        # checkpoint)...
+        raw_sample = S._raw_sample(S.table(spark, SF, "embeddings"))
         cents = spark.read.parquet(f"{out}/centroids")
         probes = S._assign_blas(
             raw_sample.select("vec_id", "qemb"),
@@ -103,19 +97,11 @@ def test_persisted_serve_scan_is_partition_pruned(spark, tmp_path):
         probed = {
             r["pcell"] for r in probes.select("pcell").distinct().collect()
         }
-        cb = spark.read.parquet(f"{out}/codebooks")
         rindex = spark.read.schema(
             "vec_id bigint, pqcode bigint, pqcode2 bigint, cent_id bigint"
         ).parquet(f"{out}/rindex")
-        pruned = rindex.filter(S.F.col("cent_id").isin(sorted(probed)))
-        # pushdown off: the eager shortlist checkpoint would remove the
-        # rindex scan (and its PartitionFilters) from the final
-        # executedPlan — plan pins must target the un-checkpointed tail
-        tail = S._residual_serve(
-            emb, cents, cb, pruned, raw_sample, probes, S.PQ8,
-            rerank_pushdown=False,
-        )
-        plan = tail._jdf.queryExecution().executedPlan().toString()
+        pruned = S._cell_pruned(rindex, probes)
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
         # <=10 literals render as IN (...), larger lists as INSET ...
         m = re.search(
             r"PartitionFilters: \[cent_id#\d+L? IN(?:SET)? \(?([0-9, ]+)",
@@ -296,7 +282,9 @@ def test_mmr_ann_multi_persisted_equals_in_plan(spark):
 
 def test_mmr_candidate_scan_is_partition_pruned(spark, tmp_path):
     """VERDICT r15 #2: PartitionFilters pinned on the mindex candidate
-    scan — the serve reads the probed cells' directories only."""
+    scan the persisted MMR and hard-negative serves run
+    (`_cell_pruned` over `_mindex`) — the serve reads the probed
+    cells' directories only."""
     import re
 
     out, _ = _build(spark, tmp_path)
@@ -319,12 +307,10 @@ def test_mmr_candidate_scan_is_partition_pruned(spark, tmp_path):
             n_rows=S._QUERY_SAMPLE_MAX_ROWS,
             k=S.derived_k(S.corpus_rows(SF, "embeddings")),
         )
-        cells = sorted({r["cent_id"] for r in probes.select("cent_id").collect()})
+        probes = probes.select(S.F.col("cent_id").alias("pcell"))
+        cells = sorted({r["pcell"] for r in probes.collect()})
         assert cells
-        mindex = spark.read.schema(
-            "vec_id bigint, embedding array<float>, cent_rank int, "
-            "cent_id bigint"
-        ).parquet(f"{out}/mindex").filter(S.F.col("cent_id").isin(cells))
+        mindex = S._cell_pruned(S._mindex(spark, out), probes)
         plan = mindex._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)

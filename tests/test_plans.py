@@ -476,12 +476,12 @@ def test_mmr_ann_pool_comes_from_index_join(spark):
     trained-index serve shape), not a corpus cross score. The
     registered query's FINAL frame is the driver-greedy's
     createDataFrame (ExistingRDD — the corpus work happens at build
-    time), so the pin targets the pool plan the build executes."""
+    time), so the pin targets `_mmr_ann_pool`, the pool plan both ANN
+    MMR queries execute."""
     import io
     import contextlib
 
     import pyspark.sql.functions as F
-    from pyspark.sql import Window
 
     import wikid_spark.queries.similarity as S
 
@@ -497,25 +497,7 @@ def test_mmr_ann_pool_comes_from_index_join(spark):
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
     )
-    scored = (
-        a2.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc"),
-            F.round(
-                S.cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("simq"),
-            "embedding",
-        )
-        .distinct()
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("simq"), "doc")
-    cand = (
-        scored.withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= S._MMR_POOL)
-        .drop("prn")
-    )
+    cand = S._mmr_ann_pool(a2, probes)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         cand.explain("formatted")

@@ -377,7 +377,7 @@ def test_pq8_packing_parity_numpy_vs_duckdb_exhaustive_top_byte():
     con.close()
 
 
-def test_flat_adc_rerank_pushdown_plan_and_identity(spark):
+def test_flat_adc_shortlist_id_pushdown_plan_and_identity(spark):
     """Round 12: the shortlist-id pushdown extends from the persisted
     path to the in-plan flat-ADC rerank family — the raw-vector rerank
     scan carries In(vec_id …) PushedFilters (row-group skipping), and

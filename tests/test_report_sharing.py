@@ -1,7 +1,8 @@
-"""Round-11 recall-report serving-pass sharing: the multi-depth
-helpers must be OUTPUT-IDENTICAL to the registered single-depth plans
-they replace inside `sim_recall_report` (the report's oracle pins the
-end-to-end values; these pin the helpers directly, per depth)."""
+"""Round-11 recall-report serving-pass sharing: a depth-tuple call of
+the serving tails (one shared candidate pass for several probe depths)
+must be OUTPUT-IDENTICAL, per depth, to a one-depth call of the same
+tail — the plan every registered query serves (the report's oracle
+pins the end-to-end values; these pin the tails directly)."""
 
 from __future__ import annotations
 
@@ -16,21 +17,21 @@ def _rows(df):
 
 def test_trained_probe_multi_matches_single_depth_plans(spark):
     trained = S._trained_index(spark, SF)
-    multi = S._trained_probe_topk_multi(*trained)
+    multi = S._trained_probe_topk(*trained, (1, 2, 4))
     assert set(multi) == {1, 2, 4}
     for np_ in (1, 2, 4):
-        want = _rows(S._trained_probe_topk(*trained, nprobe=np_))
+        want = _rows(S._trained_probe_topk(*trained, (np_,))[np_])
         got = _rows(multi[np_])
         assert got == want and len(got) > 0, f"nprobe={np_}"
 
 
-def test_residual_serve_multi_matches_single_depth_plans(spark):
+def test_residual_depth_tuple_matches_single_depth_plans(spark):
     idx = S._residual_index(spark, SF, spec=S.PQ4)
-    multi = S._residual_serve_multi(spark, SF, idx, nprobes=(2, 4))
+    multi = S._ivfpq_residual_plan(spark, SF, nprobes=(2, 4), idx=idx)
     assert set(multi) == {2, 4}
     for np_ in (2, 4):
         want = _rows(
-            S._ivfpq_residual_plan(spark, SF, nprobe=np_, idx=idx)
+            S._ivfpq_residual_plan(spark, SF, nprobes=(np_,), idx=idx)[np_]
         )
         got = _rows(multi[np_])
         assert got == want and len(got) > 0, f"nprobe={np_}"

@@ -474,6 +474,31 @@ def test_keyed_merge_single_writer_lease(spark, tmp_path):
         assert f.read().strip() == "writer-b"
 
 
+def test_lease_resolves_file_uri_and_refuses_remote_roots(tmp_path, monkeypatch):
+    """The lease is a driver-local file: a ``file:`` root leases at its
+    local path (so two publishers on it exclude each other), and a
+    remote scheme raises before anything is created — never a literal
+    ``./file:/…`` or ``./s3a:/…`` directory under the working dir."""
+    import os
+
+    from wikid_spark.streaming import ingest
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = tmp_path / "x"
+    ingest._acquire_or_renew_lease(f"file:{root}", "w1", 300)
+    assert os.path.exists(root / ingest.LEASE_FILE)
+    with pytest.raises(ingest.ConcurrentWriterError):
+        ingest._acquire_or_renew_lease(f"file:{root}", "w2", 300)
+    ingest._assert_lease_held(f"file:{root}", "w1")
+    with pytest.raises(ValueError, match="s3a://b/x"):
+        ingest._acquire_or_renew_lease("s3a://b/x", "w1", 300)
+    ingest._release_lease(f"file:{root}", "w1")
+    assert not os.path.exists(root / ingest.LEASE_FILE)
+    assert os.listdir(cwd) == []
+
+
 def test_streaming_incremental_dedup_against_persisted_index(
     spark, tmp_path
 ):

@@ -8,11 +8,19 @@ Usage: python tools/capture_plans.py <tag> <suffix> [name ...]
 Writes plans/<tag>/<query>_<suffix>.txt. Building a DataFrame runs any
 driver-side build work the query does (Lloyd training, BPE rounds), so
 this is also a smoke test that every named query still constructs.
+The corpus is read from $SPARK_GRAFT_SF_DIR (default sf0.1).
+
+The written text is normalised (`normalise`): expression ids (#123,
+#45L), exchange plan ids (plan_id=7) and checkpoint RDD ids
+(MapPartitionsRDD[1666]) are renumbered in order of first appearance,
+so two captures of the same plan diff empty and a before/after pair
+diffs only where the plan itself changed.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -20,6 +28,28 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE
 from wikid_spark.registry import all_queries
 from wikid_spark.session import get_spark
+
+
+_IDS = (
+    re.compile(r"#(\d+)"),
+    re.compile(r"plan_id=(\d+)"),
+    re.compile(r"RDD\[(\d+)\]"),
+)
+
+
+def normalise(plan: str) -> str:
+    """Renumber the per-capture ids of an explain string: each id
+    pattern counts from 0 in order of first appearance, so identical
+    plans render identically while distinct ids stay distinct."""
+    for pat in _IDS:
+        seen: dict[str, int] = {}
+
+        def renum(m, seen=seen):
+            n = seen.setdefault(m.group(1), len(seen))
+            return m.group(0)[: m.start(1) - m.start(0)] + str(n)
+
+        plan = pat.sub(renum, plan)
+    return plan
 
 
 def main() -> None:
@@ -42,7 +72,7 @@ def main() -> None:
             df._jdf.queryExecution(), "formatted"
         )
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(plan)
+            fh.write(normalise(plan))
     spark.stop()
 
 

@@ -174,6 +174,54 @@ _BUCKETS_CTE = f"""
 """
 
 
+def _scored(
+    cands: DataFrame,
+    id_col: str = "neighbor_id",
+    keep=(),
+    where=None,
+    drop_self: bool = True,
+) -> DataFrame:
+    """The scoring step of the ranking contract every ANN query shares
+    with its DuckDB oracle: drop the self-match (``vec_id`` ==
+    ``query_id``, ANDed with the caller's extra predicate ``where``),
+    then emit (query_id, ``id_col``, *``keep``, sim) with sim =
+    ROUND(cosine(embedding, qe), 4) — ranking happens on the ROUNDED
+    value, so cross-engine float noise cannot reorder ties. ``cands``
+    is the caller's join (cross, cell or bucket equi-join) of candidate
+    rows (vec_id, embedding) to query rows (query_id, qe).
+    ``drop_self=False`` scores a shortlist already keyed by a
+    self-free ``id_col`` (the ADC re-rank), so no filter is planned.
+    Callers whose probe can reach one pair twice (more than one probed
+    cell, more than one hash table) de-duplicate the result: sim is a
+    deterministic function of the pair, so DISTINCT is exact."""
+    sim = F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4)
+    if not drop_self:
+        return cands.select("query_id", id_col, *keep, sim.alias("sim"))
+    cond = F.col("vec_id") != F.col("query_id")
+    if where is not None:
+        cond = cond & where
+    return cands.filter(cond).select(
+        "query_id", F.col("vec_id").alias(id_col), *keep, sim.alias("sim")
+    )
+
+
+def _top_n(
+    scored: DataFrame, n: int, id_col: str = "neighbor_id", ordered: bool = True
+) -> DataFrame:
+    """The top-n cut of the ranking contract: ``rn`` = row_number per
+    query_id over (sim DESC, ``id_col`` ASC) — the oracles' ROW_NUMBER
+    tie-break — keeping rn <= n, ordered by (query_id, rn).
+    ``ordered=False`` skips the sort for a pool whose consumer re-keys
+    it (the MMR greedy)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col(id_col)
+    )
+    top = scored.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= n
+    )
+    return top.orderBy("query_id", "rn") if ordered else top
+
+
 @query(
     "sim_ann_brute_topk",
     oracle="""
@@ -202,21 +250,7 @@ def sim_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2000)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    sims = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
-    )
+    return _top_n(_scored(emb.crossJoin(F.broadcast(q))), 3)
 
 
 @query(
@@ -292,20 +326,11 @@ def sim_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _bucket_expr(F.col("qemb")).cast("long").alias("qbucket"),
         )
     )
-    cands = (
-        bucketed.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
+    return _top_n(
+        _scored(
+            bucketed.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
+        ),
+        3,
     )
 
 
@@ -638,24 +663,8 @@ def sim_ivf_derived_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("qcell"),
     )
-    cands = (
-        a2.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "neighbor_id"
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
+    return _top_n(
+        _scored(a2.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))), 3
     )
 
 
@@ -705,20 +714,11 @@ def sim_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("qcell"),
     )
-    cands = (
-        assigned.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
+    return _top_n(
+        _scored(
+            assigned.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))
+        ),
+        3,
     )
 
 
@@ -794,22 +794,10 @@ def sim_ivf_ann_topk_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("pcell"),
         )
     )
-    cands = (
+    cands = _scored(
         assigned.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
-    )
+    ).distinct()
+    return _top_n(cands, 3)
 
 
 TRAINED_DERIVED_ROUNDS = 3
@@ -1166,25 +1154,13 @@ def sim_lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Value-identical: sim is a deterministic function of the pair
     # (vec_id → embedding is unique), so every duplicate row carries
     # the same sim and dropDuplicates keeps the same value.
-    cands = (
+    cands = _scored(
         bucketed.join(
             F.broadcast(q),
             (F.col("t") == F.col("qt")) & (F.col("bucket") == F.col("qbucket")),
         )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
-    )
+    ).dropDuplicates(["query_id", "neighbor_id"])
+    return _top_n(cands, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -1487,20 +1463,11 @@ def sim_ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("qcell"),
     )
-    cands = (
-        assigned.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_similarity(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
+    return _top_n(
+        _scored(
+            assigned.join(F.broadcast(q), F.col("cent_id") == F.col("qcell"))
+        ),
+        3,
     )
 
 
@@ -2230,98 +2197,50 @@ def _trained_index(spark: SparkSession, sf_dir: str):
     return grp["trained"]
 
 
-def _trained_probe_topk(qemb, cents, a2, k: int, nprobe: int) -> DataFrame:
-    """Serve top-3 from the trained top-2 index at probe depth
-    ``nprobe``. nprobe=1 reads the probe cell off the index rows the
-    corpus pass already produced; deeper probes rank the SAMPLE
-    (≤40 rows) against the K centroids — probe rows stay
-    ~nprobe·sqrt(n), the sub-linear budget. Candidates are
-    de-duplicated across probes when nprobe > 1 (a neighbor indexed
-    in two cells can match two probes; sim is a deterministic double
-    per pair, so DISTINCT is exact)."""
+def _trained_probe_topk(
+    qemb: DataFrame, cents: DataFrame, a2: DataFrame, k: int, nprobes
+) -> dict[int, DataFrame]:
+    """Serve top-3 from the trained top-2 index at every probe depth in
+    ``nprobes``; returns {depth: frame}. The SAMPLE (≤40 rows) ranks
+    against the K centroids at max(nprobes) — probe rows stay
+    ~nprobe·sqrt(n), the sub-linear budget. Candidates de-duplicate
+    across probes at depth > 1 (a neighbor indexed in two cells can
+    match two probes; sim is a deterministic double per pair, so
+    DISTINCT is exact).
+
+    Several depths share ONE corpus candidate pass (the recall
+    report's cost bound): the probe RANK rides the candidates, the
+    join + exact cosine materializes once (localCheckpointed — one
+    branch per depth would otherwise re-run the corpus join), and
+    depth d is the prank <= d rows — exactly the candidate set the
+    one-depth plan probes. A one-depth call plans neither, so every
+    registered query keeps its certified plan."""
     # Probe assignment runs as the JVM sample kernel (`_probe_ranks`)
     # at every depth: the nprobe=1 branch used to re-read ``a2`` (a
     # second corpus-wide Python assign per serve), deeper probes used
     # to push 40 rows through the cogrouped kernel's exchanges. The
     # nprobe=1 cell equals a2's cent_rank=1 row by construction (same
     # centroids, same exact-integer argmin).
-    probes = _probe_ranks(_sample_filter(qemb), cents, top_m=nprobe, k=k).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("cent_id").alias("pcell"),
-    )
-    cands = (
-        a2.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
-    )
-    if nprobe > 1:
-        cands = cands.distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "neighbor_id"
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
-    )
-
-
-def _trained_probe_topk_multi(
-    qemb: DataFrame, cents: DataFrame, a2: DataFrame, k: int, nprobes=(1, 2, 4)
-) -> dict[int, DataFrame]:
-    """All probe depths served from ONE shared corpus candidate pass
-    (round-11 recall-report cost bound): the sample ranks once against
-    the K centroids at max(nprobes) with its probe RANK kept, the
-    corpus-side join + exact cosine computes once (localCheckpointed —
-    three union branches would otherwise re-run the corpus join per
-    depth), and each depth is a rank filter over the materialized
-    candidates. Output-identical to `_trained_probe_topk` per depth:
-    depth np's candidate set is exactly the prank <= np rows (same
-    assignment, same tie-breaks), sims are the same rounded doubles,
-    and the nprobe=1 branch skips the cross-probe DISTINCT exactly as
-    the single-depth plan does. Only the recall report calls this —
-    the registered per-depth queries keep their own certified plans."""
+    shared = len(nprobes) > 1
+    rank = ("prank",) if shared else ()
     probes = _probe_ranks(
         _sample_filter(qemb), cents, top_m=max(nprobes), k=k
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
-        F.col("cent_rank").alias("prank"),
+        *([F.col("cent_rank").alias("prank")] if shared else []),
     )
-    cands = (
-        a2.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "prank",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
-        .localCheckpoint(eager=False)
+    cands = _scored(
+        a2.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell")),
+        keep=rank,
     )
+    if shared:
+        cands = cands.localCheckpoint(eager=False)
     out = {}
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "neighbor_id"
-    )
-    for np_ in nprobes:
-        c = cands.filter(F.col("prank") <= np_).drop("prank")
-        if np_ > 1:
-            c = c.distinct()
-        out[np_] = (
-            c.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .orderBy("query_id", "rn")
-        )
+    for d in nprobes:
+        c = cands.filter(F.col("prank") <= d).drop("prank") if shared else cands
+        out[d] = _top_n(c.distinct() if d > 1 else c, 3)
     return out
 
 
@@ -2344,7 +2263,7 @@ def sim_ivf_trained_derived_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: training adds {TRAINED_DERIVED_ROUNDS} corpus passes
     (broadcast-K BLAS, no corpus shuffle); index build and serving
     match sim_ivf_derived_topk exactly."""
-    return _trained_probe_topk(*_trained_index(spark, sf_dir), nprobe=1)
+    return _trained_probe_topk(*_trained_index(spark, sf_dir), (1,))[1]
 
 
 @query(
@@ -2363,7 +2282,7 @@ def sim_ivf_trained_nprobe2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; candidates de-duplicate across probes before the exact
     cosine top-3. Audited against every other method in
     sim_recall_report (ivf_trained_np2)."""
-    return _trained_probe_topk(*_trained_index(spark, sf_dir), nprobe=2)
+    return _trained_probe_topk(*_trained_index(spark, sf_dir), (2,))[2]
 
 
 @query(
@@ -2377,7 +2296,7 @@ def sim_ivf_trained_nprobe4_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~4·2·sqrt(n): at sf1 that is still ~1/10 the rows the fixed-K
     nprobe2 path reads, recovering most of its recall (SCALE.md
     round-9 table)."""
-    return _trained_probe_topk(*_trained_index(spark, sf_dir), nprobe=4)
+    return _trained_probe_topk(*_trained_index(spark, sf_dir), (4,))[4]
 
 
 # ---------------------------------------------------------------------------
@@ -3047,7 +2966,7 @@ def _pq_topk(cands: DataFrame, depth: int) -> DataFrame:
     )
 
 
-def _rerank_pushdown_ids(emb: DataFrame, short: DataFrame):
+def _shortlist_id_pushdown(emb: DataFrame, short: DataFrame):
     """Shortlist-id pushdown for the exact re-rank (round 12 — extends
     the round-11 persisted-path discipline to every in-plan rerank
     tail): the re-rank otherwise fetches its ≤|queries|·depth shortlist
@@ -3077,22 +2996,9 @@ def _pq_exact_rerank(
         emb.join(F.broadcast(short), emb.vec_id == F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "embedding")
         .join(F.broadcast(queries.select("query_id", "qe")), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "neighbor_id"
-    )
-    return (
-        re.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .orderBy("query_id", "rn")
-    )
+    # the ADC shortlists drop the self-match before their cut
+    return _top_n(_scored(re, drop_self=False), 3)
 
 
 def _pq_rerank_plan(
@@ -3116,7 +3022,7 @@ def _pq_rerank_plan(
     )
     cands = _pq_adc_cands(codes, _pq_dtab(sample, cb, spec=spec), spec)
     short = _pq_topk(cands, depth).select("query_id", "neighbor_id")
-    emb, short = _rerank_pushdown_ids(emb, short)
+    emb, short = _shortlist_id_pushdown(emb, short)
     return _pq_exact_rerank(emb, short, sample)
 
 
@@ -3314,6 +3220,18 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivfpq_plan(spark, sf_dir, trained=False)
 
 
+def _raw_sample(emb: DataFrame) -> DataFrame:
+    """The query sample with its raw (``qe``) and quantized (``qemb``)
+    vectors — the probe and exact re-rank inputs of every IVF-PQ serve."""
+    return _sample_filter(
+        emb.select(
+            "vec_id",
+            F.col("embedding").alias("qe"),
+            quantize_embedding(F.col("embedding")).alias("qemb"),
+        )
+    )
+
+
 def _ivfpq_plan(
     spark: SparkSession,
     sf_dir: str,
@@ -3356,13 +3274,7 @@ def _ivfpq_plan(
         k=k,
     ).select("vec_id", "cent_id", "pqcode")
 
-    raw_sample = _sample_filter(
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("qe"),
-            quantize_embedding(F.col("embedding")).alias("qemb"),
-        )
-    )
+    raw_sample = _raw_sample(emb)
     probes = _probe_ranks(
         raw_sample.select("vec_id", "qemb"), cents, top_m=_IVFPQ_NPROBE, k=k
     ).select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("pcell"))
@@ -3390,7 +3302,7 @@ def _ivfpq_plan(
         .filter(F.col("rn") <= 10)
         .select("query_id", "neighbor_id")
     )
-    emb, short = _rerank_pushdown_ids(emb, short)
+    emb, short = _shortlist_id_pushdown(emb, short)
     return _pq_exact_rerank(
         emb, short, raw_sample.select(F.col("vec_id").alias("query_id"), "qe")
     )
@@ -3892,16 +3804,20 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline on the shared query sample (vec_id % 50 = 0 AND
     vec_id < 2000) — 18 methods, plus a 19th row (hard_neg_ann)
     auditing the IVF-routed hard-negative miner against its own exact
-    label-filtered truth (sim_hard_negatives_topk). Composes the SAME plan builders the
-    registered method queries call (`_trained_probe_topk`,
-    `_pq_rerank_plan`, `_ivfpq_plan`, `_ivfpq_residual_plan`), so the
-    report cannot drift from what the methods return; each trained
-    artifact builds ONCE per report (derived-K Lloyd cells, the 4-bit
-    and 8-bit PQ codebooks, the residual index — training is
-    deterministic, so sharing is output-identical) and the packed code
-    tables localCheckpoint so the corpus encodes once per family
-    instead of once per method row. One row per method:
-    (method, n_hits, n_brute, recall_at_3)."""
+    label-filtered truth (sim_hard_negatives_topk). Composes the SAME
+    plan builders the registered method queries call, so the report
+    cannot drift from what the methods return. Each trained artifact
+    builds ONCE per report (derived-K Lloyd cells, the 4-bit and 8-bit
+    PQ codebooks, the residual index — training is deterministic, so
+    sharing is output-identical), and the packed code tables
+    localCheckpoint so the corpus encodes once per family instead of
+    once per method row. The two depth-tuple serving tails each serve
+    several methods from one candidate pass: `_trained_probe_topk`
+    with depths (1, 2, 4) gives the three ivf_trained rows, and
+    `_ivfpq_residual_plan` with depths (2, 4) over the shared PQ4
+    residual index gives both ivfpq_residual rows — each depth's rows
+    equal the one-depth call the registered query makes. One row per
+    method: (method, n_hits, n_brute, recall_at_3)."""
     # The exact-truth lists are sample×topk-bounded RESULTS (≤ |sample|
     # · 3 rows) whose subtrees are full corpus passes; each is consumed
     # twice below (the hits join AND the n_brute total), and AQE reuse
@@ -3929,8 +3845,8 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained = _trained_index(spark, sf_dir)
     # One shared corpus candidate pass serves all three probe depths
     # (round-11: the serving passes are the report's cost now that
-    # builds are shared — output-identical, see the multi helpers).
-    for np_, df in _trained_probe_topk_multi(*trained).items():
+    # builds are shared — output-identical per depth).
+    for np_, df in _trained_probe_topk(*trained, (1, 2, 4)).items():
         part = df.select(
             F.lit(f"ivf_trained_np{np_}").alias("method"),
             "query_id",
@@ -3989,15 +3905,15 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # np2 and np4 over the PQ4 residual index share one ADC pass
         *(
             (f"ivfpq_residual{'_np4' if np_ == 4 else ''}", df)
-            for np_, df in _residual_serve_multi(
-                spark, sf_dir, residx, nprobes=(2, 4)
+            for np_, df in _ivfpq_residual_plan(
+                spark, sf_dir, nprobes=(2, 4), idx=residx
             ).items()
         ),
         (
             "ivfpq8_residual_np4",
             _ivfpq_residual_plan(
-                spark, sf_dir, nprobe=4, idx=residx8, spec=PQ8
-            ),
+                spark, sf_dir, nprobes=(4,), idx=residx8, spec=PQ8
+            )[4],
         ),
     ):
         part = df.select(
@@ -4283,37 +4199,45 @@ def _residual_index(
     return out
 
 
+def _residual_probes(
+    raw_sample: DataFrame, cents: DataFrame, nprobes, k: int
+) -> DataFrame:
+    """The sample's (query_id, pcell) probes at max(``nprobes``) over
+    the K trained centroids; several depths also keep the probe rank
+    (``prank``) that `_residual_serve` filters each depth on."""
+    return _probe_ranks(
+        raw_sample.select("vec_id", "qemb"), cents, top_m=max(nprobes), k=k
+    ).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("cent_id").alias("pcell"),
+        *([F.col("cent_rank").alias("prank")] if len(nprobes) > 1 else []),
+    )
+
+
 def _ivfpq_residual_plan(
     spark: SparkSession,
     sf_dir: str,
-    nprobe: int = _IVFPQ_NPROBE,
+    nprobes=(_IVFPQ_NPROBE,),
     idx=None,
     spec: PQSpec = PQ4,
-) -> DataFrame:
-    """Serve top-3 from the residual IVFADC index at probe depth
-    ``nprobe``: rank the query sample against the K trained centroids,
-    build one PER-CELL ADC table from the query's residual against
-    each probed cell's centroid, scan only the probed cells' 24-byte
-    rows, re-rank the 10-row shortlist exactly. ``idx`` lets the
-    recall report share one `_residual_index` build across probe
-    depths."""
+) -> dict[int, DataFrame]:
+    """Serve top-3 from the residual IVFADC index at every probe depth
+    in ``nprobes`` ({depth: frame}): rank the query sample against the
+    K trained centroids, build one PER-CELL ADC table from the query's
+    residual against each probed cell's centroid, scan only the probed
+    cells' 24-byte rows, re-rank the 10-row shortlist exactly. ``idx``
+    lets the recall report share one `_residual_index` build across
+    probe depths."""
     emb, cents, cb, rindex = (
         idx if idx is not None else _residual_index(spark, sf_dir, spec=spec)
     )
-    raw_sample = _sample_filter(
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("qe"),
-            quantize_embedding(F.col("embedding")).alias("qemb"),
-        )
+    raw_sample = _raw_sample(emb)
+    probes = _residual_probes(
+        raw_sample, cents, nprobes, derived_k(corpus_rows(sf_dir, "embeddings"))
     )
-    probes = _probe_ranks(
-        raw_sample.select("vec_id", "qemb"),
-        cents,
-        top_m=nprobe,
-        k=derived_k(corpus_rows(sf_dir, "embeddings")),
-    ).select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("pcell"))
-    return _residual_serve(emb, cents, cb, rindex, raw_sample, probes, spec)
+    return _residual_serve(
+        emb, cents, cb, rindex, raw_sample, probes, nprobes, spec
+    )
 
 
 def _residual_serve(
@@ -4323,24 +4247,32 @@ def _residual_serve(
     rindex: DataFrame,
     raw_sample: DataFrame,
     probes: DataFrame,
+    nprobes,
     spec: PQSpec = PQ4,
-    rerank_pushdown: bool = True,
-) -> DataFrame:
+) -> dict[int, DataFrame]:
     """The residual IVFADC serving tail over an EXPLICIT index and the
-    sample's (query_id, pcell) ``probes`` — the shared plan of the
-    in-plan queries (`_ivfpq_residual_plan`) and the persisted-index
-    serving path (`serve_persisted_topk`, which hands a
-    partition-PRUNED ``rindex`` scan plus the probes that derived the
-    pruning so the probe assignment isn't computed twice).
+    sample's `_residual_probes` — the shared plan of the in-plan
+    queries (`_ivfpq_residual_plan`) and the persisted-index serving
+    path (`serve_persisted_topk`, which hands a cell-PRUNED ``rindex``
+    scan plus the probes that derived the pruning so the probe
+    assignment isn't computed twice). Returns {depth: frame} for every
+    depth in ``nprobes``.
 
-    ``rerank_pushdown`` (default ON since round 12, in-plan and
-    persisted alike — see `_rerank_pushdown_ids` for the discipline
-    and its bounds): pushes the shortlist's neighbor ids into the
-    embeddings scan as an In(vec_id …) filter, removing the
-    corpus-width raw-vector read from the exact re-rank. Results are
-    identical either way; ``False`` exists for plan-pin tests, which
-    must target the un-checkpointed tail (an eager localCheckpoint
-    removes everything upstream from the final executedPlan)."""
+    Several depths share ONE ADC candidate pass (the recall report's
+    cost bound): per-(query, cell) residual distance tables build once
+    for the union of probed cells, the probed-cell scan + ADC lookup
+    materializes once (localCheckpointed), and depth d is the
+    prank <= d rows before its own shortlist window — each vector
+    indexes in exactly its rank-1 cell, so those are exactly the
+    one-depth plan's (query, neighbor) pairs with the same keyed-ADC
+    distances. A one-depth call plans neither.
+
+    The exact re-rank always takes the shortlist-id pushdown
+    (`_shortlist_id_pushdown`): the shortlist's neighbor ids push into
+    the embeddings scan as an In(vec_id …) filter, removing the
+    corpus-width raw-vector read."""
+    shared = len(nprobes) > 1
+    rank = ("prank",) if shared else ()
     qres = (
         probes.join(
             F.broadcast(
@@ -4365,118 +4297,32 @@ def _residual_serve(
         .select(
             "query_id",
             "pcell",
+            *rank,
             F.col("vec_id").alias("neighbor_id"),
             *spec.cols,
         )
     )
     adc = cands.join(F.broadcast(dtab), ["query_id", "pcell"]).select(
-        "query_id", "neighbor_id", _pq_adist(spec).alias("adist")
+        "query_id", *rank, "neighbor_id", _pq_adist(spec).alias("adist")
     )
+    if shared:
+        adc = adc.localCheckpoint(eager=False)
     # A neighbor indexed near a cell boundary still appears ONCE (each
     # vector indexes in exactly its rank-1 cell), but deeper probes can
     # hit it through at most one probed cell, so no DISTINCT is needed:
     # (query_id, neighbor_id) pairs are unique by construction.
     w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    short = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id")
-    )
-    if rerank_pushdown:
-        emb, short = _rerank_pushdown_ids(emb, short)
-    return _pq_exact_rerank(
-        emb, short, raw_sample.select(F.col("vec_id").alias("query_id"), "qe")
-    )
-
-
-def _residual_serve_multi(
-    spark: SparkSession,
-    sf_dir: str,
-    idx,
-    nprobes=(2, 4),
-    spec: PQSpec = PQ4,
-) -> dict[int, DataFrame]:
-    """All residual-IVFADC probe depths served from ONE shared ADC
-    candidate pass (round-11 recall-report cost bound): probe
-    assignment runs once at max(nprobes) keeping the probe RANK,
-    per-(query, cell) residual distance tables build once for the
-    union of probed cells, the probed-cell candidate scan + ADC lookup
-    computes once (localCheckpointed), and each depth is a prank
-    filter before its own shortlist window + exact re-rank.
-    Output-identical per depth to `_ivfpq_residual_plan`: each vector
-    indexes in exactly its rank-1 cell, so depth np's (query, neighbor)
-    pairs are exactly the prank <= np rows with the same keyed-ADC
-    distances. Only the recall report calls this."""
-    emb, cents, cb, rindex = idx
-    raw_sample = _sample_filter(
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("qe"),
-            quantize_embedding(F.col("embedding")).alias("qemb"),
-        )
-    )
-    probes = _probe_ranks(
-        raw_sample.select("vec_id", "qemb"),
-        cents,
-        top_m=max(nprobes),
-        k=derived_k(corpus_rows(sf_dir, "embeddings")),
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("cent_id").alias("pcell"),
-        F.col("cent_rank").alias("prank"),
-    )
-    qres = (
-        probes.join(
-            F.broadcast(
-                raw_sample.select(F.col("vec_id").alias("query_id"), "qemb")
-            ),
-            "query_id",
-        )
-        .join(
-            F.broadcast(cents.withColumnRenamed("cent_id", "pcell")), "pcell"
-        )
-        .select(
-            "query_id",
-            "pcell",
-            F.zip_with("qemb", "cemb", lambda a, b: a - b).alias("qq"),
-        )
-    )
-    dtab = _pq_dtab(qres, cb, keys=("query_id", "pcell"), spec=spec)
-    cands = (
-        rindex.join(
-            F.broadcast(probes), F.col("cent_id") == F.col("pcell")
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "pcell",
-            "prank",
-            F.col("vec_id").alias("neighbor_id"),
-            *spec.cols,
-        )
-    )
-    adc = (
-        cands.join(F.broadcast(dtab), ["query_id", "pcell"])
-        .select(
-            "query_id", "prank", "neighbor_id", _pq_adist(spec).alias("adist")
-        )
-        .localCheckpoint(eager=False)
-    )
+    queries = raw_sample.select(F.col("vec_id").alias("query_id"), "qe")
     out = {}
-    w = Window.partitionBy("query_id").orderBy("adist", "neighbor_id")
-    for np_ in nprobes:
+    for d in nprobes:
         short = (
-            adc.filter(F.col("prank") <= np_)
+            (adc.filter(F.col("prank") <= d) if shared else adc)
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= 10)
             .select("query_id", "neighbor_id")
         )
-        emb_np, short = _rerank_pushdown_ids(emb, short)
-        out[np_] = _pq_exact_rerank(
-            emb_np,
-            short,
-            raw_sample.select(F.col("vec_id").alias("query_id"), "qe"),
-        )
+        emb_d, short = _shortlist_id_pushdown(emb, short)
+        out[d] = _pq_exact_rerank(emb_d, short, queries)
     return out
 
 
@@ -4500,7 +4346,7 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank) plus one broadcast-K residual subtraction per
     corpus pass — the residual never materializes outside the
     projection."""
-    return _ivfpq_residual_plan(spark, sf_dir, nprobe=_IVFPQ_NPROBE)
+    return _ivfpq_residual_plan(spark, sf_dir)[_IVFPQ_NPROBE]
 
 
 # ---------------------------------------------------------------------------
@@ -4599,7 +4445,7 @@ def sim_ivfpq_residual_np4_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each vector indexes once (its rank-1 cell), so (query, neighbor)
     pairs stay unique across probes — no dedup stage. Audited as
     ivfpq_residual_np4 in sim_recall_report."""
-    return _ivfpq_residual_plan(spark, sf_dir, nprobe=4)
+    return _ivfpq_residual_plan(spark, sf_dir, nprobes=(4,))[4]
 
 
 @query(
@@ -4624,7 +4470,7 @@ def sim_ivfpq8_residual_np4_topk(
     budget over 8-bit codes ranks it correctly. The 32-byte index row
     (vec_id, cent_id, 2 words) still reads ~10x less IO per candidate
     than raw vectors, and the exact pass stays shortlist-bounded."""
-    return _ivfpq_residual_plan(spark, sf_dir, nprobe=4, spec=PQ8)
+    return _ivfpq_residual_plan(spark, sf_dir, nprobes=(4,), spec=PQ8)[4]
 
 
 def _scale_gated_oracle(small_sql: str, large_sql: str) -> str:
@@ -5037,43 +4883,27 @@ def serve_persisted_topk(
     takes over. Everything downstream is the exact serving tail the
     in-plan queries run (`_residual_serve`), so results are identical —
     only the scan's IO changes, from the full index to
-    ~nprobe·|queries| cell directories. The index artifacts come from
-    the session-cached hold-open handle (`load_ann_index`), so the
-    per-serve partition-listing job is paid once per session, not per
-    serve (round 12)."""
-    handle = load_ann_index(spark, index_dir, spec)
-    spec, cents, cb, rindex, k = handle
+    ~nprobe·|queries| cell directories (`_cell_pruned`). The index
+    artifacts come from the session-cached hold-open handle
+    (`load_ann_index`), so the per-serve partition-listing job is paid
+    once per session, not per serve (round 12)."""
+    spec, cents, cb, rindex, k = load_ann_index(spark, index_dir, spec)
     emb = table(spark, sf_dir, "embeddings")
-    raw_sample = _sample_filter(
-        emb.select(
-            "vec_id",
-            F.col("embedding").alias("qe"),
-            quantize_embedding(F.col("embedding")).alias("qemb"),
-        )
+    raw_sample = _raw_sample(emb)
+    # assign once: the cell collect and the serve's join both reuse it
+    probes = _residual_probes(raw_sample, cents, (nprobe,), k).localCheckpoint(
+        eager=True
     )
-    probes = (
-        _probe_ranks(
-            raw_sample.select("vec_id", "qemb"), cents, top_m=nprobe, k=k
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("cent_id").alias("pcell"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    touched = probes.select("pcell").distinct()
-    cells = [r[0] for r in touched.limit(ANN_CELL_PUSHDOWN_MAX_IDS + 1).collect()]  # k-bounded collect
-    if len(cells) <= ANN_CELL_PUSHDOWN_MAX_IDS:
-        rindex = rindex.filter(F.col("cent_id").isin(cells))
-    else:
-        rindex = rindex.join(
-            F.broadcast(touched.withColumnRenamed("pcell", "cent_id")),
-            "cent_id",
-            "left_semi",
-        )
     return _residual_serve(
-        emb, cents, cb, rindex, raw_sample, probes, spec, rerank_pushdown=True
-    )
+        emb,
+        cents,
+        cb,
+        _cell_pruned(rindex, probes),
+        raw_sample,
+        probes,
+        (nprobe,),
+        spec,
+    )[nprobe]
 
 
 def _ensure_persisted_index(
@@ -5622,17 +5452,17 @@ def ann_auto_topk(
     n = corpus_rows(sf_dir, "embeddings")
     if tier == "budget":
         if n < PQ_WIDTH_THRESHOLD:
-            return _trained_probe_topk(
-                *_trained_index(spark, sf_dir), nprobe=2
-            )
-        return _ivfpq_residual_plan(spark, sf_dir, nprobe=4, spec=PQ8)
+            return _trained_probe_topk(*_trained_index(spark, sf_dir), (2,))[2]
+        return _ivfpq_residual_plan(spark, sf_dir, nprobes=(4,), spec=PQ8)[4]
     if tier == "balanced":
         np_ = balanced_nprobe(n)
         if n < PQ_WIDTH_THRESHOLD:
             return _trained_probe_topk(
-                *_trained_index(spark, sf_dir), nprobe=np_
-            )
-        return _ivfpq_residual_plan(spark, sf_dir, nprobe=np_, spec=PQ8)
+                *_trained_index(spark, sf_dir), (np_,)
+            )[np_]
+        return _ivfpq_residual_plan(
+            spark, sf_dir, nprobes=(np_,), spec=PQ8
+        )[np_]
     if tier == "high":
         if n < PQ_WIDTH_THRESHOLD:
             return sim_ann_brute_topk(spark, sf_dir)
@@ -5816,52 +5646,15 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB unrolled-CTE twin even on real-arithmetic ties."""
     emb = table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
+    # one anchor: the pool is a global top-k (TakeOrderedAndProject)
     cand = (
-        emb.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(qv))
-        .select(
-            F.col("vec_id").alias("doc"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("simq"),
-            "embedding",
-        )
-        .orderBy(F.desc("simq"), "doc")
+        _scored(emb.crossJoin(F.broadcast(qv)), "doc", keep=("embedding",))
+        .orderBy(F.desc("sim"), "doc")
         .limit(_MMR_POOL)
     )
-    pool = cand.localCheckpoint(eager=True)  # pool-sized; reused 2x below
-    a = pool.select(F.col("doc").alias("a"), F.col("embedding").alias("ea"))
-    b = pool.select(F.col("doc").alias("b"), F.col("embedding").alias("eb"))
-    pair = a.join(F.broadcast(b), F.col("a") != F.col("b")).select(
-        "a",
-        "b",
-        F.round(cosine_similarity(F.col("ea"), F.col("eb")), 4).alias("s"),
-    )
-    simq = {r["doc"]: r["simq"] for r in pool.select("doc", "simq").collect()}  # k-bounded collect
-    sims = {(r["a"], r["b"]): r["s"] for r in pair.collect()}  # k-bounded collect
-    _unpersist_checkpoint(pool)
-
-    lam, mu = _MMR_LAMBDA, _MMR_MU  # literal 0.3 — see _MMR_MU note
-    picked: list[tuple[int, int, float]] = []
-    selected: list[int] = []
-    for pos in range(1, _MMR_K + 1):
-        best = None
-        for doc in sorted(simq):
-            if doc in selected:
-                continue
-            mx = max((sims[(doc, s)] for s in selected), default=0.0)
-            score = lam * simq[doc] - mu * mx
-            if best is None or score > best[1]:
-                best = (doc, score)
-        if best is None:  # pool exhausted (degenerate/tiny corpus) —
-            break  # emit what exists, matching the oracle's empty CTEs
-        picked.append((pos, best[0], _round_half_up(best[1], 6)))
-        selected.append(best[0])
-    return spark.createDataFrame(
-        picked, "pos int, doc bigint, score double"
-    ).orderBy("pos")
+    return _mmr_greedy_over_pool(spark, cand).select("pos", "doc", "score")
 
 
 def _mmr_greedy_sql(
@@ -5979,36 +5772,43 @@ def sim_mmr_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchors = _sample_filter(emb).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    scored = (
-        emb.crossJoin(F.broadcast(anchors))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("simq"),
-            "embedding",
-        )
+    scored = _scored(
+        emb.crossJoin(F.broadcast(anchors)), "doc", keep=("embedding",)
     )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("simq"), "doc")
-    cand = (
-        scored.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= _MMR_POOL)
-        .drop("rn")
-    )
-    return _mmr_greedy_over_pool(spark, cand)
+    return _mmr_greedy_over_pool(spark, _mmr_pool(scored))
+
+
+def _mmr_pool(scored: DataFrame) -> DataFrame:
+    """Per-anchor top-_MMR_POOL cut of a `_scored` (query_id, doc,
+    embedding, sim) frame — the candidate pool the greedy consumes."""
+    return _top_n(scored, _MMR_POOL, "doc", ordered=False).drop("rn")
+
+
+def _mmr_ann_pool(index: DataFrame, probes: DataFrame) -> DataFrame:
+    """The ANN-candidate MMR pool from cell-keyed ``index`` rows
+    (vec_id, embedding, cent_id) and the anchors' ``probes``
+    (query_id, qe, pcell): one broadcast probe join, exact cosine,
+    per-anchor top-_MMR_POOL. Shared by the in-plan twin (``a2`` and
+    the memoized centroids) and the persisted twin (the cell-pruned
+    ``mindex`` scan and the handle's centroids), so the two pools are
+    one plan over different index rows."""
+    scored = _scored(
+        index.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell")),
+        "doc",
+        keep=("embedding",),
+    ).distinct()  # top-2 index x 2 probes: same pair via two cells
+    return _mmr_pool(scored)
 
 
 def _mmr_greedy_over_pool(spark: SparkSession, cand: DataFrame) -> DataFrame:
-    """The MMR tail shared by the brute and ANN-candidate multi-anchor
-    variants: ``cand`` carries (query_id, doc, simq, embedding) with at
-    most _MMR_POOL rows per anchor. Pairwise redundancy sims compute
-    DISTRIBUTED over the checkpointed pool; the greedy loop runs
-    driver-side over anchor-budget-bounded collects (anchors x 20 and
-    anchors x 380 rows — the Lloyd/BPE k-bounded pattern), with the
-    shortest-repr λ/μ doubles and half-up final round the oracles CAST
-    and ROUND to."""
+    """The MMR tail shared by every MMR query (the single-anchor one
+    passes its pool under one query_id): ``cand`` carries (query_id,
+    doc, embedding, sim) with at most _MMR_POOL rows per anchor.
+    Pairwise redundancy sims compute DISTRIBUTED over the checkpointed
+    pool; the greedy loop runs driver-side over anchor-budget-bounded
+    collects (anchors x 20 and anchors x 380 rows — the Lloyd/BPE
+    k-bounded pattern), with the shortest-repr λ/μ doubles and half-up
+    final round the oracles CAST and ROUND to."""
     pool = cand.localCheckpoint(eager=True)  # anchors x 20; reused 2x
     a = pool.select(
         F.col("query_id").alias("qa"),
@@ -6031,8 +5831,8 @@ def _mmr_greedy_over_pool(spark: SparkSession, cand: DataFrame) -> DataFrame:
     )
     # anchor-budget-bounded collects (anchors x 20 and anchors x 380)
     simq: dict[int, dict[int, float]] = {}
-    for r in pool.select("query_id", "doc", "simq").collect():  # k-bounded collect (anchors x 20)
-        simq.setdefault(r["query_id"], {})[r["doc"]] = r["simq"]
+    for r in pool.select("query_id", "doc", "sim").collect():  # k-bounded collect (anchors x 20)
+        simq.setdefault(r["query_id"], {})[r["doc"]] = r["sim"]
     sims: dict[tuple[int, int, int], float] = {
         (r["query_id"], r["a"], r["b"]): r["s"] for r in pair.collect()  # k-bounded collect (anchors x 380)
     }
@@ -6131,26 +5931,7 @@ def sim_mmr_ann_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("cent_id").alias("pcell"),
     )
-    scored = (
-        a2.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("simq"),
-            "embedding",
-        )
-        .distinct()  # top-2 index x 2 probes: same pair via two cells
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("simq"), "doc")
-    cand = (
-        scored.withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= _MMR_POOL)
-        .drop("prn")
-    )
-    return _mmr_greedy_over_pool(spark, cand)
+    return _mmr_greedy_over_pool(spark, _mmr_ann_pool(a2, probes))
 
 
 _MINDEX_SCHEMA = (
@@ -6159,17 +5940,21 @@ _MINDEX_SCHEMA = (
 )
 
 
-def _pruned_mindex_scan(
-    spark: SparkSession, index_dir: str, probes: DataFrame
-) -> DataFrame:
-    """The IVF-Flat component's candidate scan, partition-pruned to the
-    cells ``probes`` touched (``pcell`` column): IN-literal pushdown
-    below ANN_CELL_PUSHDOWN_MAX_IDS (PartitionFilters, plan-tested),
-    broadcast semi-join above it. One implementation + one schema
-    string for every exact-vector serving path (MMR, hard negatives) —
-    the round-16 review found the block hand-copied per query, which
-    is exactly how an mindex layout change would silently diverge the
-    persisted serves."""
+def _mindex(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The persisted IVF-Flat component (top-2 cell rows carrying the
+    float vectors and the label), read with its fixed schema."""
+    return spark.read.schema(_MINDEX_SCHEMA).parquet(f"{index_dir}/mindex")
+
+
+def _cell_pruned(index: DataFrame, probes: DataFrame) -> DataFrame:
+    """A cent_id-partitioned persisted index frame (``rindex``,
+    ``mindex``) pruned to the cells ``probes`` touched (``pcell``
+    column): the touched cell ids collect driver-side (≤ |queries|·
+    nprobe values), and below ANN_CELL_PUSHDOWN_MAX_IDS they inline as
+    an IN-literal the parquet source turns into PartitionFilters
+    (plan-tested); above it a broadcast semi-join takes over. The one
+    pruning rule of every persisted serve, so an index layout change
+    cannot diverge them."""
     touched = probes.select("pcell").distinct()
     cells = [
         r[0]
@@ -6177,10 +5962,9 @@ def _pruned_mindex_scan(
             ANN_CELL_PUSHDOWN_MAX_IDS + 1
         ).collect()  # k-bounded collect (<= |queries|*nprobe values)
     ]
-    mindex = spark.read.schema(_MINDEX_SCHEMA).parquet(f"{index_dir}/mindex")
     if len(cells) <= ANN_CELL_PUSHDOWN_MAX_IDS:
-        return mindex.filter(F.col("cent_id").isin(cells))
-    return mindex.join(
+        return index.filter(F.col("cent_id").isin(cells))
+    return index.join(
         F.broadcast(touched.withColumnRenamed("pcell", "cent_id")),
         "cent_id",
         "left_semi",
@@ -6233,27 +6017,8 @@ def sim_mmr_ann_multi_persisted(
         )
         .localCheckpoint(eager=True)  # assign once: cells + join reuse it
     )
-    mindex = _pruned_mindex_scan(spark, index_dir, probes)
-    scored = (
-        mindex.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("simq"),
-            "embedding",
-        )
-        .distinct()  # top-2 index x 2 probes: same pair via two cells
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("simq"), "doc")
-    cand = (
-        scored.withColumn("prn", F.row_number().over(wq))
-        .filter(F.col("prn") <= _MMR_POOL)
-        .drop("prn")
-    )
-    return _mmr_greedy_over_pool(spark, cand)
+    mindex = _cell_pruned(_mindex(spark, index_dir), probes)
+    return _mmr_greedy_over_pool(spark, _mmr_ann_pool(mindex, probes))
 
 
 @query(
@@ -6299,31 +6064,33 @@ def sim_hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("label").alias("qlabel"),
     )
-    sims = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") != F.col("qlabel"))
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("negative_id"),
-            "qlabel",
-            F.col("label").alias("neg_label"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
+    return _top_n(
+        _hard_negatives_scored(emb.crossJoin(F.broadcast(q))), 3, "negative_id"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("negative_id")
+
+
+def _hard_negatives_scored(cands: DataFrame) -> DataFrame:
+    """The miner's scoring step: `_scored` with the label
+    anti-predicate evaluated in the same filter as the self-drop, and
+    (query_id, negative_id, qlabel, neg_label, sim) out."""
+    return _scored(
+        cands,
+        "negative_id",
+        keep=("qlabel", F.col("label").alias("neg_label")),
+        where=F.col("label") != F.col("qlabel"),
     )
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "negative_id", "qlabel", "neg_label", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+
+
+def _hard_negatives_from_index(index: DataFrame, probes: DataFrame) -> DataFrame:
+    """Top-3 hard negatives from cell-keyed, labelled ``index`` rows
+    (vec_id, embedding, label, cent_id) and the anchors' ``probes``
+    (query_id, qe, qlabel, pcell) — the one serve of the in-plan twin
+    (the label-carrying assignment) and the persisted twin (the
+    cell-pruned ``mindex`` scan)."""
+    cands = _hard_negatives_scored(
+        index.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
+    ).distinct()  # top-2 index x multi-probe: same pair can match twice
+    return _top_n(cands, 3, "negative_id")
 
 
 @query(
@@ -6382,32 +6149,7 @@ def sim_hard_negatives_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("qlabel"),
         F.col("cent_id").alias("pcell"),
     )
-    cands = (
-        a2l.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") != F.col("qlabel"))
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("negative_id"),
-            "qlabel",
-            F.col("label").alias("neg_label"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
-        .distinct()  # top-2 index x multi-probe: same pair can match twice
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "negative_id"
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "negative_id", "qlabel", "neg_label", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    return _hard_negatives_from_index(a2l, probes)
 
 
 @query(
@@ -6466,30 +6208,5 @@ def sim_hard_negatives_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # assign once: cells + join reuse it
     )
-    mindex = _pruned_mindex_scan(spark, index_dir, probes)
-    cands = (
-        mindex.join(F.broadcast(probes), F.col("cent_id") == F.col("pcell"))
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") != F.col("qlabel"))
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("negative_id"),
-            "qlabel",
-            F.col("label").alias("neg_label"),
-            F.round(
-                cosine_similarity(F.col("embedding"), F.col("qe")), 4
-            ).alias("sim"),
-        )
-        .distinct()  # top-2 index x multi-probe: same pair can match twice
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), "negative_id"
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("query_id", "negative_id", "qlabel", "neg_label", "sim", "rn")
-        .orderBy("query_id", "rn")
-    )
+    mindex = _cell_pruned(_mindex(spark, index_dir), probes)
+    return _hard_negatives_from_index(mindex, probes)

@@ -98,7 +98,6 @@ def _merged_affected_state(
         .groupBy("alias", "entity_id")
         .agg(F.sum("count").alias("count"))
         .withColumn("pk", _merge_bucket(F.col("alias")))
-        .localCheckpoint()
     )
 
 
@@ -108,6 +107,28 @@ DEFAULT_LEASE_SECONDS = 300.0
 
 class ConcurrentWriterError(RuntimeError):
     """A second live writer attempted to own the keyed-merge target."""
+
+
+def _lease_path(target_dir: str) -> str:
+    """The driver-local lease file for ``target_dir``. The lease is
+    taken with driver-local file operations, so it can only exclude
+    writers that share the driver's filesystem: a bare path is used as
+    given, a ``file:`` URI maps to its local path, and any other scheme
+    raises ``ValueError`` (a lease under a literal ``./s3a:/…``
+    directory would exclude no one)."""
+    import os
+    from urllib.parse import urlparse
+
+    url = urlparse(target_dir)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        target_dir = url.path
+    elif url.scheme:
+        raise ValueError(
+            f"cannot lease {target_dir!r}: the writer lease is a "
+            "driver-local file and only excludes writers on a local or "
+            "file: root"
+        )
+    return os.path.join(target_dir, LEASE_FILE)
 
 
 def _acquire_or_renew_lease(
@@ -132,8 +153,8 @@ def _acquire_or_renew_lease(
     import os
     import time
 
-    os.makedirs(target_dir, exist_ok=True)
-    path = os.path.join(target_dir, LEASE_FILE)
+    path = _lease_path(target_dir)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     try:
         fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         os.write(fd, writer_id.encode())
@@ -250,7 +271,7 @@ def _release_lease(target_dir: str, writer_id: str) -> None:
     envelope as `_acquire_or_renew_lease` on rename-only storage)."""
     import os
 
-    path = os.path.join(target_dir, LEASE_FILE)
+    path = _lease_path(target_dir)
     try:
         with open(path) as f:
             if f.read().strip() != writer_id:
@@ -261,9 +282,7 @@ def _release_lease(target_dir: str, writer_id: str) -> None:
 
 
 def _assert_lease_held(target_dir: str, writer_id: str) -> None:
-    import os
-
-    path = os.path.join(target_dir, LEASE_FILE)
+    path = _lease_path(target_dir)
     try:
         with open(path) as f:
             holder = f.read().strip()

@@ -23,7 +23,7 @@ shared tests discipline):
   exactly-once under Structured Streaming's sequential-batch contract;
 * `compact_vector_index` folds deltas into the ``batch_id=-1`` base
   with the same crash-safe heal/two-rename discipline
-  (`dedup_ingest.compact_index_parts`), keeping ``cent_id`` directory
+  (`evolving_index.compact_index_parts`), keeping ``cent_id`` directory
   partitioning so probes stay partition-pruned.
 
 Semantics are CELL-RESTRICTED by definition (the SemDeDup trade): a
@@ -282,7 +282,7 @@ def compact_vector_index(spark: SparkSession, index_dir: str) -> None:
     """Fold base + per-batch deltas back into a single ``batch_id=-1``
     base, keeping the ``cent_id`` directory partitioning — same
     crash-safe heal/two-rename discipline as the LSH index
-    (`dedup_ingest.compact_index_parts`). Centroid RE-DERIVATION (for
+    (`evolving_index.compact_index_parts`). Centroid RE-DERIVATION (for
     drift after heavy ingest) belongs here too: rebuild with
     `persist_vector_index` over the folded vectors when cell-size
     skew exceeds tolerance — a full re-index, priced as one corpus
